@@ -6,11 +6,14 @@ Scale design notes:
 - ``sequence_pack`` needs a GLOBAL running token offset in doc order —
   the one pattern a naive window (``Window.orderBy(id)`` with no
   partitionBy) turns into a single-partition bottleneck. Implemented
-  as the classic distributed prefix sum instead: explicit range chunks
-  (quantile boundaries collected once, so both passes agree), a
-  per-chunk window cumsum running chunk-parallel, and a chunk-count-
-  sized offset table that travels as a literal map. Nothing ever
-  single-partitions; the only driver round-trip is O(n_chunks).
+  as the classic distributed prefix sum instead (``_chunk_offsets``,
+  shared with ``global_shuffle`` and ``vocab_ids``): one eager
+  ``localCheckpoint`` of the narrow key/weight projection, then two
+  build-time jobs over that copy — ``approxQuantile`` for the range-
+  chunk bounds (a full pass over the copy) and the per-chunk totals,
+  whose n_chunks rows come back as a literal offset map — and a
+  per-chunk window running chunk-parallel. Nothing ever
+  single-partitions, and the caller's upstream plan runs once.
 - ``stratified_sample`` is pure integer arithmetic on an md5-derived
   key — deterministic across runs/engines (no floats, no rand()), so
   a resampled pipeline stage reproduces byte-for-byte.
@@ -50,6 +53,36 @@ def _chunk_pid(id_col: str, bounds: list[float]) -> Column:
     return pid
 
 
+def _chunk_offsets(
+    narrow: DataFrame, key: str, weight: Column, n_chunks: int
+) -> tuple[DataFrame, Column, Column]:
+    """Build-time half of the distributed prefix sum shared by
+    ``sequence_pack``, ``global_shuffle`` and ``vocab_ids``.
+
+    ``narrow`` (the key plus whatever the caller's window needs) is
+    materialized ONCE with an eager ``localCheckpoint``; the quantile
+    chunk bounds on ``key`` and the per-chunk ``sum(weight)`` totals
+    are both computed from that copy, so the caller's upstream plan
+    runs once for the two build-time jobs instead of once per job.
+    The totals travel back as an n_chunks-row literal map.
+
+    Returns (materialized ``narrow``, chunk-id column, per-chunk offset
+    column = sum of ``weight`` over all earlier chunks). Trade-off of
+    ``localCheckpoint``: its blocks live in executor storage (memory,
+    spilling to disk), not in reliable storage, so a plan reading the
+    checkpoint fails rather than recomputes if an executor holding one
+    of its blocks is lost (dynamic allocation included)."""
+    narrow = narrow.localCheckpoint(eager=True)
+    probs = [i / n_chunks for i in range(1, n_chunks)]
+    pid = _chunk_pid(key, sorted(set(narrow.approxQuantile(key, probs, 0.001))))
+    totals = dict(narrow.groupBy(pid.alias("__pid")).agg(F.sum(weight)).collect())
+    offsets, acc = [], 0
+    for p in sorted(totals):
+        offsets += [F.lit(p), F.lit(acc)]
+        acc += totals[p]
+    return narrow, pid, F.element_at(F.create_map(*offsets), pid).cast("bigint")
+
+
 def sequence_pack(
     docs: DataFrame,
     budget: int = 2048,
@@ -65,12 +98,19 @@ def sequence_pack(
     standard concat-and-chunk pretraining layout, deterministic given
     the corpus.
 
-    Distributed prefix sum: quantile chunk boundaries (collected ONCE,
-    reused by both passes), per-chunk window cumsum, then per-chunk
-    offsets — n_chunks rows — collected and re-broadcast as a literal
-    map. The naive alternative, a global ``Window.orderBy(id)``, plans
-    an Exchange SinglePartition and funnels the whole corpus through
-    one task; this never does (asserted in tests/test_plans.py).
+    Distributed prefix sum (``_chunk_offsets``): the (id, n_tokens)
+    projection, 16 B per doc, is materialized once with an eager
+    ``localCheckpoint`` at call time; the quantile chunk bounds and the
+    per-chunk token totals are computed from that copy, and the
+    returned plan is a per-chunk window cumsum over the same copy plus
+    an n_chunks-entry literal offset map. So ``docs``' upstream chain
+    (quality filter, dedup, ...) runs once, not once per build job and
+    again under the caller's write. The price: the checkpoint's blocks
+    live only in executor storage, so losing an executor that holds one
+    fails the returned plan instead of recomputing it. The naive
+    alternative, a global ``Window.orderBy(id)``, plans an Exchange
+    SinglePartition and funnels the whole corpus through one task;
+    this never does (asserted in tests/test_plans.py).
 
     Deliberately NOT fanned out (r10 negative result, cross-tree ABAB
     +60%: fanning the scan by the chunk id — the window's own key, the
@@ -81,43 +121,19 @@ def sequence_pack(
     than the lost coalescing at sf0.1, and at scale the input arrives
     wide so there is nothing to win).
     """
-    sized = docs.select(F.col(id_col), _bpe_count(text_col).alias("n_tokens"))
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    bounds = sorted(set(sized.approxQuantile(id_col, probs, 0.001)))
-    chunked = sized.withColumn("__pid", _chunk_pid(id_col, bounds))
+    sized, pid, offset = _chunk_offsets(
+        docs.select(F.col(id_col), _bpe_count(text_col).alias("n_tokens")),
+        id_col,
+        F.col("n_tokens"),
+        n_chunks,
+    )
     w = (
-        Window.partitionBy("__pid")
+        Window.partitionBy(pid)
         .orderBy(id_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = chunked.withColumn("__cum", F.sum("n_tokens").over(w))
-    # Per-chunk totals via a plain groupBy SUM — identical to the max
-    # of the running cumsum (same non-null addends), but the collect
-    # job skips the window sort entirely: it aggregates n_chunks rows
-    # map-side instead of sorting every chunk to its cumulative max
-    # (guide §1.2: don't compute things the pass throws away).
-    totals = {
-        r["__pid"]: r["t"]
-        for r in chunked.groupBy("__pid").agg(F.sum("n_tokens").alias("t")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += totals[pid]
-    offset_map = F.create_map(
-        *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-    )
-    start = (
-        F.element_at(offset_map, F.col("__pid")).cast("bigint")
-        + F.col("__cum")
-        - F.col("n_tokens")
-    )
-    return local.select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        start.alias("__start"),
-    ).select(
+    start = offset + F.sum("n_tokens").over(w) - F.col("n_tokens")
+    return sized.select(id_col, "n_tokens", start.alias("__start")).select(
         id_col,
         "n_tokens",
         F.expr(f"__start div {budget}").alias("pack_id"),
@@ -363,10 +379,14 @@ def global_shuffle(
     reproducible across retries, so rand() is out).
 
     Order key is the md5 rank key; positions come from the same
-    distributed prefix-sum shape as ``sequence_pack``: quantile chunk
-    bounds on the rank key, per-chunk window row_number, chunk offsets
-    collected (n_chunks rows) and re-broadcast as a literal map.  The
-    naive ``row_number() OVER (ORDER BY key)`` plans an Exchange
+    distributed prefix sum as ``sequence_pack`` (``_chunk_offsets``):
+    only the (id, rank key) projection, 16 B per doc, is materialized
+    with an eager ``localCheckpoint`` for the quantile chunk bounds and
+    the per-chunk counts (n_chunks rows, re-broadcast as a literal
+    map). The returned plan keeps every input column, so it re-reads
+    ``docs`` for the per-chunk window row_number instead of the copy:
+    two input scans in all, and nothing after the call depends on the
+    checkpoint's executor-local blocks.  The naive ``row_number() OVER (ORDER BY key)`` plans an Exchange
     SinglePartition — the whole corpus through one task; this never
     does.  Ties on the 48-bit key break by id, so the permutation is
     total and exact.
@@ -376,29 +396,10 @@ def global_shuffle(
     ``sortWithinPartitions(pos)`` on the result.
     """
     keyed = docs.withColumn("__rk", _rank_key(id_col, seed))
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    bounds = sorted(set(keyed.approxQuantile("__rk", probs, 0.001)))
-    chunked = keyed.withColumn("__pid", _chunk_pid("__rk", bounds))
-    w = Window.partitionBy("__pid").orderBy("__rk", id_col)
-    local = chunked.withColumn("__rn", F.row_number().over(w))
-    counts = {
-        r["__pid"]: r["c"]
-        for r in local.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_map = F.create_map(
-        *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-    )
-    pos = (
-        F.element_at(offset_map, F.col("__pid")).cast("bigint")
-        + F.col("__rn")
-        - 1
-    )
-    return local.select(*docs.columns, pos.alias("pos"))
+    _, pid, offset = _chunk_offsets(keyed.select(id_col, "__rk"), "__rk", F.lit(1), n_chunks)
+    w = Window.partitionBy(pid).orderBy("__rk", id_col)
+    pos = offset + F.row_number().over(w) - 1
+    return keyed.select(*docs.columns, pos.alias("pos"))
 
 
 def weighted_sample(
@@ -565,45 +566,35 @@ def vocab_ids(
 
     The naive ``row_number() OVER (ORDER BY cnt DESC)`` plans an
     Exchange SinglePartition — the entire vocabulary through one task.
-    This uses the same distributed prefix-sum shape as
-    ``global_shuffle``: approx-quantile chunk bounds on the count
-    (all ties of one count land in ONE chunk, so the lexicographic
-    tie-break never straddles a boundary), per-chunk window
-    row_number, chunk offsets collected (n_chunks rows, the only
-    driver traffic) and re-broadcast as a literal map. Exact, total,
-    and no task ever holds more than ~1/n_chunks of the vocabulary.
+    This uses the same distributed prefix sum as ``global_shuffle``
+    (``_chunk_offsets``): the aggregated (token, cnt) table, one row
+    per distinct token, is materialized once with an eager
+    ``localCheckpoint``, so the corpus explode+groupBy runs once.
+    Approx-quantile chunk bounds on the count (all ties of one count
+    land in ONE chunk, so the lexicographic tie-break never straddles
+    a boundary) and per-chunk sizes come from that copy; the returned
+    plan is a per-chunk window row_number over it plus an n_chunks-
+    entry literal offset map. Exact, total, and no task ever holds
+    more than ~1/n_chunks of the vocabulary. The checkpoint's blocks
+    live only in executor storage: losing an executor that holds one
+    fails the returned plan instead of recomputing it.
 
     Output: (token, cnt, token_id) for tokens with cnt >= min_count.
     """
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    counts = (
+    counts, pid, offset = _chunk_offsets(
         docs.select(F.explode(toks).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") >= min_count)
-        .withColumn("__key", -F.col("cnt").cast("double"))
+        .withColumn("__key", -F.col("cnt").cast("double")),
+        "__key",
+        F.lit(1),
+        n_chunks,
     )
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    bounds = sorted(set(counts.approxQuantile("__key", probs, 0.001)))
-    chunked = counts.withColumn("__pid", _chunk_pid("__key", bounds))
-    w = Window.partitionBy("__pid").orderBy("__key", "token")
-    local = chunked.withColumn("__rn", F.row_number().over(w))
-    sizes = {
-        r["__pid"]: r["c"]
-        for r in local.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-    offset_map = F.create_map(
-        *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-    )
-    token_id = (
-        F.element_at(offset_map, F.col("__pid")).cast("bigint") + F.col("__rn") - 1
-    )
-    return local.select(
+    w = Window.partitionBy(pid).orderBy("__key", "token")
+    token_id = offset + F.row_number().over(w) - 1
+    return counts.select(
         "token", F.col("cnt").cast("bigint").alias("cnt"), token_id.alias("token_id")
     )
 

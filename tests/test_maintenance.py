@@ -1,8 +1,8 @@
-import pytest
-
 """Maintenance-job tests: W1-W4 dedup direction, J4 orphan removal,
 same-run cascade fidelity (remove_duplicates.py:127-138, 217-250), and
 fixpoint convergence/idempotence."""
+
+import pytest
 
 from fixtures_faexport import dirty_tables
 

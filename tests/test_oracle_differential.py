@@ -37,7 +37,11 @@ def _check_one(spark, sf_small, name):
         assert_oracle_match(df, oracle, sf_small, name=name)
 
 
-@pytest.mark.parametrize("name", [n for n in _CORE if n in QUERIES])
+# a renamed headline key must fail here, not drop out of the gate
+assert set(_CORE) <= set(QUERIES), sorted(set(_CORE) - set(QUERIES))
+
+
+@pytest.mark.parametrize("name", _CORE)
 def test_query_core(spark, sf_small, name):
     _check_one(spark, sf_small, name)
 

@@ -156,13 +156,18 @@ def test_m7_registered_query_is_one_exchange_no_joins(spark, sf_small):
 def test_sequence_pack_never_single_partitions(spark, sf_small):
     """The global-offset computation must be a distributed prefix sum:
     a naive ``Window.orderBy(doc_id)`` plans Exchange SinglePartition
-    and funnels the corpus through one task — forbidden here."""
+    and funnels the corpus through one task — forbidden here. The
+    input runs once: the returned plan reads only the materialized
+    (id, n_tokens) copy, never the caller's source again."""
     from faexport_db_spark.plans.audit import _physical_plan
     from faexport_db_spark.training.pipeline import sequence_pack
 
     docs = load_table(spark, sf_small, "documents")
     df = sequence_pack(docs, budget=2048)
-    assert "SinglePartition" not in _physical_plan(df)
+    plan = _physical_plan(df)
+    assert "SinglePartition" not in plan
+    assert plan.count("Scan parquet") == 0, plan
+    assert plan.count("Scan ExistingRDD") == 1, plan
     assert_plan(df, max_python_evals=0)
 
 
@@ -402,7 +407,11 @@ def test_global_shuffle_never_single_partitions(spark, sf_small):
 
     docs = load_table(spark, sf_small, "documents").select("doc_id")
     df = global_shuffle(docs, seed=7)
-    assert "SinglePartition" not in _physical_plan(df)
+    plan = _physical_plan(df)
+    assert "SinglePartition" not in plan
+    # the returned plan keeps every input column, so it scans the
+    # source once; the build-time jobs read their own narrow copy
+    assert plan.count("Scan parquet") == 1, plan
     assert_plan(df, max_python_evals=0)
 
 
@@ -659,11 +668,16 @@ def test_corpus_overlap_exchange_ceiling_no_cartesian(spark, sf_small):
 def test_vocab_ids_never_single_partitions(spark, sf_small):
     """The frequency rank must NOT plan the naive global window's
     Exchange SinglePartition — the entire vocabulary through one
-    task is the 100x failure the chunked prefix sum exists to avoid."""
-    from faexport_db_spark.plans.audit import formatted_plan
+    task is the 100x failure the chunked prefix sum exists to avoid.
+    The corpus explode+groupBy runs once: the returned plan reads only
+    the materialized (token, cnt) table, never the documents again."""
+    from faexport_db_spark.plans.audit import _physical_plan, formatted_plan
 
     q = QUERIES["t_vocab_ids"](spark, sf_small)
     assert "Exchange SinglePartition" not in formatted_plan(q)
+    plan = _physical_plan(q)
+    assert plan.count("Scan parquet") == 0, plan
+    assert plan.count("Scan ExistingRDD") == 1, plan
     assert_plan(q, max_python_evals=0)
 
 

@@ -1,5 +1,3 @@
-import pytest
-
 """zorder_write layout effect (operators/zorder.py): files written
 along the z-curve must have tighter per-file (user_id, value) bounding
 boxes — the parquet footer min/max stats that drive file/row-group
@@ -9,6 +7,7 @@ data-skipping win, measured from the footers, not inferred."""
 import glob
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from faexport_db_spark.datamodel.testdata import load_table
