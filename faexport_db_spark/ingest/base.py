@@ -11,7 +11,7 @@ minted surrogate ids — no id round-trips, one pass per table.
 
 Surrogate ids are non-semantic (SURVEY §1.2: dedup tie-breaks aside,
 nothing reads them as meaning); we mint them DENSE (0..n-1) with
-``with_dense_ids`` on persisted frames so parent/child ids stay
+``with_dense_ids`` on checkpointed frames so parent/child ids stay
 consistent across the multiple explode passes AND callers can pack
 batches of ids into fixed strides (streaming/ingest_stream.py) without
 the sparse-id overflow monotonically_increasing_id would cause.
@@ -115,9 +115,12 @@ def unordered_keywords(arr: F.Column) -> F.Column:
 def explode_to_store(nested: DataFrame) -> dict[str, DataFrame]:
     """Nested snapshots → relational store tables (parent + 3 children)
     with consistent minted DENSE ids (0..n-1 per table, see
-    ``with_dense_ids``). Map-only except the persist barrier and the
-    per-partition count jobs."""
-    with_ids = with_dense_ids(nested, "submission_snapshot_id").persist()
+    ``with_dense_ids``). Map-only except the checkpoint barriers and the
+    per-partition count jobs. Nothing is cached: ``with_dense_ids`` pins
+    each frame it numbers with an eager checkpoint, so every re-read of
+    ``with_ids`` or the flattened files sees the same ids, and a
+    foreachBatch caller leaks no CacheManager entries."""
+    with_ids = with_dense_ids(nested, "submission_snapshot_id")
 
     snapshots = with_ids.select(
         "submission_snapshot_id",
@@ -148,7 +151,7 @@ def explode_to_store(nested: DataFrame) -> dict[str, DataFrame]:
     files_flat = with_dense_ids(
         with_ids.select("submission_snapshot_id", F.explode("files").alias("f")),
         "file_id",
-    ).persist()
+    )
     files = files_flat.select(
         "file_id",
         "submission_snapshot_id",

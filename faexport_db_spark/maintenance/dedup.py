@@ -3,20 +3,24 @@ W1-W4, §2.3 J4, §2.1 K4).
 
 The reference's cron job (scripts/cron/remove_duplicates.py:310-328)
 streams ids into Python lists and issues chunked DELETEs; here each
-step is a window/anti-join and the "delete" is a rewrite: the kept
+step is a window/semi-join and the "delete" is a rewrite: the kept
 DataFrame replaces the table (K4 — delete-as-anti-join, SURVEY §2.1).
 
 The reference CASCADES within a single run: ``delete_files`` also
 deletes the removed files' hashes (remove_duplicates.py:127-138) and
 ``delete_submissions`` deletes the removed snapshots' files, keywords
-and those files' hashes (:217-250). ``cleanup`` mirrors that — each
-dedup step is followed by orphan removal against the kept parents, so
-one pass leaves no orphans, exactly like one cron run of the
-reference. ``cleanup_to_fixpoint`` remains as the audit form.
+and those files' hashes (:217-250). ``cleanup`` reaches the same state
+in dependency order instead — parents before children, each table
+deduplicated once and filtered once against its parent's FINAL kept
+set — so one pass leaves no orphans and is a fixpoint by construction.
+``cleanup_to_fixpoint`` runs a second pass as the audit.
 
-Scale notes: every window partitions on a high-cardinality composite
-key; every anti-join joins child fact to parent fact on the surrogate
-id — co-partitionable, handled by AQE. Nothing collects to the driver.
+Every kept table is materialized once (``localCheckpoint(eager=True)``)
+before its children read it, so no window is re-derived downstream and
+appending the returned tables is a pure write. Scale notes: every
+window partitions on a high-cardinality composite key; every semi-join
+joins child fact to parent fact on the surrogate id — co-partitionable,
+handled by AQE. Nothing collects to the driver.
 """
 
 from __future__ import annotations
@@ -52,11 +56,11 @@ def remove_orphans(
 
     Reference: remove_duplicates.py:89-96 (hashes), :143-150 (files),
     :199-206 (keywords) — LEFT JOIN … WHERE parent.id IS NULL, then
-    chunked DELETE. Spark form: one left_anti to find nothing — we
-    directly keep the semi-joined survivors.
+    chunked DELETE. Spark form: keep the left-semi survivors directly.
+    A semi-join already has set semantics on the parent side, so the
+    parent keys need no ``distinct()`` aggregate.
     """
-    parent_keys = parent.select(F.col(pk).alias(fk)).distinct()
-    return child.join(parent_keys, fk, "left_semi")
+    return child.join(parent.select(F.col(pk).alias(fk)), fk, "left_semi")
 
 
 SUBMISSION_DEDUP_KEYS = [
@@ -74,87 +78,65 @@ USER_DEDUP_KEYS = [
 
 
 def cleanup(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """One pass of the reference's cleanup sequence
-    (remove_duplicates.py:316-322), as pure DataFrame rewrites.
+    """One pass of the reference's cleanup (remove_duplicates.py:316-322),
+    in dependency order, as eager DataFrame rewrites::
+
+        snaps'    = dedup(snaps)
+        files'    = dedup(semi(files, snaps'))
+        hashes'   = dedup(semi(hashes, files'))
+        keywords' = dedup(semi(keywords, snaps'))
+
+    (``user_snapshots`` has no parent: ``dedup`` only.) This equals the
+    reference's cascade order — hashes, files, keywords, then snapshots,
+    each dedup followed by orphan deletes against the kept parents —
+    because every child dedup key contains the child's foreign key: a
+    semi-join on that key keeps or drops whole dedup groups, so it
+    commutes with the ``row_number`` dedup, and semi-joins against a
+    shrinking parent compose into one semi-join against the final
+    parent. One pass is therefore a fixpoint.
+
+    Eager: each kept table is deduplicated, filtered and materialized
+    ONCE with ``localCheckpoint(eager=True)`` — one job per table,
+    parents before children, so a child reads its parent's pinned copy
+    and the returned plans read only the pins. Trade-off: the pinned
+    blocks live in executor storage; a lost executor fails the returned
+    plan instead of recomputing it.
 
     Input/output dict keys: user_snapshots, submission_snapshots,
     submission_snapshot_keywords, submission_snapshot_files,
-    submission_snapshot_file_hashes (missing tables are skipped).
+    submission_snapshot_file_hashes. A missing table is skipped, and a
+    child whose parent table is missing is passed through unchanged,
+    as in the reference cascade; other keys pass through.
     """
     out = dict(tables)
 
-    if "user_snapshots" in out:
-        out["user_snapshots"] = dedup_keep_one(
-            out["user_snapshots"], USER_DEDUP_KEYS, "user_snapshot_id", keep="lowest"
-        )
+    def keep(name, keys, id_col, order, parent=None, fk=None):
+        df = out.get(name)
+        if df is None or (parent is not None and parent not in out):
+            return
+        if parent is not None:
+            df = remove_orphans(df, out[parent], fk, fk)
+        out[name] = dedup_keep_one(df, keys, id_col, order).localCheckpoint(eager=True)
 
-    files = out.get("submission_snapshot_files")
-    hashes = out.get("submission_snapshot_file_hashes")
-    snaps = out.get("submission_snapshots")
-
-    if hashes is not None and files is not None:
-        hashes = remove_orphans(hashes, files, "file_id", "file_id")
-        hashes = dedup_keep_one(hashes, ["file_id", "algo_id"], "hash_id", keep="highest")
-
-    if files is not None and snaps is not None:
-        files = remove_orphans(
-            files, snaps, "submission_snapshot_id", "submission_snapshot_id"
-        )
-        files = dedup_keep_one(
-            files,
-            ["submission_snapshot_id", "site_file_id"],
-            "file_id",
-            keep="highest",
-        )
-        if hashes is not None:
-            # Cascade of the file dedup: the reference deletes the losing
-            # files' hashes in the same run (remove_duplicates.py:127-138).
-            hashes = remove_orphans(hashes, files, "file_id", "file_id")
-
-    keywords = out.get("submission_snapshot_keywords")
-    if keywords is not None and snaps is not None:
-        keywords = remove_orphans(
-            keywords, snaps, "submission_snapshot_id", "submission_snapshot_id"
-        )
-        # The reference never needs a keyword dedup: duplicate snapshots
-        # always carry fresh serial ids there, so the snapshot-dedup
-        # cascade removes the losing snapshot's keywords. Our streaming
-        # redelivery mints the SAME ids deterministically, leaving
-        # full-row keyword duplicates the cascade can't see — collapse
-        # them (a no-op on reference-shaped data).
-        keywords = dedup_keep_one(
-            keywords,
-            ["submission_snapshot_id", "keyword", "ordinal"],
-            "keyword_id",
-            keep="lowest",
-        )
-
-    if snaps is not None:
-        snaps = dedup_keep_one(
-            snaps, SUBMISSION_DEDUP_KEYS, "submission_snapshot_id", keep="lowest"
-        )
-        # Cascade of the snapshot dedup: the reference deletes the losing
-        # snapshots' files, keywords, and those files' hashes in the same
-        # run (remove_duplicates.py:217-250).
-        if files is not None:
-            files = remove_orphans(
-                files, snaps, "submission_snapshot_id", "submission_snapshot_id"
-            )
-            if hashes is not None:
-                hashes = remove_orphans(hashes, files, "file_id", "file_id")
-        if keywords is not None:
-            keywords = remove_orphans(
-                keywords, snaps, "submission_snapshot_id", "submission_snapshot_id"
-            )
-
-    for name, df in (
-        ("submission_snapshots", snaps),
-        ("submission_snapshot_files", files),
-        ("submission_snapshot_keywords", keywords),
-        ("submission_snapshot_file_hashes", hashes),
-    ):
-        if df is not None:
-            out[name] = df
+    snaps, snap_id = "submission_snapshots", "submission_snapshot_id"
+    files = "submission_snapshot_files"
+    keep("user_snapshots", USER_DEDUP_KEYS, "user_snapshot_id", "lowest")
+    keep(snaps, SUBMISSION_DEDUP_KEYS, snap_id, "lowest")
+    keep(files, [snap_id, "site_file_id"], "file_id", "highest", snaps, snap_id)
+    keep(
+        "submission_snapshot_file_hashes", ["file_id", "algo_id"], "hash_id", "highest",
+        files, "file_id",
+    )
+    # The reference never needs a keyword dedup: duplicate snapshots
+    # always carry fresh serial ids there, so the snapshot-dedup cascade
+    # removes the losing snapshot's keywords. Our streaming redelivery
+    # mints the SAME ids deterministically, leaving full-row keyword
+    # duplicates the cascade can't see — collapse them (a no-op on
+    # reference-shaped data).
+    keep(
+        "submission_snapshot_keywords", [snap_id, "keyword", "ordinal"], "keyword_id", "lowest",
+        snaps, snap_id,
+    )
     return out
 
 
@@ -163,8 +145,12 @@ def cleanup_to_fixpoint(
 ) -> dict[str, DataFrame]:
     """Run ``cleanup`` until row counts stop changing (the reference
     reaches the same state by being run repeatedly from cron). Counts
-    are the only actions; bounded by ``max_rounds`` (the dependency
-    chain snapshot→file→hash is 3 deep, so 3 always suffices)."""
+    are the only extra actions; bounded by ``max_rounds``.
+
+    ``cleanup`` is a fixpoint in one pass, so round 2 is the audit: it
+    re-cleans round 1's pins, its counts read the new pins, and equal
+    counts end the loop. The returned tables are the last round's pins,
+    so writing them re-runs no dedup plan."""
     counts = {name: df.count() for name, df in tables.items()}
     for _ in range(max_rounds):
         tables = cleanup(tables)

@@ -257,6 +257,30 @@ def test_explode_to_store_roundtrip(spark, e621_csv):
     assert store["submission_snapshots"].filter("keywords_recorded").count() == 3
 
 
+def test_explode_to_store_leaves_no_cache_entries(spark, e621_csv, tmp_path):
+    """explode_to_store runs once per streaming micro-batch
+    (streaming/ingest_stream.py), and CacheManager entries are never
+    released on their own, so it must cache nothing. Its ids are pinned
+    by with_dense_ids' checkpoints instead: separate writes of the
+    parent and child tables still agree on them."""
+    spark.catalog.clearCache()
+    nested = e621.to_snapshots(e621.read_csv(spark, e621_csv), 1, "2022-07-13 00:00:00")
+    for name, df in explode_to_store(nested).items():
+        df.write.parquet(str(tmp_path / name))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def ids(name, col):
+        return {r[col] for r in spark.read.parquet(str(tmp_path / name)).select(col).collect()}
+
+    snap_ids = ids("submission_snapshots", "submission_snapshot_id")
+    assert len(snap_ids) == 3
+    assert ids("submission_snapshot_keywords", "submission_snapshot_id") <= snap_ids
+    assert ids("submission_snapshot_files", "submission_snapshot_id") <= snap_ids
+    assert ids("submission_snapshot_file_hashes", "file_id") <= ids(
+        "submission_snapshot_files", "file_id"
+    )
+
+
 @pytest.mark.slow
 def test_with_dense_ids_dense_at_high_partition_counts(spark):
     """Ids stay bounded by the row count no matter the partition count —

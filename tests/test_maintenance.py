@@ -1,10 +1,24 @@
 """Maintenance-job tests: W1-W4 dedup direction, J4 orphan removal,
-same-run cascade fidelity (remove_duplicates.py:127-138, 217-250), and
-fixpoint convergence/idempotence."""
+same-run cascade fidelity (remove_duplicates.py:127-138, 217-250),
+equality with the reference-order golden, and fixpoint
+convergence/idempotence."""
+
+import random
+from collections import Counter
 
 import pytest
+from pyspark.sql import types as T
 
-from fixtures_faexport import dirty_tables
+from fixtures_faexport import T1, T2, TI, dirty_tables
+from golden_maintenance import cascade_cleanup
+
+from faexport_db_spark.datamodel.schemas import (
+    FILE_HASHES,
+    FILES,
+    KEYWORDS,
+    SUBMISSION_SNAPSHOTS,
+    USER_SNAPSHOTS,
+)
 
 from faexport_db_spark.maintenance import cleanup
 from faexport_db_spark.maintenance.dedup import cleanup_to_fixpoint
@@ -41,6 +55,77 @@ def test_single_pass_is_fixpoint(spark):
     again = cleanup(once)
     for name, df in again.items():
         assert df.count() == once[name].count(), name
+
+
+def _nullable(schema):
+    return T.StructType([T.StructField(f.name, f.dataType, True) for f in schema.fields])
+
+
+def _random_tables(spark, seed):
+    """Small dirty store: key collisions across distinct ids, redelivered
+    rows that reuse their ids (full-row copies, as a re-run streaming
+    batch mints them), null dedup keys, null and dangling foreign keys."""
+    rng = random.Random(seed)
+    pick = rng.choice
+
+    def with_redeliveries(rows):
+        return rows + [pick(rows) for _ in range(len(rows) // 4)]
+
+    snaps = with_redeliveries([
+        (i, pick(["fa", None]), pick(["1", "2", None]), pick([T1, T2, None]),
+         pick([1, None]), TI, None, False, f"t{i}", None, None, None, True)
+        for i in rng.sample(range(200), 60)
+    ])
+    snap_ids = sorted({r[0] for r in snaps}) + [999, None]
+    users = with_redeliveries([
+        (i, pick(["fa", None]), pick(["u1", "u2", None]), pick([T1, T2, None]),
+         pick([1, None]), TI, False, f"n{i}", None)
+        for i in rng.sample(range(100), 20)
+    ])
+    files = with_redeliveries([
+        (i, pick(snap_ids), pick(["main", "alt", None]), f"u{i}", i, None)
+        for i in rng.sample(range(1000, 1200), 80)
+    ])
+    file_ids = sorted({r[0] for r in files}) + [9999, None]
+    hashes = with_redeliveries([
+        (i, pick(file_ids), pick([1, 2, None]), bytes([rng.randrange(256)]))
+        for i in rng.sample(range(5000, 5400), 100)
+    ])
+    keywords = with_redeliveries([
+        (i, pick(snap_ids), pick(["a", "b", None]), pick([0, 1, None]))
+        for i in rng.sample(range(200, 400), 80)
+    ])
+    return {
+        name: spark.createDataFrame(rows, _nullable(schema))
+        for name, rows, schema in (
+            ("user_snapshots", users, USER_SNAPSHOTS),
+            ("submission_snapshots", snaps, SUBMISSION_SNAPSHOTS),
+            ("submission_snapshot_keywords", keywords, KEYWORDS),
+            ("submission_snapshot_files", files, FILES),
+            ("submission_snapshot_file_hashes", hashes, FILE_HASHES),
+        )
+    }
+
+
+def _rows(df):
+    return Counter(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_cleanup_matches_reference_cascade(spark, seed):
+    """Dependency-order ``cleanup`` == the reference's cascade order on
+    all five tables, and a second pass changes nothing (idempotence)."""
+    tables = _random_tables(spark, seed)
+    want = {name: _rows(df) for name, df in cascade_cleanup(tables).items()}
+    once = cleanup(tables)
+    assert set(once) == set(want)
+    for name, df in once.items():
+        assert _rows(df) == want[name], name
+    for name, df in cleanup(once).items():
+        assert _rows(df) == want[name], f"{name}: second pass changed rows"
+    # every table lost rows, so the generated data is dirty throughout
+    raw = {name: df.count() for name, df in tables.items()}
+    assert all(sum(want[name].values()) < raw[name] for name in raw), raw
 
 
 @pytest.mark.slow

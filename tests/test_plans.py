@@ -171,6 +171,38 @@ def test_sequence_pack_never_single_partitions(spark, sf_small):
     assert_plan(df, max_python_evals=0)
 
 
+def test_remove_orphans_parent_side_has_no_aggregate(spark):
+    """A left-semi join already has set semantics: the parent keys go
+    straight into the join, no distinct() HashAggregate in front."""
+    from faexport_db_spark.maintenance import remove_orphans
+    from faexport_db_spark.plans.audit import _physical_plan
+
+    child = spark.range(20).withColumnRenamed("id", "fk")
+    parent = spark.range(10).withColumnRenamed("id", "pk")
+    plan = _physical_plan(remove_orphans(child, parent, "fk", "pk"))
+    assert "LeftSemi" in plan, plan
+    assert "HashAggregate" not in plan, plan
+
+
+def test_cleanup_returns_pinned_tables(spark, tmp_path):
+    """Every table ``cleanup_to_fixpoint`` returns reads only its own
+    materialized copy: no dedup window, no shuffle and no source scan
+    left in the plan, so appending it to the store is a pure write."""
+    from faexport_db_spark.maintenance.dedup import cleanup_to_fixpoint
+    from faexport_db_spark.plans.audit import _physical_plan
+    from tests.fixtures_faexport import dirty_tables
+
+    tables = {}
+    for name, df in dirty_tables(spark).items():
+        df.write.parquet(str(tmp_path / name))
+        tables[name] = spark.read.parquet(str(tmp_path / name))
+    for name, df in cleanup_to_fixpoint(tables).items():
+        plan = _physical_plan(df)
+        assert plan.count("Scan ExistingRDD") == 1, (name, plan)
+        for node in ("Window", "Exchange", "Scan parquet", "LocalTableScan"):
+            assert node not in plan, (name, node, plan)
+
+
 def test_stratified_sample_is_pure_map(spark, sf_small):
     """Sampling is a filter over per-row arithmetic — zero shuffles,
     predicate-free scan aside, nothing but a narrow projection."""
