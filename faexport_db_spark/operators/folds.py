@@ -1,5 +1,5 @@
-"""Arrow-batched Python folds for the two merge ops Spark expressions
-can't represent (SURVEY.md §7.3):
+"""The two merge folds Spark aggregates cannot state directly, as
+Catalyst expressions (SURVEY.md §7.3):
 
 - M5 ``extra_data`` layering: ordered shallow-dict fold, newest key
   wins (reference: faexport_db/db.py:10-17 ``merge_dicts``;
@@ -8,86 +8,22 @@ can't represent (SURVEY.md §7.3):
   (url/size/same-algo-hash conflict) REPLACES the accumulated file,
   dropping previously-unioned hashes (reference: models/file.py:50-72,
   models/submission.py:89-104). Not expressible as a plain aggregate
-  because the reset discards accumulated state.
+  because the reset discards accumulated state, but ``F.aggregate`` is
+  a sequential left fold, so a reset is just a fold step.
 
-Both are the slow path by design and touch only entity-local data:
-the extra-data fold is a scalar pandas UDF applied *after* the entity
-groupBy (no extra shuffle); the file fold is an ``applyInPandas`` over
-the same entity key (co-partitioned with the main merge shuffle).
+One implementation per operator. The Arrow-batched Python M7 fold
+tied the expression form in round 7 (BENCHNOTES "Round 7: M7 fold
+default re-measured") and lost 2× on the keyed single-exchange path in
+round 10 (OPTIMIZATION_r10.md), so it left the library. The Python
+folds live on as the pure-Python golden reference in
+``tests/golden_folds.py``, which the property and golden tests compare
+these expressions against byte for byte.
 """
 
 from __future__ import annotations
 
-import json
-import re
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
-
-
-def _merge_dicts(base: dict | None, overlay: dict | None) -> dict | None:
-    """Shallow overlay-wins merge. Reference: faexport_db/db.py:10-17."""
-    if base is None:
-        return overlay
-    if overlay is None:
-        return base
-    return {**base, **overlay}
-
-
-# With ensure_ascii=False the only \uXXXX escapes json.dumps emits are
-# control characters; Jackson (Spark's to_json) renders those with
-# UPPERCASE hex. Uppercase ours too so the golden fold is byte-identical
-# — but only when the backslash run before 'u' is odd (a real escape,
-# not literal backslashes followed by 'u').
-_U_ESCAPE = re.compile(r"(\\+)u([0-9a-f]{4})")
-
-
-def _jackson_case(m: re.Match) -> str:
-    if len(m.group(1)) % 2 == 1:
-        return m.group(1) + "u" + m.group(2).upper()
-    return m.group(0)
-
-
-def _canonical_json(data: dict | None) -> str | None:
-    # Raw UTF-8 (ensure_ascii=False) so the Python golden fold renders
-    # byte-identically to Spark's to_json, which never \u-escapes.
-    if data is None:
-        return None
-    out = json.dumps(data, separators=(",", ":"), sort_keys=True, ensure_ascii=False)
-    return _U_ESCAPE.sub(_jackson_case, out)
-
-
-def _fold_json_history(history, start_empty: bool) -> str | None:
-    acc: dict | None = {} if start_empty else None
-    for doc in history if history is not None else []:
-        if doc is None:
-            continue
-        try:
-            parsed = json.loads(doc)
-        except (TypeError, ValueError):
-            continue
-        if not isinstance(parsed, dict):
-            continue
-        acc = _merge_dicts(acc, parsed)
-    return _canonical_json(acc)
-
-
-@F.pandas_udf(StringType())
-def merge_extra_data_history(histories: pd.Series) -> pd.Series:
-    """M5, Python golden fold. Input: array<string> of JSON docs already
-    ordered oldest → newest. Output: canonical (sorted-key) JSON of the
-    layered merge.
-
-    The reference's fold starts from ``{}`` (models/submission.py:73),
-    so an entity with no extra_data anywhere merges to ``{}``.
-
-    ``merge_extra_data_history_expr`` is the production path (pure
-    expressions, no Python eval); this UDF remains as the independent
-    cross-check the property tests compare it against.
-    """
-    return histories.apply(lambda h: _fold_json_history(h, start_empty=True))
 
 
 def merge_extra_data_history_expr(history: Column) -> Column:
@@ -104,7 +40,7 @@ def merge_extra_data_history_expr(history: Column) -> Column:
     entries. Non-object / malformed docs parse to NULL and are skipped,
     like the golden fold's isinstance(dict) guard.
 
-    Known presentation seam vs the Python fold (property-tested equal
+    Known presentation seam vs the golden fold (property-tested equal
     otherwise): float values render per Jackson (``1.0`` → ``1``,
     ``1e+30`` → ``1.0E30``) — numerically identical JSON.
     """
@@ -132,159 +68,6 @@ def _canonical_map_json(m: Column) -> Column:
         .otherwise(F.lit(0)),
     )
     return F.to_json(F.map_from_entries(entries))
-
-
-MERGED_FILES_SCHEMA = (
-    "website_id string, site_submission_id string, site_file_id string, "
-    "file_url string, file_size bigint, extra_data string, hashes string"
-)
-
-
-def _none_if_nan(value):
-    if value is None:
-        return None
-    if isinstance(value, float) and pd.isna(value):
-        return None
-    return value
-
-
-_MERGED_FILES_COLUMNS = [
-    "website_id",
-    "site_submission_id",
-    "site_file_id",
-    "file_url",
-    "file_size",
-    "extra_data",
-    "hashes",
-]
-
-# Per-file fold state is a plain list indexed by these slots — the fold
-# is the hottest Python in the engine, so no per-row dict/namedtuple.
-_URL, _SIZE, _EXTRA, _HASHES = 0, 1, 2, 3
-
-
-def _fold_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Fold pre-sorted, entity-contiguous file rows (oldest→newest
-    within each entity — order established Spark-side by
-    ``sortWithinPartitions``) into current files.
-
-    Clash semantics per (entity, site_file_id), reference
-    faexport_db/models/file.py:50-72: a conflicting url / size /
-    shared-algo hash REPLACES the accumulated file (old hashes
-    dropped); otherwise extra_data merges overlay-wins, url/size stay
-    immutable (not null-filled), and only new-algo hashes are added.
-
-    Columnar index-loop over ``tolist()`` columns: ~3-4x faster than
-    the itertuples + per-row-dict formulation it replaces.
-    """
-    wids = pdf["website_id"].tolist()
-    sids = pdf["site_submission_id"].tolist()
-    sfids = pdf["site_file_id"].tolist()
-    urls = pdf["file_url"].tolist()
-    sizes = pdf["file_size"].tolist()
-    extras = pdf["extra_data"].tolist()
-    hlists = pdf["hashes_list"].tolist()
-    out: dict[str, list] = {c: [] for c in _MERGED_FILES_COLUMNS}
-    n = len(wids)
-    i = 0
-    while i < n:
-        w, s = wids[i], sids[i]
-        merged: dict = {}  # site_file_id (None ok) -> state list, insertion-ordered
-        j = i
-        while j < n and wids[j] == w and sids[j] == s:
-            url = _none_if_nan(urls[j])
-            size = _none_if_nan(sizes[j])
-            if size is not None:
-                size = int(size)
-            raw_extra = extras[j]
-            extra = None
-            if raw_extra:
-                try:
-                    parsed = json.loads(raw_extra)
-                    extra = parsed if isinstance(parsed, dict) else None
-                except (TypeError, ValueError):
-                    extra = None
-            hl = hlists[j]
-            # Arrow delivers list<struct> as a sequence of dicts — no
-            # JSON round-trip per row.
-            hashes = (
-                {int(h["algo_id"]): h["hash_b64"] for h in hl}
-                if hl is not None and len(hl)
-                else {}
-            )
-            key = _none_if_nan(sfids[j])
-            cur = merged.get(key)
-            if cur is None:
-                merged[key] = [url, size, extra, hashes]
-            else:
-                cur_hashes = cur[_HASHES]
-                clash = (
-                    url is not None
-                    and cur[_URL] is not None
-                    and cur[_URL] != url
-                ) or (
-                    size is not None
-                    and cur[_SIZE] is not None
-                    and cur[_SIZE] != size
-                )
-                if not clash:  # extra_data never clashes (file.py:62)
-                    for a, hv in hashes.items():
-                        if a in cur_hashes and cur_hashes[a] != hv:
-                            clash = True
-                            break
-                if clash:
-                    merged[key] = [url, size, extra, hashes]  # full reset
-                else:
-                    cur[_EXTRA] = _merge_dicts(cur[_EXTRA], extra)
-                    for a, hv in hashes.items():
-                        if a not in cur_hashes:
-                            cur_hashes[a] = hv
-            j += 1
-        for key, f in merged.items():
-            out["website_id"].append(w)
-            out["site_submission_id"].append(s)
-            out["site_file_id"].append(key)
-            out["file_url"].append(f[_URL])
-            out["file_size"].append(f[_SIZE])
-            out["extra_data"].append(_canonical_json(f[_EXTRA]))
-            out["hashes"].append(
-                json.dumps(
-                    [
-                        {"algo_id": a, "hash_b64": f[_HASHES][a]}
-                        for a in sorted(f[_HASHES])
-                    ],
-                    separators=(",", ":"),
-                )
-            )
-        i = j
-    return pd.DataFrame(out, columns=_MERGED_FILES_COLUMNS)
-
-
-def _fold_file_stream(batches) -> "pd.DataFrame":
-    """mapInPandas kernel: rows arrive entity-contiguous and pre-sorted;
-    one Python invocation per ~10k-row Arrow batch instead of one per
-    entity group (applyInPandas pays per-group call + Arrow framing —
-    at millions of small groups that overhead IS the runtime). The tail
-    group of each batch may continue into the next, so it's carried
-    over and folded once complete."""
-    leftover: pd.DataFrame | None = None
-    for pdf in batches:
-        if leftover is not None and len(leftover):
-            pdf = pd.concat([leftover, pdf], ignore_index=True)
-        if not len(pdf):
-            leftover = None
-            continue
-        tail_site = pdf["website_id"].iloc[-1]
-        tail_sub = pdf["site_submission_id"].iloc[-1]
-        tail_mask = (pdf["website_id"] == tail_site) & (
-            pdf["site_submission_id"] == tail_sub
-        )
-        leftover = pdf[tail_mask]
-        body = pdf[~tail_mask]
-        if len(body):
-            yield _fold_batch(body)
-    if leftover is not None and len(leftover):
-        yield _fold_batch(leftover)
 
 
 def _keyed_files(
@@ -339,7 +122,7 @@ def _m7_acc_init() -> Column:
 
 def _hashes_map(hl: Column) -> Column:
     """(algo_id → hash_b64) map from the sorted entry list; last entry
-    wins per algo_id like the Python dict build (map_from_entries
+    wins per algo_id like the golden fold's dict build (map_from_entries
     throws on duplicate keys under ANSI). NULL list → empty map."""
     n = F.size(hl)
     kept = F.filter(
@@ -361,8 +144,8 @@ def _hashes_map(hl: Column) -> Column:
 
 
 def _m7_step(acc: Column, e: Column) -> Column:
-    """One fold step — semantics of ``_fold_batch``'s inner loop
-    (reference models/file.py:50-72): conflicting non-null url / size /
+    """One fold step — semantics of the golden ``_fold_batch``'s inner
+    loop (tests/golden_folds.py; reference models/file.py:50-72): conflicting non-null url / size /
     shared-algo hash REPLACES the accumulated file wholesale; otherwise
     extra_data merges overlay-wins, url/size stay immutable, and only
     new-algo hashes are added.
@@ -381,7 +164,7 @@ def _m7_step(acc: Column, e: Column) -> Column:
         | F.exists(
             F.map_entries(hashes_e),
             # eqNullSafe: a stored "abc" vs incoming NULL b64 IS a
-            # conflict (the Python fold's `!=` says so), but a plain
+            # conflict (the golden fold's `!=` says so), but a plain
             # SQL `!=` would yield NULL and silently skip the reset.
             lambda kv: F.map_contains_key(acc["hashes"], kv["key"])
             & ~F.try_element_at(acc["hashes"], kv["key"]).eqNullSafe(kv["value"]),
@@ -411,19 +194,28 @@ def _m7_step(acc: Column, e: Column) -> Column:
     )
 
 
-def _merged_files_expr(keyed: DataFrame) -> DataFrame:
-    """Expression-form M7: one shuffle (groupBy the (entity, file) key,
-    map-side partial collect), a comparator ``array_sort`` establishes
-    fold order on the (scan_datetime, snapshot_id, file_id) key prefix,
-    then the ``aggregate`` fold and canonical-JSON rendering, zero
-    Python in the plan. Folding per (entity, file) key equals folding
+def merged_files_keyed(keyed: DataFrame) -> DataFrame:
+    """M7 fold over an already-keyed frame — the entry for callers that
+    can produce ``_keyed_files``'s output columns (website_id,
+    site_submission_id, site_file_id, scan_datetime,
+    submission_snapshot_id, file_id, file_url, file_size, extra_data,
+    hashes_list) WITHOUT the snapshot/hash joins, e.g. when all three
+    branches derive from one source row (guide §8: use what you know
+    that the optimizer does not). Semantics identical to
+    ``merged_files``; the golden/property tests pin the fold itself.
+
+    One shuffle (groupBy the (entity, file) key, map-side partial
+    collect), a comparator ``array_sort`` establishes fold order on the
+    (scan_datetime, snapshot_id, file_id) key prefix, then the
+    ``aggregate`` fold and canonical-JSON rendering, zero Python in the
+    plan. Folding per (entity, file) key equals folding
     the entity stream because a file key's state only changes on its
     own rows. JSON/hash-list parsing happens ONCE per row in the
     pre-collect projection, not inside the interpreted fold lambda."""
     # Collect raw (orderable) structs so array_sort runs the native
     # struct comparison — the (scan_datetime, snapshot_id, file_id)
     # prefix decides every comparison (snapshot ids are unique), same
-    # order the Python path's sortWithinPartitions establishes. Parsing
+    # order the golden fold sorts its rows into. Parsing
     # happens in ONE transform pass after the sort, so the JSON/hash
     # list is parsed exactly once per row — never inside the fold step,
     # where the interpreted lambda would re-parse per occurrence.
@@ -475,7 +267,7 @@ def _merged_files_expr(keyed: DataFrame) -> DataFrame:
             ),
         ),
         # A NULL hash_b64 must render as "hash_b64":null like the
-        # Python fold's json.dumps, not be dropped from the struct.
+        # golden fold's json.dumps, not be dropped from the struct.
         {"ignoreNullFields": "false"},
     )
     return (
@@ -503,56 +295,17 @@ def merged_files(
     submission_snapshots: DataFrame,
     files: DataFrame,
     file_hashes: DataFrame | None = None,
-    impl: str = "expr",
 ) -> DataFrame:
     """M7 — current files per submission entity, clash-reset semantics.
 
-    ``impl="expr"`` (default): pure Catalyst expressions — groupBy the
-    (entity, file) key + an ``aggregate`` left fold, no Python eval in
-    the plan (same float-presentation seam as M5: ``1.0`` renders
-    ``1`` via Jackson). ``impl="python"``: the Arrow-batched streaming
-    mapInPandas fold — property-tested equal.
-
-    Default history: an early ad-hoc measurement (python ≈ 1.2 s vs
-    expr ≈ 1.4 s at sf0.1) favored python; the r07 re-measure under
-    bench methodology on a quiet box (ABAB-interleaved, best-of-5 ×3
-    per impl) found a statistical TIE — python best 1.03 s / expr
-    best 1.05 s, medians within 2%, inside this box's same-run spread
-    (BENCHNOTES Round 7). On a tie the expression form wins the
-    default: it keeps the heaviest headline query whole-stage-codegen
-    JVM-only, needs no Python workers on the executors, and removes
-    the one Arrow boundary from the flagship merge path. The r10
-    re-measure on the keyed single-exchange path broke the tie
-    outright — expr median 0.55 s vs python 1.04 s (the expr fold
-    shed its JSON churn; the python fold still pays per-batch Arrow
-    framing + the Python loop) — so the default is now measured, not
-    a tie-break (OPTIMIZATION_r10.md).
+    Pure Catalyst expressions: groupBy the (entity, file) key and an
+    ``aggregate`` left fold, no Python eval in the plan (same
+    float-presentation seam as M5: ``1.0`` renders ``1`` via Jackson).
+    This is the only implementation. The Arrow-batched Python fold it
+    replaced measured 2× slower on the keyed path (expr median 0.55 s
+    vs python 1.04 s, OPTIMIZATION_r10.md) and is now the golden in
+    ``tests/golden_folds.py``.
     """
     keyed = _keyed_files(submission_snapshots, files, file_hashes)
-    return merged_files_keyed(keyed, impl=impl)
+    return merged_files_keyed(keyed)
 
-
-def merged_files_keyed(keyed: DataFrame, impl: str = "expr") -> DataFrame:
-    """M7 fold over an already-keyed frame — the entry for callers that
-    can produce ``_keyed_files``'s output columns (website_id,
-    site_submission_id, site_file_id, scan_datetime,
-    submission_snapshot_id, file_id, file_url, file_size, extra_data,
-    hashes_list) WITHOUT the snapshot/hash joins, e.g. when all three
-    branches derive from one source row (guide §8: use what you know
-    that the optimizer does not). Semantics identical to
-    ``merged_files``; the golden/property tests pin the fold itself."""
-    if impl == "python":
-        # One shuffle on the entity key, sort establishes fold order,
-        # then a streaming mapInPandas fold (see _fold_file_stream for
-        # why this beats a per-group applyInPandas).
-        arranged = keyed.repartition(
-            "website_id", "site_submission_id"
-        ).sortWithinPartitions(
-            "website_id",
-            "site_submission_id",
-            "scan_datetime",
-            "submission_snapshot_id",
-            "file_id",
-        )
-        return arranged.mapInPandas(_fold_file_stream, MERGED_FILES_SCHEMA)
-    return _merged_files_expr(keyed)

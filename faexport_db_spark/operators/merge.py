@@ -8,10 +8,11 @@ shuffle on the entity key, all merge rules as JVM aggregate expressions
 (`max_by` over a deterministic order key). The M5 layered JSON merge of
 ``extra_data`` (shallow, newest key wins — reference: faexport_db/
 db.py:10-17, models/submission.py:71-77) is ALSO pure expressions
-(variant-typed first-wins map fold, ``folds.py``), so the scalar merge
-plan has zero Python eval operators; the only Arrow-batched Python fold
-left is M7's clash-reset file merge (reference: models/
-submission.py:89-104, models/file.py:50-72) — see ``folds.py``.
+(variant-typed first-wins map fold, ``folds.py``), and so is M7's
+clash-reset file merge (reference: models/submission.py:89-104,
+models/file.py:50-72), so the merge plans have zero Python eval
+operators. The Python forms of both folds are the test golden
+(``tests/golden_folds.py``).
 
 Scale notes: the entity key (website_id, site_entity_id) is
 high-cardinality and well distributed (SURVEY §4 skew note), so the
@@ -122,8 +123,8 @@ def merged_submissions(
     (GET /api/view/submissions/..., web.py:68-78 → models/submission.py).
 
     One aggregation pass for all scalar merges + keywords; a second
-    co-partitioned applyInPandas fold for the clash-reset file merge
-    (M7), left-joined back on the entity key.
+    aggregation runs the clash-reset file merge (M7) as an expression
+    fold, left-joined back on the entity key.
     """
     order = snapshot_order("scan_datetime", "submission_snapshot_id")
     snaps = submission_snapshots

@@ -22,7 +22,6 @@ def fan_out(
     df: DataFrame,
     multiple: int = 1,
     by: Sequence[str | Column] | None = None,
-    target: int | None = None,
 ) -> DataFrame:
     """Repartition up to ``multiple × defaultParallelism`` — only when
     the input would scan with fewer tasks than that (never a coalesce,
@@ -42,10 +41,10 @@ def fan_out(
     row id (unique → uniform spread). Round-robin remains the fallback
     for callers with no usable column.
 
-    ``target`` overrides the ``defaultParallelism × multiple`` width —
-    for stages whose per-task fixed cost dominates at full width (e.g.
-    an Arrow kernel's per-task Python round-trip), pass a fraction of
-    the core count to trade scheduling overhead for batch size.
+    The width is always ``defaultParallelism × multiple``. A
+    ``target=`` width override existed only for the MinHash Arrow
+    kernel's fat partitions; that kernel measured a tie
+    (OPTIMIZATION_r10.md) and was deleted, and the override with it.
 
     Intended for source scans (every call site wraps a freshly-loaded
     table). The width probe estimates the scan's split count from file
@@ -55,8 +54,7 @@ def fan_out(
     in-memory fixtures) fall back to the RDD probe.
     """
     spark = df.sparkSession
-    if target is None:
-        target = spark.sparkContext.defaultParallelism * multiple
+    target = spark.sparkContext.defaultParallelism * multiple
     files = df.inputFiles()  # analysis-only; no physical planning
     if files:
         if len(files) >= target:

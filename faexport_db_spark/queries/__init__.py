@@ -1,33 +1,13 @@
 """Query/oracle inventory: importing this package populates the registry.
 
-Modules register one ``queries()`` entry (and DuckDB oracle where
-SQL-expressible) per SURVEY.md §2 operator ID.
+Each module registers one ``queries()`` entry per SURVEY.md §2 operator
+ID, plus a DuckDB oracle where the operator is SQL-expressible.
+``QUERIES`` and ``ORACLES`` keep registration order: the module import
+order below, then definition order within each module. Importing the
+package reads no file outside it.
 
-DRIVER WINDOW: the driver's correctness harness checks only the FIRST
-50 registrations in insertion order, so registration order — not
-module import order — decides which ops get a driver-verified row each
-round.  Rounds 1–2 burned the window on the same 50 keys (A/F/J/M/
-C1–C18); the rotation is now AUTOMATIC: ``_reorder`` reads the
-accumulated ``CORRECTNESS_r*.json`` files the driver leaves in the
-repo root and front-loads every op that has never had a clean driver
-row (after three flagship regression sentinels), prioritized by the
-curated ``_PRIORITY`` order (§2 ops before engine extensions), then
-registration order.  Ops already green in some round sort last, so
-across rounds every registered op accumulates a driver-green row with
-no manual rotation; everything keeps passing the full local
-differential (tests/test_oracle_differential.py) regardless of
-position.
-
-Regression coverage note: sorting already-green ops out of the window
-trades their per-round driver re-check for first-time coverage of the
-rest — the prescription from the r02 review. Ops whose
-implementations are REWRITTEN should still get a same-round driver
-row; this round that holds because every rewritten pipeline (MinHash
-signing, SimHash banding, embedding LSH) is exercised by a
-never-green checked companion inside the window
-(t_minhash_lsh_checked, t_simhash_checked, t_embed_lsh_checked, …),
-and the full local differential over every registered entry runs
-every round regardless.
+The order the driver's correctness harness sees (it checks the first 50
+keys) is set in ``__spark_entry__.queries()``, not here.
 """
 
 from faexport_db_spark.queries import (  # noqa: F401
@@ -47,268 +27,3 @@ from faexport_db_spark.queries import (  # noqa: F401
     windows,
 )
 from faexport_db_spark.queries.registry import ORACLES, QUERIES  # noqa: F401
-
-# Flagship regression canaries — always occupy the first window slots
-# so a merge-semantics regression is caught the same round it lands.
-_SENTINELS = ["merged_entity", "m5_extra_data_merge", "m7_clash_fold_checked"]
-
-# Ops whose IMPLEMENTATION was rewritten this round: they already have
-# archived green rows, but a rewrite invalidates those as evidence, so
-# they re-enter the window right after the sentinels (VERDICT r03
-# item 6). Clear this list when a round ships no rewrites.
-_REWRITTEN: list[str] = [
-    # r09: no semantic rewrites of already-green ops this round (the
-    # r08 entries all earned fresh green rows in CORRECTNESS_r08; the
-    # r09 temperature_sample NULL-stratum fix is unobservable on the
-    # NULL-free fixture, and the HLL-store atomic publish is
-    # streaming-only). New r09 ops enter via never-green rank.
-]
-
-# Priority ORDER for never-driver-checked ops (SURVEY §2 inventory
-# before engine extensions). Keys not listed here fall back to
-# registration order after these.
-_PRIORITY = [
-    # W1–W4 row_number dedup (SURVEY §2.6)
-    "w1_dedup_keep_highest",
-    "w2_dedup_files",
-    "w3_dedup_keep_lowest",
-    "w4_dedup_user_snapshots",
-    # O1–O5 sorts/limits (§2.7)
-    "o1_sort_desc_recency",
-    "o2_composite_sort",
-    "o3_row_cap",
-    "o4_topk_by_count",
-    "o5_offset_resume",
-    # U1–U3 set ops (§2.8)
-    "u1_upsert_returning",
-    "u2_intersection",
-    "u3_union_frames",
-    # S1–S8 sources (§2.1)
-    "s1_csv_scan_positional",
-    "s2_csv_scan_header",
-    "s3_json_dir_scan",
-    "s4_sqlite_scan",
-    "s5_streaming_cursor_scan",
-    "s6_point_select",
-    "s7_http_push_parse",
-    "s8_preresolved_lookup_join",
-    # K1–K4 sinks (§2.1)
-    "k1_bulk_append_sink",
-    "k2_microbatch_sink",
-    "k3_jsonl_export",
-    "k4_delete_rewrite",
-    # C19–C22 scalars (§2.9)
-    "c19_json_parse",
-    "c20_posexplode_ordinals",
-    "c21_url_dissection",
-    "c22_duplicate_ordinal_check",
-    # validation report + streaming analogs (§2.10)
-    "v1_validation_report",
-    "st_event_window_counts",
-    "st_session_windows",
-    "st_first_seen",
-    # oracle-checked companions of the approximate training ops
-    "t_minhash_lsh_checked",
-    "t_minhash_incremental_checked",
-    "t_simhash_checked",
-    "t_dedup_clusters",
-    "t_ann_cosine_topk",
-    "t_ann_lsh_checked",
-    "t_ann_ivf_checked",
-    "t_ann_ivf_persisted",
-    "t_embed_lsh_checked",
-    "t_embed_incremental_checked",
-    # remaining oracle-checked training ops
-    "t_exact_dedup",
-    "t_embed_cosine_dedup",
-    "t_lang_id",
-    "t_text_quality",
-    "t_token_count",
-    "t_ngram_jaccard_pairs",
-    "t_doc_fingerprint",
-    "t_multimodal_features",
-    "t_sequence_pack",
-    "t_pack_manifest",
-    "t_stratified_sample",
-    "t_sketch_bounds",
-    "t_corpus_prep",
-    # r05 session-2 additions: §2-shaped analytics/sources first, then
-    # oracle-backed training extensions, then rows-only raw companions
-    # (whose checked twins carry the correctness evidence) — so if the
-    # window overflows, a rows-only raw op is what waits a round.
-    # t_passage_dedup leads: the r04 red row whose re-green is the
-    # round's top item (VERDICT r04 #1).
-    "t_passage_dedup",
-    "a11_cube_matrix",
-    "w5_topk_per_group",
-    "m9_scd2_history",
-    "s9_orc_roundtrip",
-    "k6_partitioned_sink",
-    "ts1_gapfill_locf",
-    "ts2_cohort_retention",
-    "ts3_funnel_stages",
-    "t_line_dedup",
-    "t_line_incremental_checked",
-    "t_heavy_hitters",
-    "t_domain_cap",
-    "t_quality_classifier",
-    "t_global_shuffle",
-    "t_compression_checked",
-]
-
-
-from faexport_db_spark.queries.greenrows import is_green_row  # noqa: F401,E402
-
-
-def _driver_green_keys() -> dict[str, int]:
-    """Keys with an archived clean driver row, mapped to the LAST
-    round number that recorded one (r05: the window re-checks greens
-    oldest-first for regression detection, VERDICT r04 item 8).
-
-    Primary source is the COMMITTED manifest
-    (``queries/driver_green.json``, regenerated by
-    ``tools/update_green_manifest.py`` and reviewed per round) so the
-    window is deterministic for a given checkout; any
-    ``CORRECTNESS_r*.json`` files present in the repo root are merged
-    in on top so a fresh round's rows take effect before the manifest
-    is regenerated. ``SPARK_GRAFT_GREEN_MANIFEST`` points at an
-    alternate manifest. Failures are LOUD: an explicitly-pointed
-    manifest that can't be read raises, and an unreadable default
-    manifest logs a warning — a silently-empty green set would
-    reshuffle the driver window, the exact failure this mechanism
-    exists to prevent (ADVICE r03 + review finding)."""
-    import glob
-    import json
-    import logging
-    import os
-    import re
-
-    def _rnum(v) -> int:
-        m = re.search(r"_r(\d+)", str(v))
-        return int(m.group(1)) if m else 0
-
-    green: dict[str, int] = {}
-    explicit = os.environ.get("SPARK_GRAFT_GREEN_MANIFEST")
-    manifest = explicit or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "driver_green.json"
-    )
-    try:
-        with open(manifest) as f:
-            for key, src in json.load(f).get("green", {}).items():
-                green[key] = max(green.get(key, 0), _rnum(src))
-    except (OSError, ValueError) as exc:
-        if explicit:
-            raise RuntimeError(
-                f"SPARK_GRAFT_GREEN_MANIFEST points at an unreadable manifest "
-                f"{manifest!r}: {exc}"
-            ) from exc
-        logging.getLogger(__name__).warning(
-            "driver-green manifest %s unreadable (%s); the correctness "
-            "window will treat every op as never-checked",
-            manifest,
-            exc,
-        )
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(doc, dict):
-            continue
-        rnd = _rnum(os.path.basename(path))
-        for key, row in doc.items():
-            if is_green_row(row):
-                green[key] = max(green.get(key, 0), rnd)
-    return green
-
-
-def _driver_checked_keys() -> set[str]:
-    """Keys with ANY archived driver row — green, red, or rows-only.
-    Used to deprioritize no-oracle raw ops whose rows-only check has
-    already been recorded once: re-running it yields an identical row,
-    so it must not displace a first-time check when the window
-    overflows."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(doc, dict):
-            seen.update(doc.keys())
-    return seen
-
-
-#: The first-50 registration order the driver's correctness harness
-#: will check this round — computed by ``_reorder`` and exposed so an
-#: unexpected window is visible (log line below + importable).
-DRIVER_WINDOW: list[str] = []
-
-
-def _reorder() -> None:
-    missing = [k for k in _SENTINELS + _REWRITTEN + _PRIORITY if k not in QUERIES]
-    if missing:
-        raise RuntimeError(f"driver-window keys not registered: {missing}")
-    explicit = _SENTINELS + _REWRITTEN
-    dupes = {k for k in explicit if explicit.count(k) > 1} | {
-        k for k in _PRIORITY if _PRIORITY.count(k) > 1
-    }
-    if dupes:
-        raise RuntimeError(f"driver-window keys duplicated: {sorted(dupes)}")
-    green = _driver_green_keys()
-    checked = _driver_checked_keys()
-    pri = {k: i for i, k in enumerate(_PRIORITY)}
-    reg = {k: i for i, k in enumerate(QUERIES)}
-
-    def rank(k: str):
-        if k in _SENTINELS:
-            return (0, _SENTINELS.index(k), 0)
-        if k in _REWRITTEN:
-            return (1, _REWRITTEN.index(k), 0)
-        # never-green first, ordered by curated priority then
-        # registration order; green ops sort last, OLDEST last-green
-        # round first so the steady-state rotation is regression
-        # detection (VERDICT r04 item 8). Within never-green,
-        # oracle-backed ops outrank no-oracle raws: a raw op can only
-        # ever earn a weak rows-only row (its *_checked companion
-        # carries the correctness evidence), so when the window
-        # overflows it must not displace an op that would earn a
-        # hash-matched green. Raws that already have SOME driver row
-        # from a past round sort after never-checked ones — re-running
-        # a rows-only check changes nothing round over round.
-        if k not in green:
-            has_oracle = k in ORACLES
-            if not has_oracle and k in checked:
-                # A rows-only raw that already has its (only possible)
-                # driver row: re-running is a no-op, so sort it after
-                # the greens — an oldest-green re-check is regression
-                # detection, an identical rows-only row is nothing.
-                return (4, pri.get(k, len(pri)), reg[k])
-            sub = 0 if has_oracle else 1
-            return (2, sub, pri.get(k, len(pri)), reg[k])
-        return (3, green[k], pri.get(k, len(pri)), reg[k])
-
-    ordered = sorted(QUERIES, key=rank)
-    for d in (QUERIES, ORACLES):
-        snapshot = {k: d[k] for k in ordered if k in d}
-        d.clear()
-        d.update(snapshot)
-    DRIVER_WINDOW[:] = ordered[:50]
-    import logging
-
-    logging.getLogger(__name__).info(
-        "driver correctness window (first 50 of %d): %s",
-        len(ordered),
-        DRIVER_WINDOW,
-    )
-
-
-_reorder()

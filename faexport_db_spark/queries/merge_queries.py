@@ -211,9 +211,10 @@ def m5_extra_data_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M5 layered JSON merge, key-wise: folding dicts oldest→newest with
     overlay-wins is equivalent per top-level key to "newest value for
     that key" — which IS SQL-expressible, so the oracle can check it.
-    (The non-SQL nested-fidelity fold is ``merge_extra_data_history``;
-    golden tests pin it.) Reference: models/submission.py:71-77,
-    db.py:10-17.
+    (The nested-fidelity fold is ``merge_extra_data_history_expr`` in
+    ``operators/folds.py``; tests compare it byte for byte with the
+    Python golden ``_fold_json_history`` in ``tests/golden_folds.py``.)
+    Reference: models/submission.py:71-77, db.py:10-17.
     """
     order = snapshot_order("ts", "event_id")
     exploded = (
@@ -391,7 +392,7 @@ def m7_clash_fold_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M7's clash-reset CORE, oracle-checked through the real fold.
 
     Same pipeline as ``m7_file_clash_merge`` (the actual
-    ``merged_files`` mapInPandas fold), projected to the columns DuckDB
+    ``merged_files_keyed`` expression fold), projected to the columns DuckDB
     can reproduce: a ``list_reduce`` lambda replays the reset rule —
     conflicting non-null url/size replaces the accumulated state, which
     is otherwise immutable. The state for one file key only ever

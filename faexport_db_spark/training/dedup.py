@@ -31,8 +31,6 @@ and executors, no Python in the hot path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -109,67 +107,12 @@ def exact_dedup(
     )
 
 
-def _minhash_mins_arrow(hashed: DataFrame, id_col: str, num_perm: int) -> DataFrame:
-    """The ``num_perm``-lane running-minimum fold as one vectorized
-    Arrow kernel. Input: (id, hs array<long> distinct gram hashes);
-    output: (id, mins array<long>[num_perm]) — VALUE-IDENTICAL to the
-    expression fold (lane hash = XXH64.hashInt(lane,
-    XXH64.hashLong(gram, 42)), reproduced bit-exactly in
-    ``training/xxh.py``; property-tested in tests/test_training.py).
-
-    Why Python here (guide §4.2): the expression form is a
-    higher-order ``aggregate`` lambda — interpreted, no whole-stage
-    codegen, no common-subexpression elimination — doing
-    grams × num_perm scalar hash evaluations per doc; this kernel does
-    the same work as ~num_perm NumPy passes over the batch's flattened
-    gram buffer plus one ``minimum.reduceat`` per lane. Measured ~9×
-    less task CPU on the signing stage at sf0.1. NULL list rows stay
-    NULL; empty lists fold to the init vector, exactly like
-    ``aggregate``."""
-    out_schema = f"{id_col} {hashed.schema[id_col].dataType.simpleString()}, mins array<bigint>"
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from faexport_db_spark.training.xxh import SPARK_SEED, xxh64_int, xxh64_long
-
-        max_long = np.int64((1 << 63) - 1)
-        for batch in batches:
-            ids, hs = batch.column(0), batch.column(1)
-            n = len(hs)
-            parents = pc.list_parent_indices(hs).to_numpy(zero_copy_only=False)
-            flat = pc.list_flatten(hs).to_numpy(zero_copy_only=False)
-            flat = flat.astype(np.int64, copy=False).view(np.uint64)
-            out = np.full((n, num_perm), max_long, dtype=np.int64)
-            if len(flat):
-                # parents is sorted (list order): group starts for reduceat
-                starts = np.flatnonzero(np.r_[True, parents[1:] != parents[:-1]])
-                rows = parents[starts]
-                base = xxh64_long(flat, SPARK_SEED)
-                for lane in range(num_perm):
-                    lane_hash = xxh64_int(lane, base).view(np.int64)
-                    out[rows, lane] = np.minimum.reduceat(lane_hash, starts)
-            offsets = np.arange(n + 1, dtype=np.int32) * num_perm
-            nulls = hs.is_null().to_numpy(zero_copy_only=False)
-            mins = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                pa.array(out.reshape(-1), pa.int64()),
-                mask=pa.array(nulls) if nulls.any() else None,
-            )
-            yield pa.RecordBatch.from_arrays([ids, mins], names=[id_col, "mins"])
-
-    return hashed.mapInArrow(gen, out_schema)
-
-
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_perm: int = 64,
     shingle_n: int = 3,
-    impl: str | None = None,
 ) -> DataFrame:
     """Per-doc MinHash signature, computed without any shuffle.
 
@@ -186,34 +129,12 @@ def minhash_signatures(
     nothing exchanged. ``fan_out`` spreads narrow inputs over every
     core. Output: (id, mins array<long>[num_perm]).
 
-    ``impl="arrow"`` folds the num_perm running minima in a vectorized
-    NumPy kernel instead (``_minhash_mins_arrow`` — bit-exact, ~9×
-    less signing-stage task CPU). It is NOT the default: a quiet-box
-    ABAB at sf0.1 (best-of-5 ×3 rounds, r09) measured the whole dedup
-    1.6–1.9 s (expr) vs 2.3–2.8 s (arrow) — with 32 narrow partitions
-    the per-task Arrow round-trip costs more wall-clock than the
-    interpreted fold saves. The r10 geometry signs on cores/4 FAT
-    partitions (each mapInArrow task pays one fixed Python round-trip,
-    so fewer/fatter tasks amortize it; the banding groupBy re-spreads
-    right after): fresh-JVM ABAB at sf0.1 measured a statistical TIE
-    with the expr fold (quiet reps: 1.73/1.68 and 1.65/1.64 — the r09
-    full-width loss is gone). On a tie the expr fold keeps the default
-    for the same reason as the m7 fold: JVM-only plan, no Python
-    workers. Select per deployment with SPARK_GRAFT_MINHASH_IMPL —
-    fat-partition corpora where per-task compute dominates the
-    boundary are where ``arrow`` wins."""
-    if impl is None:
-        # Prod knob (like SPARK_GRAFT_AQE_MIN_PARTITION): both impls
-        # are bit-exact (property-tested), so the default is a pure
-        # performance choice — env-selectable per deployment.
-        impl = os.environ.get("SPARK_GRAFT_MINHASH_IMPL", "expr")
-    if impl == "arrow":
-        sc = docs.sparkSession.sparkContext
-        fat = max(1, sc.defaultParallelism // 4)
-        hashed = fan_out(docs, by=[id_col], target=fat).select(
-            F.col(id_col), shingle_hashes(text_col, shingle_n).alias("hs")
-        )
-        return _minhash_mins_arrow(hashed, id_col, num_perm)
+    This is the only implementation. A bit-exact vectorized Arrow
+    kernel for the minima fold lost at full width in round 9
+    (OPTIMIZATION_r09.md, BENCHNOTES "Round 9 (optimization 1/2)") and
+    only tied on fat partitions in round 10 (OPTIMIZATION_r10.md), so
+    it was deleted rather than kept behind a knob: the expression fold
+    keeps the plan JVM-only, with no Python workers."""
     hashed = fan_out(docs, by=[id_col]).select(
         F.col(id_col), shingle_hashes(text_col, shingle_n).alias("hs")
     )

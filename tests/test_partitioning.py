@@ -137,16 +137,6 @@ def test_fan_out_exchange_flavor_and_audit_visibility(spark, sf_small):
     assert fan_out(wide) is wide
 
 
-def test_fan_out_target_overrides_width(spark, sf_small):
-    """``target=`` pins the fan-out width (the Arrow-kernel fat-
-    partition geometry) instead of defaultParallelism × multiple."""
-    docs = load_table(spark, sf_small, "documents")
-    assert fan_out(docs, by=["doc_id"], target=3).rdd.getNumPartitions() == 3
-    # a target at-or-below the current width is a no-op, never a coalesce
-    wide = spark.range(10000).repartition(8)
-    assert fan_out(wide, target=4) is wide
-
-
 def test_fan_out_estimates_width_without_rdd_conversion(spark, sf_small, monkeypatch):
     """``df.rdd`` plans the query a second time per call (VERDICT r02
     item 5); for file-backed input the width probe must come from file

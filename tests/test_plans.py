@@ -104,6 +104,7 @@ def test_signature_stages_are_shuffle_free(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
     assert shuffle_count(minhash_signatures(docs)) == 0
     assert shuffle_count(simhash_signatures(docs)) == 0
+    assert_plan(minhash_signatures(docs), max_python_evals=0)
 
 
 @pytest.mark.slow
@@ -120,19 +121,15 @@ def test_lsh_candidates_never_broadcast_the_corpus(spark, sf_small):
 
 
 def test_m7_expression_fold_has_no_python(spark, sf_small):
-    """The expression-form M7 clash-reset fold is pure Catalyst: a
-    single aggregate left fold after the (entity, file)-key groupBy,
-    with NO Python eval operator in the plan. (expr is the default —
-    r10 ABAB: expr ~2x faster than the mapInPandas fold on the keyed
-    path — and the python variant's footprint is pinned to exactly one
-    streaming MapInPandas below.)"""
+    """The M7 clash-reset fold is pure Catalyst: a single aggregate
+    left fold after the (entity, file)-key groupBy, with NO Python eval
+    operator in the plan."""
     from faexport_db_spark.queries.merge_queries import m7_parts
 
     snaps, files, hashes = m7_parts(spark, sf_small)
     from faexport_db_spark.operators.folds import merged_files
 
-    assert_plan(merged_files(snaps, files, hashes, impl="expr"), max_python_evals=0)
-    assert_plan(merged_files(snaps, files, hashes, impl="python"), max_python_evals=1)
+    assert_plan(merged_files(snaps, files, hashes), max_python_evals=0)
 
 
 def test_m7_registered_query_is_one_exchange_no_joins(spark, sf_small):

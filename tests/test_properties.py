@@ -16,14 +16,12 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from faexport_db_spark.operators.folds import (
+from golden_folds import (
+    MERGED_FILES_COLUMNS,
     _fold_batch,
     _fold_json_history,
+    golden_merged_files,
 )
-
-
-def _fold_entity_rows(pdf):
-    return _fold_batch(pdf).to_dict("records")
 
 # --- pure kernels ---------------------------------------------------------
 
@@ -48,7 +46,6 @@ def test_json_fold_is_per_key_last_wins(history):
     assert out == expected
 
 
-@pytest.mark.slow
 def test_expression_fold_matches_python_golden_fold(spark):
     """The production expression-form M5 fold (variant first-wins map
     merge) must render byte-identically to the Python golden fold on
@@ -139,7 +136,7 @@ def test_file_fold_invariants(rows):
     (clash replaces, never erases); every output hash was observed for
     that site_file_id; the newest row's hashes always survive."""
     pdf = _mk_pdf(rows)
-    out = _fold_entity_rows(pdf)
+    out = _fold_batch(pdf)
     by_key = {}
     for f in out:
         assert f["site_file_id"] not in by_key  # unique per site_file_id
@@ -172,7 +169,7 @@ def test_file_fold_invariants(rows):
 def test_file_fold_single_row_identity(rows):
     """Folding a single snapshot's files returns them unchanged."""
     pdf = _mk_pdf(rows[:1])
-    (f,) = _fold_entity_rows(pdf)
+    (f,) = _fold_batch(pdf)
     fid, url, size, extra, hashes = rows[0]
     assert f["site_file_id"] == fid and f["file_url"] == url
     assert {(h["algo_id"], h["hash_b64"]) for h in json.loads(f["hashes"])} == set(hashes)
@@ -258,10 +255,10 @@ def test_reingest_plus_dedup_equals_single_ingest(spark, rows):
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @pytest.mark.slow
 def test_merged_files_expr_matches_python_fold(spark, rows):
-    """The production expression-form M7 fold (aggregate over a sorted
-    history) is byte-identical to the Python golden kernel on arbitrary
-    file histories — clash resets, hash unions, extra overlays, null
-    keys and duplicate-algo hash lists included."""
+    """The expression-form M7 fold (aggregate over a sorted history) is
+    byte-identical to the Python golden fold on arbitrary file
+    histories — clash resets, hash unions, extra overlays, null keys
+    and duplicate-algo hash lists included."""
     from faexport_db_spark.operators.folds import merged_files
 
     base = datetime(2024, 1, 1)
@@ -294,15 +291,67 @@ def test_merged_files_expr_matches_python_fold(spark, rows):
         "file_id", "algo_id", F.unbase64("hash_b64").alias("hash_value")
     )
 
-    def rows_of(df):
-        return sorted(
-            map(tuple, df.collect()),
-            key=lambda t: tuple((v is None, v) for v in t),
-        )
+    assert _rows(merged_files(snaps, files, hashes).collect()) == _rows(
+        golden_merged_files(snaps, files, hashes)
+    )
 
-    got = rows_of(merged_files(snaps, files, hashes))
-    want = rows_of(merged_files(snaps, files, hashes, impl="python"))
+
+def _rows(records):
+    """Rows (Spark ``Row`` or golden dict) as sorted 7-column tuples."""
+    return sorted(
+        (tuple(r[c] for c in MERGED_FILES_COLUMNS) for r in records),
+        key=lambda t: tuple((v is None, v) for v in t),
+    )
+
+
+def test_merged_files_matches_golden_fold(spark, sf_small):
+    """Fast M7 gate: ``merged_files`` equals the Python golden fold on
+    all 7 output columns, byte for byte in the ``extra_data`` and
+    ``hashes`` renderings, on ``m7_parts`` plus a hand-built history
+    with a url clash reset, a size clash reset, a NULL hash_b64 and
+    nested / unicode extra_data."""
+    from pyspark.sql import functions as F
+
+    from faexport_db_spark.operators.folds import merged_files
+    from faexport_db_spark.queries.merge_queries import m7_parts
+
+    base = datetime(2024, 1, 1)
+    snaps = spark.createDataFrame(
+        [(i, "fa", "s1", base + timedelta(days=i)) for i in range(5)],
+        "submission_snapshot_id bigint, website_id string, "
+        "site_submission_id string, scan_datetime timestamp",
+    )
+    files = spark.createDataFrame(
+        [
+            (0, 0, "f1", "u1", 10, '{"n":{"b":[1,{"z":2,"y":null}]},"k":1}'),
+            (1, 1, "f1", "u2", 10, '{"u":"héllo ✓ \\u001f"}'),  # url clash
+            (2, 2, "f1", "u2", 20, '{"k":2}'),  # size clash
+            (3, 3, "f1", None, None, '{"k":3,"e":"\U0001f600"}'),
+            (4, 4, "f2", "v1", 5, None),
+            (5, 0, "f2", "v1", 5, '{"x":1}'),
+        ],
+        "file_id bigint, submission_snapshot_id bigint, site_file_id string, "
+        "file_url string, file_size bigint, extra_data string",
+    )
+    hashes = spark.createDataFrame(
+        [(0, 1, "aa=="), (0, 2, "bb=="), (1, 1, "cc=="), (3, 2, None), (4, 1, None),
+         (5, 1, "dd==")],
+        "file_id bigint, algo_id bigint, hash_b64 string",
+    ).select("file_id", "algo_id", F.unbase64("hash_b64").alias("hash_value"))
+
+    got = _rows(merged_files(snaps, files, hashes).collect())
+    want = _rows(golden_merged_files(snaps, files, hashes))
     assert got == want
+    by_file = {r[2]: r for r in got}
+    assert by_file["f1"][3:5] == ("u2", 20)  # the size clash reset last
+    assert json.loads(by_file["f1"][6]) == [
+        {"algo_id": 2, "hash_b64": None}
+    ]  # the size clash dropped algo 1; snapshot 3 added a NULL hash
+    # a NULL hash_b64 against a stored one is a clash: full reset
+    assert by_file["f2"][5:] == (None, '[{"algo_id":1,"hash_b64":null}]')
+
+    parts = m7_parts(spark, sf_small)
+    assert _rows(merged_files(*parts).collect()) == _rows(golden_merged_files(*parts))
 
 
 def test_passage_dedup_conservation_and_uniqueness(spark):

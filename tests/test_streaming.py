@@ -759,6 +759,43 @@ def test_streaming_passage_dedup_cleans_across_batches(spark, tmp_path, fmt_name
     # doc 11 was entirely duplicated passages → cleaned empty, not stored
 
 
+@pytest.mark.parametrize("fmt_name", sorted(STORE_FORMATS))
+def test_streaming_line_dedup_cleans_across_batches(spark, tmp_path, fmt_name):
+    """``start_streaming_line_dedup`` end to end: batch 2 repeats batch
+    1's boilerplate line, which pushes the line's count past
+    ``max_freq`` — it is cut from batch 2's stored text, while batch 1
+    (written before the repeat existed) keeps it."""
+    from faexport_db_spark.streaming.dedup_stream import start_streaming_line_dedup
+
+    fmt = STORE_FORMATS[fmt_name]()
+    src = tmp_path / "src"
+    store = str(tmp_path / "store")
+    index = str(tmp_path / "index")
+    ckpt = str(tmp_path / "ckpt")
+    boiler = "subscribe to our newsletter today"
+    batches = [
+        [(1, f"{boiler} alpha beta gamma delta eps")],
+        [(2, f"{boiler} fresh words made here now")],
+    ]
+    schema = "doc_id bigint, text string"
+    for i, data in enumerate(batches, 1):
+        spark.createDataFrame(data, schema).write.mode("overwrite").parquet(
+            str(src / f"b{i}")
+        )
+        stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
+        q = start_streaming_line_dedup(
+            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+            trigger={"availableNow": True}, line_tokens=5, fmt=fmt,
+        )
+        q.awaitTermination(120)
+
+    rows = {r["doc_id"]: r["text"] for r in fmt.read(spark, store).collect()}
+    assert rows == {
+        1: f"{boiler} alpha beta gamma delta eps",
+        2: "fresh words made here now",
+    }
+
+
 @pytest.mark.slow
 def test_passage_dedup_retry_windows_never_lose_text(spark, tmp_path):
     """ADVICE r04 (high): the passage stream must append survivors to
