@@ -17,9 +17,16 @@ operators. The Python forms of both folds are the test golden
 Scale notes: the entity key (website_id, site_entity_id) is
 high-cardinality and well distributed (SURVEY §4 skew note), so the
 single shuffle partitions evenly; per-entity snapshot counts are tiny
-(1-6), so collect_list stays bounded. No window function is used on the
-hot path — a window would sort every partition; `max_by`/`min`/`max`
-aggregate with partial (map-side) combine instead.
+(1-6), so collect_list stays bounded. No window function is used: the
+rules are `max_by`/`min`/`max` aggregates with partial (map-side)
+combine. Whether that aggregate sorts depends on its buffers.
+`merged_submissions` and `merged_users` also `collect_list`, so Spark
+plans every rule with it on ObjectHashAggregate and nothing sorts
+(pinned in tests/test_plans.py). A scalar-only merge, `max_by` of a
+string or struct value under the struct order key, has no buffer that
+HashAggregate can hold and falls back to SortAggregate, which sorts
+each partition for its partial and its final step (ROADMAP lists the
+merge queries whose plans still sort).
 
 Determinism: the reference sorts by ``scan_datetime`` only, relying on
 Python's stable sort for ties (models/submission.py:27-29). We refine

@@ -2,8 +2,9 @@
 
 Flask itself is out of engine scope (SURVEY.md §7.2 step 6); these are
 the query-layer functions each route in reference web.py delegates to,
-re-expressed as DataFrame plans that filter-then-merge (predicate
-pushdown reaches the scan before any shuffle).
+re-expressed as DataFrame plans. A point lookup is one entity predicate
+on a whole-store plan built once per store; Catalyst pushes it into the
+snapshot scans (see ``api``).
 """
 
 from faexport_db_spark.serve.api import (  # noqa: F401

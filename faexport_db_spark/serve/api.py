@@ -4,11 +4,22 @@ Each function takes the store — ``tables: Mapping[str, DataFrame]`` keyed
 per ``datamodel.schemas.FAEXPORT_SCHEMAS`` — and restates one route's
 query lifecycle (SURVEY.md §3.1) as a single Spark plan:
 
-- Point lookups (view_submission, view_user, hash search) **filter the
-  snapshot scan first**, so partition pruning on ``website_id`` and
-  row-group pruning on the site id happen before any join/shuffle —
-  the Spark analog of the reference's covering indexes
-  (reference: faexport_db/schema/indexes.sql:10-11,21).
+- Point lookups (view_submission, view_submission_snapshots,
+  view_user, hash search) are one predicate on a whole-store plan that
+  is built once per store (``_store_plan``), so a call builds only its
+  predicate. Catalyst pushes an entity predicate below the merge
+  aggregates into the snapshot scans (partition pruning on
+  ``website_id``, a pushed filter on the site id) and the search's
+  semi-join down onto the snapshot scan — the Spark analog of the
+  reference's covering indexes (reference:
+  faexport_db/schema/indexes.sql:10-11,21). tests/test_plans.py pins
+  both pushdowns. The child tables are not restricted: the keyword,
+  file and hash aggregates still scan their whole tables on every
+  lookup. Restricting them below their aggregates, by a broadcast
+  semi-join of the entity's snapshot ids or by a collected ``isin`` of
+  them, was measured and lost (ROADMAP direction 1): the semi-join
+  gained nothing, and the ``isin`` literals are inlined into the
+  generated Java, so every lookup recompiled.
 - Child attach is one nested aggregation, not the reference's N+1
   IN-list round-trips (reference: faexport_db/models/submission.py:149-168).
 - Listing/count endpoints return DataFrames (distributed; caller limits
@@ -25,7 +36,8 @@ from __future__ import annotations
 
 import base64
 import json
-from collections.abc import Mapping
+import weakref
+from collections.abc import Callable, Mapping
 from typing import Any
 
 from pyspark.sql import DataFrame, Row
@@ -75,25 +87,74 @@ def _entity_filter(df: DataFrame, website_id: str, id_col: str, site_id: str) ->
     )
 
 
+# Whole-store serve plans, each built on first use once per store and
+# weakly keyed on the table it is built over, so an entry is released
+# with the store. An entry also records the other tables its plan read
+# and is reused only while each is the same object: a DataFrame pins
+# its file listing, so reuse serves exactly the data the caller's
+# mapping names. Nothing is cached or persisted; concurrent first calls
+# may both build, and the last one is kept.
+_SUBMISSION_INPUTS = (
+    "submission_snapshot_keywords",
+    "submission_snapshot_files",
+    "submission_snapshot_file_hashes",
+    "archive_contributors",
+)
+_plans_by_store: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _store_plan(
+    tables: Tables,
+    build: Callable[[Tables], DataFrame],
+    key: str = "submission_snapshots",
+    inputs: tuple[str, ...] = _SUBMISSION_INPUTS,
+) -> DataFrame:
+    """``build(tables)`` over the whole store, lazy and memoized on
+    ``tables[key]`` while the ``inputs`` tables stay the same objects;
+    a lookup adds one predicate on top."""
+    deps = tuple(tables.get(name) for name in inputs)
+    plans = _plans_by_store.get(tables[key])
+    if plans is None:
+        plans = _plans_by_store[tables[key]] = {}
+    hit = plans.get(build)
+    if hit is None or any(a is not b for a, b in zip(hit[0], deps)):
+        hit = plans[build] = (deps, build(tables))
+    return hit[1]
+
+
+def _merged_store(tables: Tables) -> DataFrame:
+    return merged_submissions(
+        tables["submission_snapshots"],
+        keywords=tables.get("submission_snapshot_keywords"),
+        files=tables.get("submission_snapshot_files"),
+        file_hashes=tables.get("submission_snapshot_file_hashes"),
+    )
+
+
+def _merged_user_store(tables: Tables) -> DataFrame:
+    return merged_users(tables["user_snapshots"])
+
+
+def _merged_submission(tables: Tables, website_id: str, site_submission_id: str) -> DataFrame:
+    merged = _store_plan(tables, _merged_store)
+    return _entity_filter(merged, website_id, "site_submission_id", site_submission_id)
+
+
+def _merged_user(tables: Tables, website_id: str, site_user_id: str) -> DataFrame:
+    merged = _store_plan(tables, _merged_user_store, "user_snapshots", ())
+    return _entity_filter(merged, website_id, "site_user_id", site_user_id)
+
+
 def view_submission(
     tables: Tables, website_id: str, site_submission_id: str
 ) -> dict | None:
     """GET /api/view/submissions/<site>/<id>.json (web.py:68-78).
 
-    Filter → merge → assemble: the merge aggregation only ever sees the
-    one entity's snapshots because the compound-key filter sits below it
-    in the plan (pushed to the parquet scan).
+    The entity predicate sits on the store's memoized merged plan;
+    Catalyst pushes it below both merge aggregates into both snapshot
+    scans (see the module docstring for what still scans in full).
     """
-    snaps = _entity_filter(
-        tables["submission_snapshots"], website_id, "site_submission_id", site_submission_id
-    )
-    merged = merged_submissions(
-        snaps,
-        keywords=tables.get("submission_snapshot_keywords"),
-        files=tables.get("submission_snapshot_files"),
-        file_hashes=tables.get("submission_snapshot_file_hashes"),
-    )
-    row = merged.first()
+    row = _merged_submission(tables, website_id, site_submission_id).first()
     if row is None:
         return None
     return {
@@ -135,11 +196,10 @@ def view_submission(
 
 
 def view_user(tables: Tables, website_id: str, site_user_id: str) -> dict | None:
-    """GET /api/view/users/<site>/<id>.json (web.py:112-122)."""
-    snaps = _entity_filter(
-        tables["user_snapshots"], website_id, "site_user_id", site_user_id
-    )
-    row = merged_users(snaps).first()
+    """GET /api/view/users/<site>/<id>.json (web.py:112-122). The
+    entity predicate sits on the store's memoized merged-user plan and
+    reaches the user snapshot scan."""
+    row = _merged_user(tables, website_id, site_user_id).first()
     if row is None:
         return None
     return {
@@ -163,7 +223,7 @@ def view_user(tables: Tables, website_id: str, site_user_id: str) -> dict | None
 # ---------------------------------------------------------------------------
 
 
-def _nested_submission_snapshots(tables: Tables, snaps: DataFrame) -> DataFrame:
+def _nested_submission_snapshots(tables: Tables) -> DataFrame:
     """Snapshot rows with contributor + nested children attached — the
     per-snapshot web shape (reference: models/submission.py:256-278),
     built as one plan instead of per-snapshot child fetches."""
@@ -171,7 +231,9 @@ def _nested_submission_snapshots(tables: Tables, snaps: DataFrame) -> DataFrame:
         F.col("contributor_id").alias("archive_contributor_id"),
         F.col("name").alias("contributor_name"),
     )
-    out = snaps.join(F.broadcast(contrib), "archive_contributor_id", "left")
+    out = tables["submission_snapshots"].join(
+        F.broadcast(contrib), "archive_contributor_id", "left"
+    )
 
     kw = (
         tables["submission_snapshot_keywords"]
@@ -244,19 +306,21 @@ def _snapshot_web_dict(row: Row) -> dict:
     }
 
 
+def _submission_history(tables: Tables, website_id: str, site_submission_id: str) -> DataFrame:
+    nested = _store_plan(tables, _nested_submission_snapshots)
+    return _entity_filter(nested, website_id, "site_submission_id", site_submission_id).orderBy(
+        F.desc("scan_datetime"), F.desc("submission_snapshot_id")
+    )
+
+
 def view_submission_snapshots(
     tables: Tables, website_id: str, site_submission_id: str
 ) -> dict | None:
     """GET /api/view/submissions/<site>/<id>/snapshots.json (web.py:81-94).
-    Snapshots sorted newest-first (models/submission.py:127-133)."""
-    snaps = _entity_filter(
-        tables["submission_snapshots"], website_id, "site_submission_id", site_submission_id
-    )
-    rows = (
-        _nested_submission_snapshots(tables, snaps)
-        .orderBy(F.desc("scan_datetime"), F.desc("submission_snapshot_id"))
-        .collect()
-    )
+    Snapshots sorted newest-first (models/submission.py:127-133). The
+    entity predicate sits on the store's memoized nested plan and
+    reaches the snapshot scan."""
+    rows = _submission_history(tables, website_id, site_submission_id).collect()
     if not rows:
         return None
     return {
@@ -447,13 +511,7 @@ def list_archive_contributors(tables: Tables) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def search_hash(tables: Tables, algo_id: int, hash_value: bytes) -> list[dict]:
-    """POST /api/hash_search/ (web.py:202-216 →
-    models/submission.py:400-431). The hash predicate sits on the
-    file_hashes scan; the snapshot side is reached through two
-    ascending joins, then children attach once for the matched set —
-    not per-snapshot as the reference does (models/submission.py:416-431).
-    """
+def _hash_search(tables: Tables, algo_id: int, hash_value: bytes) -> DataFrame:
     matches = (
         tables["submission_snapshot_file_hashes"]
         .filter((F.col("algo_id") == algo_id) & (F.col("hash_value") == F.lit(hash_value)))
@@ -462,15 +520,22 @@ def search_hash(tables: Tables, algo_id: int, hash_value: bytes) -> list[dict]:
         .select("submission_snapshot_id")
         .distinct()
     )
-    snaps = tables["submission_snapshots"].join(
-        F.broadcast(matches), "submission_snapshot_id", "left_semi"
+    nested = _store_plan(tables, _nested_submission_snapshots)
+    return nested.join(F.broadcast(matches), "submission_snapshot_id", "left_semi").orderBy(
+        "submission_snapshot_id"
     )
-    rows = (
-        _nested_submission_snapshots(tables, snaps)
-        .orderBy("submission_snapshot_id")
-        .collect()
-    )
-    return [_snapshot_web_dict(r) for r in rows]
+
+
+def search_hash(tables: Tables, algo_id: int, hash_value: bytes) -> list[dict]:
+    """POST /api/hash_search/ (web.py:202-216 →
+    models/submission.py:400-431). The hash predicate sits on the
+    file_hashes scan and resolves to snapshot ids through the files
+    table. Those ids are broadcast and semi-joined to the store's
+    memoized nested plan; Catalyst pushes the semi-join down onto the
+    snapshot scan. Children attach once for the matched set, not per
+    snapshot as the reference does (models/submission.py:416-431).
+    """
+    return [_snapshot_web_dict(r) for r in _hash_search(tables, algo_id, hash_value).collect()]
 
 
 # ---------------------------------------------------------------------------

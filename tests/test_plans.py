@@ -69,6 +69,138 @@ def test_merged_users_is_single_shuffle(spark, sf_small):
     assert_plan(merged, max_python_evals=0)
 
 
+@pytest.fixture(scope="module")
+def parquet_store(spark, tmp_path_factory):
+    """The serve fixture store written the way the archive writes it
+    (snapshot tables partitioned by website_id) and read back, so the plans
+    have file scans with partition and pushed filters."""
+    import tests.fixtures_faexport as fx
+    from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT
+
+    base = tmp_path_factory.mktemp("store")
+    store = {}
+    for name, make in (
+        ("submission_snapshots", fx.submission_snapshots),
+        ("submission_snapshot_keywords", fx.keywords),
+        ("submission_snapshot_files", fx.files),
+        ("submission_snapshot_file_hashes", fx.file_hashes),
+        ("user_snapshots", fx.user_snapshots),
+    ):
+        path = str(base / name)
+        DEFAULT_FORMAT.append(
+            make(spark), path, ["website_id"] if name.endswith("_snapshots") else None
+        )
+        store[name] = DEFAULT_FORMAT.read(spark, path)
+    store["archive_contributors"] = spark.createDataFrame(
+        [(1, "scraper-one", "key-1")], "contributor_id bigint, name string, api_key string"
+    )
+    return store
+
+
+def _nodes(plan) -> list:
+    """Every node of a JVM plan tree, logical or physical."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _table_of(node) -> str:
+    """Directory name of the table a file scan or relation reads."""
+    return node.relation().location().rootPaths().apply(0).getName()
+
+
+def _assert_entity_scans(df, table: str, id_filter: str, n: int) -> None:
+    """Each of the ``n`` scans of ``table`` in ``df``'s plan carries the
+    entity predicate: website_id = fa as a partition filter and
+    ``id_filter`` as a data filter."""
+    import re
+
+    scans = [
+        node
+        for node in _nodes(df._jdf.queryExecution().sparkPlan())
+        if _kind(node) == "FileSourceScanExec" and _table_of(node) == table
+    ]
+    assert len(scans) == n
+    for scan in scans:
+        assert re.search(r"\(website_id#\d+ = fa\)", scan.partitionFilters().toString())
+        assert re.search(id_filter, scan.dataFilters().toString())
+
+
+def test_view_submission_filter_reaches_both_snapshot_scans(spark, parquet_store):
+    """A view is one entity predicate on the store's memoized merged
+    plan. Catalyst must push it below both merge aggregates into both
+    snapshot scans, as a partition filter on website_id and a data
+    filter on site_submission_id; otherwise each lookup would merge the
+    whole store. Shuffles stay at the per-call plan's 5."""
+    from faexport_db_spark.serve.api import _merged_submission
+
+    view = _merged_submission(parquet_store, "fa", "101")
+    assert_plan(view, requires_pushed_filter="site_submission_id", max_python_evals=0, max_shuffles=5)
+    _assert_entity_scans(view, "submission_snapshots", r"\(site_submission_id#\d+ = 101\)", 2)
+
+
+def test_view_user_filter_reaches_the_user_scan(spark, parquet_store):
+    """view_user's predicate on the memoized merged-user plan must pass
+    the merge aggregate and reach the user snapshot scan."""
+    from faexport_db_spark.serve.api import _merged_user
+
+    view = _merged_user(parquet_store, "fa", "u1")
+    assert_plan(view, max_python_evals=0, max_shuffles=1)
+    _assert_entity_scans(view, "user_snapshots", r"\(site_user_id#\d+ = u1\)", 1)
+
+
+def test_submission_history_filter_reaches_the_snapshot_scan(spark, parquet_store):
+    """view_submission_snapshots' predicate on the memoized nested plan
+    must pass the child left joins and reach the snapshot scan, with the
+    per-call plan's 4 shuffles."""
+    from faexport_db_spark.serve.api import _submission_history
+
+    history = _submission_history(parquet_store, "fa", "101")
+    assert_plan(history, max_python_evals=0, max_shuffles=4)
+    _assert_entity_scans(history, "submission_snapshots", r"\(site_submission_id#\d+ = 101\)", 1)
+
+
+def test_merged_submissions_plans_no_sort_aggregate(spark, parquet_store):
+    """The archive export and serve path merge on ObjectHashAggregate:
+    its collect_list aggregates carry every max_by with them, so no
+    partition is sorted (the scalar-only merges do sort; merge.py)."""
+    from faexport_db_spark.serve.api import _merged_store, _merged_submission, _store_plan
+
+    merged = _store_plan(parquet_store, _merged_store)
+    for df in (merged, _merged_submission(parquet_store, "fa", "101")):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "SortAggregate" not in plan, plan
+
+
+def test_search_hash_semi_join_sits_on_the_snapshot_scan(spark, parquet_store):
+    """The search's LeftSemi on the matched snapshot ids is written on
+    top of the store's nested plan; Catalyst must push it down to sit
+    directly on the submission_snapshots relation (only filters and
+    projections between), below every child join and aggregate."""
+    from faexport_db_spark.serve.api import _hash_search
+
+    search = _hash_search(parquet_store, 1, b"\x01\x01")
+    assert_plan(search, max_python_evals=0, max_shuffles=5)
+    [semi] = [
+        node
+        for node in _nodes(search._jdf.queryExecution().optimizedPlan())
+        if _kind(node) == "Join" and node.joinType().toString() == "LeftSemi"
+    ]
+    left = semi.left()
+    while _kind(left) in ("Filter", "Project"):
+        left = left.child()
+    assert _kind(left) == "LogicalRelation", left.toString()
+    assert _table_of(left) == "submission_snapshots"
+
+
 def test_merged_entity_flagship_plan(spark, sf_small):
     """Flagship rollup: dims broadcast, no cartesian anywhere."""
     q = QUERIES["merged_entity"](spark, sf_small)

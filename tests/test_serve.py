@@ -52,7 +52,6 @@ def test_authenticate_contributor(store):
     assert serve.authenticate_contributor(store, "bad") is None
 
 
-@pytest.mark.slow
 def test_view_submission_merged(store):
     data = serve.view_submission(store, "fa", "101")
     assert data["cache_data"]["snapshot_count"] == 3
@@ -76,12 +75,81 @@ def test_view_submission_missing(store):
     assert serve.view_submission(store, "fa", "999") is None
 
 
+def test_view_submission_alternating_entities_share_one_store_plan(store):
+    """Lookups on one store reuse its merged plan; each entity predicate
+    still selects only that entity's truth."""
+    truth = {
+        ("fa", "101"): (3, "Old Title", ["cat", "dog"]),
+        ("fa", "102"): (2, "Keep", []),
+        ("e621", "201"): (1, None, []),
+        ("fa", "999"): None,
+    }
+    merged = serve.api._store_plan(store, serve.api._merged_store)
+    for key in [("fa", "101"), ("fa", "102"), ("fa", "999"), ("e621", "201"), ("fa", "101"), ("fa", "102")]:
+        data = serve.view_submission(store, *key)
+        if truth[key] is None:
+            assert data is None
+            continue
+        got = (
+            data["cache_data"]["snapshot_count"],
+            data["submission_data"]["title"],
+            [k["keyword"] for k in data["submission_data"]["keywords"]],
+        )
+        assert got == truth[key], key
+    assert serve.api._store_plan(store, serve.api._merged_store) is merged
+
+
+def test_view_submission_sees_a_replaced_child_table(store):
+    """The store plan is reused only while every table it read is the
+    same object: a mapping with one child table swapped gets its own."""
+    kw = store["submission_snapshot_keywords"]
+    swapped = {**store, "submission_snapshot_keywords": kw.filter(F.col("keyword") != "dog")}
+    data = serve.view_submission(swapped, "fa", "101")
+    assert [k["keyword"] for k in data["submission_data"]["keywords"]] == ["cat"]
+    again = serve.view_submission(store, "fa", "101")
+    assert [k["keyword"] for k in again["submission_data"]["keywords"]] == ["cat", "dog"]
+
+
+def test_store_plans_are_released_with_the_store(store):
+    import gc
+    import weakref
+
+    memo = serve.api._plans_by_store
+    local = {
+        **store,
+        "submission_snapshots": store["submission_snapshots"].filter(F.lit(True)),
+        "user_snapshots": store["user_snapshots"].filter(F.lit(True)),
+    }
+    gc.collect()
+    before = len(memo)
+    assert serve.view_submission(local, "fa", "102")["submission_data"]["title"] == "Keep"
+    assert serve.view_user(local, "weasyl", "u9")["user_data"]["display_name"] == "W9"
+    assert len(memo) == before + 2
+    snaps = weakref.ref(local["submission_snapshots"])
+    users = weakref.ref(local["user_snapshots"])
+    del local
+    gc.collect()
+    assert snaps() is None and users() is None
+    assert len(memo) == before
+
+
 def test_view_user_merged(store):
     data = serve.view_user(store, "fa", "u1")
     assert data["user_data"]["is_deleted"] is True
     assert data["user_data"]["display_name"] == "Name1"
     assert data["user_data"]["extra_data"] == {"w": [{"n": "a"}], "p": 2}
     assert serve.view_user(store, "fa", "zz") is None
+
+
+def test_view_user_reuses_the_store_plan_per_user_table(store):
+    """Alternating user lookups on one store each get their own truth,
+    and a mapping with a replaced user table is answered from it."""
+    for key, name in [(("fa", "u1"), "Name1"), (("weasyl", "u9"), "W9"), (("fa", "zz"), None)] * 2:
+        data = serve.view_user(store, *key)
+        assert (data and data["user_data"]["display_name"]) == name, key
+    swapped = {**store, "user_snapshots": store["user_snapshots"].filter(F.col("user_snapshot_id") != 3)}
+    assert serve.view_user(swapped, "weasyl", "u9") is None
+    assert serve.view_user(store, "weasyl", "u9")["user_data"]["display_name"] == "W9"
 
 
 def test_view_submission_snapshots_newest_first(store):
@@ -179,11 +247,16 @@ def test_push_ingest_appends_with_consistent_ids(spark, store):
         }
     )
     payloads = spark.createDataFrame([(payload,)], "payload string")
+    assert serve.view_submission(store, "fa", "5000") is None
+    assert serve.view_user(store, "fa", "artist9") is None
     out = serve.push_ingest(store, payloads, contributor_id=1)
 
+    # the output store gets its own plan: the memoized one of `store`
+    # must not answer for it
     data = serve.view_submission(out, "fa", "5000")
     assert data["submission_data"]["title"] == "fresh art"
     assert [k["keyword"] for k in data["submission_data"]["keywords"]] == ["k1", "k2"]
+    assert serve.view_user(out, "fa", "artist9")["user_data"]["display_name"] == "Artist Nine"
     # pre-existing entities unaffected: children didn't cross-attach
     before = serve.view_submission(store, "fa", "101")
     after = serve.view_submission(out, "fa", "101")
