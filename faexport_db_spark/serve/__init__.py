@@ -3,8 +3,7 @@
 Flask itself is out of engine scope (SURVEY.md §7.2 step 6); these are
 the query-layer functions each route in reference web.py delegates to,
 re-expressed as DataFrame plans. A point lookup is one entity predicate
-on a whole-store plan built once per store; Catalyst pushes it into the
-snapshot scans (see ``api``).
+over a serve view materialized once per store (see ``api``).
 """
 
 from faexport_db_spark.serve.api import (  # noqa: F401

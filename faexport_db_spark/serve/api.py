@@ -5,21 +5,16 @@ per ``datamodel.schemas.FAEXPORT_SCHEMAS`` — and restates one route's
 query lifecycle (SURVEY.md §3.1) as a single Spark plan:
 
 - Point lookups (view_submission, view_submission_snapshots,
-  view_user, hash search) are one predicate on a whole-store plan that
-  is built once per store (``_store_plan``), so a call builds only its
-  predicate. Catalyst pushes an entity predicate below the merge
-  aggregates into the snapshot scans (partition pruning on
-  ``website_id``, a pushed filter on the site id) and the search's
-  semi-join down onto the snapshot scan — the Spark analog of the
-  reference's covering indexes (reference:
+  view_user, hash search) are one predicate over a serve view that is
+  materialized once per store (``_store_plan``): the merged
+  submissions, the nested snapshot rows, or the merged users. The
+  first lookup of each kind on a store pays the whole-store build;
+  every later one filters the cached rows — no file scan, no merge
+  aggregate, no child join — the Spark analog of the reference's
+  indexes, which its write path keeps current (reference:
   faexport_db/schema/indexes.sql:10-11,21). tests/test_plans.py pins
-  both pushdowns. The child tables are not restricted: the keyword,
-  file and hash aggregates still scan their whole tables on every
-  lookup. Restricting them below their aggregates, by a broadcast
-  semi-join of the entity's snapshot ids or by a collected ``isin`` of
-  them, was measured and lost (ROADMAP direction 1): the semi-join
-  gained nothing, and the ``isin`` literals are inlined into the
-  generated Java, so every lookup recompiled.
+  that shape. The cached rows are not sorted by the lookup key, so a
+  lookup still reads the whole view from memory (ROADMAP direction 1).
 - Child attach is one nested aggregation, not the reference's N+1
   IN-list round-trips (reference: faexport_db/models/submission.py:149-168).
 - Listing/count endpoints return DataFrames (distributed; caller limits
@@ -87,13 +82,18 @@ def _entity_filter(df: DataFrame, website_id: str, id_col: str, site_id: str) ->
     )
 
 
-# Whole-store serve plans, each built on first use once per store and
-# weakly keyed on the table it is built over, so an entry is released
-# with the store. An entry also records the other tables its plan read
-# and is reused only while each is the same object: a DataFrame pins
-# its file listing, so reuse serves exactly the data the caller's
-# mapping names. Nothing is cached or persisted; concurrent first calls
-# may both build, and the last one is kept.
+# Serve views, each built and persisted on first use once per store and
+# weakly keyed on the table it is built over. An entry also records the
+# other tables its view read and is reused only while each is the same
+# object, so reuse serves the data the caller's mapping names. A view
+# shares its file listings with the store's own DataFrames: when Spark
+# writes to a path the view reads, it refreshes that listing for both,
+# and the next lookup rebuilds the view over the new files. A view is
+# persisted, not checkpointed: a lost block is recomputed from its
+# lineage instead of failing every later lookup. Its cached data is
+# released when the key table is collected or when the entry is
+# replaced because an input changed. Concurrent first calls may both
+# build; the last one is kept.
 _SUBMISSION_INPUTS = (
     "submission_snapshot_keywords",
     "submission_snapshot_files",
@@ -109,16 +109,23 @@ def _store_plan(
     key: str = "submission_snapshots",
     inputs: tuple[str, ...] = _SUBMISSION_INPUTS,
 ) -> DataFrame:
-    """``build(tables)`` over the whole store, lazy and memoized on
-    ``tables[key]`` while the ``inputs`` tables stay the same objects;
-    a lookup adds one predicate on top."""
+    """``build(tables)`` over the whole store, persisted and memoized
+    on ``tables[key]`` while the ``inputs`` tables stay the same
+    objects; a lookup adds one predicate on top."""
+    owner = tables[key]
     deps = tuple(tables.get(name) for name in inputs)
-    plans = _plans_by_store.get(tables[key])
-    if plans is None:
-        plans = _plans_by_store[tables[key]] = {}
-    hit = plans.get(build)
+    views = _plans_by_store.get(owner)
+    if views is None:
+        views = _plans_by_store[owner] = {}
+    hit = views.get(build)
     if hit is None or any(a is not b for a, b in zip(hit[0], deps)):
-        hit = plans[build] = (deps, build(tables))
+        if hit is not None:
+            hit[2]()  # releases the replaced view
+        view = build(tables).persist()
+        # atexit off: the session may be stopped before the interpreter exits
+        release = weakref.finalize(owner, view.unpersist, False)
+        release.atexit = False
+        hit = views[build] = (deps, view, release)
     return hit[1]
 
 
@@ -150,9 +157,9 @@ def view_submission(
 ) -> dict | None:
     """GET /api/view/submissions/<site>/<id>.json (web.py:68-78).
 
-    The entity predicate sits on the store's memoized merged plan;
-    Catalyst pushes it below both merge aggregates into both snapshot
-    scans (see the module docstring for what still scans in full).
+    The entity predicate filters the store's materialized merged view;
+    the merge aggregates and child joins ran once, on the store's first
+    view.
     """
     row = _merged_submission(tables, website_id, site_submission_id).first()
     if row is None:
@@ -197,8 +204,8 @@ def view_submission(
 
 def view_user(tables: Tables, website_id: str, site_user_id: str) -> dict | None:
     """GET /api/view/users/<site>/<id>.json (web.py:112-122). The
-    entity predicate sits on the store's memoized merged-user plan and
-    reaches the user snapshot scan."""
+    entity predicate filters the store's materialized merged-user
+    view."""
     row = _merged_user(tables, website_id, site_user_id).first()
     if row is None:
         return None
@@ -318,8 +325,7 @@ def view_submission_snapshots(
 ) -> dict | None:
     """GET /api/view/submissions/<site>/<id>/snapshots.json (web.py:81-94).
     Snapshots sorted newest-first (models/submission.py:127-133). The
-    entity predicate sits on the store's memoized nested plan and
-    reaches the snapshot scan."""
+    entity predicate filters the store's materialized nested view."""
     rows = _submission_history(tables, website_id, site_submission_id).collect()
     if not rows:
         return None
@@ -512,28 +518,24 @@ def list_archive_contributors(tables: Tables) -> DataFrame:
 
 
 def _hash_search(tables: Tables, algo_id: int, hash_value: bytes) -> DataFrame:
-    matches = (
-        tables["submission_snapshot_file_hashes"]
-        .filter((F.col("algo_id") == algo_id) & (F.col("hash_value") == F.lit(hash_value)))
-        .select("file_id")
-        .join(tables["submission_snapshot_files"].select("file_id", "submission_snapshot_id"), "file_id")
-        .select("submission_snapshot_id")
-        .distinct()
-    )
     nested = _store_plan(tables, _nested_submission_snapshots)
-    return nested.join(F.broadcast(matches), "submission_snapshot_id", "left_semi").orderBy(
-        "submission_snapshot_id"
+    has_hash = F.exists(
+        "files",
+        lambda f: F.exists(
+            f["hashes"],
+            lambda h: (h["algo_id"] == algo_id) & (h["hash_value"] == F.lit(hash_value)),
+        ),
     )
+    return nested.filter(has_hash).orderBy("submission_snapshot_id")
 
 
 def search_hash(tables: Tables, algo_id: int, hash_value: bytes) -> list[dict]:
     """POST /api/hash_search/ (web.py:202-216 →
-    models/submission.py:400-431). The hash predicate sits on the
-    file_hashes scan and resolves to snapshot ids through the files
-    table. Those ids are broadcast and semi-joined to the store's
-    memoized nested plan; Catalyst pushes the semi-join down onto the
-    snapshot scan. Children attach once for the matched set, not per
-    snapshot as the reference does (models/submission.py:416-431).
+    models/submission.py:400-431). The hash predicate filters the
+    store's materialized nested view on its files' hashes, so the
+    matched snapshots come back with their children already attached,
+    not fetched per snapshot as the reference does
+    (models/submission.py:416-431).
     """
     return [_snapshot_web_dict(r) for r in _hash_search(tables, algo_id, hash_value).collect()]
 

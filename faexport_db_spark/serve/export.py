@@ -18,12 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from faexport_db_spark.operators.merge import merged_submission_web_json
-from faexport_db_spark.serve.api import (
-    Tables,
-    _merged_store,
-    _nested_submission_snapshots,
-    _store_plan,
-)
+from faexport_db_spark.serve.api import Tables, _merged_store, _nested_submission_snapshots
 
 _ISO = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
@@ -31,7 +26,7 @@ _ISO = "yyyy-MM-dd'T'HH:mm:ssXXX"
 def snapshot_dump_df(tables: Tables) -> DataFrame:
     """One JSON line per raw submission snapshot, children nested —
     the shape of SubmissionSnapshot.to_web_json (models/submission.py:256-278)."""
-    nested = _store_plan(tables, _nested_submission_snapshots)
+    nested = _nested_submission_snapshots(tables)
     files_json = F.transform(
         "files",
         lambda f: F.struct(
@@ -79,7 +74,7 @@ def snapshot_dump_df(tables: Tables) -> DataFrame:
 def merged_dump_df(tables: Tables) -> DataFrame:
     """One JSON line per merged submission entity (Submission.to_web_json
     shape, models/submission.py:106-125)."""
-    merged = _store_plan(tables, _merged_store)
+    merged = _merged_store(tables)
     return merged_submission_web_json(merged).select(F.col("web_json").alias("value"))
 
 

@@ -53,9 +53,7 @@ def test_hash_search_chain_pushes_predicate_below_joins(spark, sf_small):
     """J3: the search predicate must sit on a scan, not above the
     3-join chain."""
     q = QUERIES["j3_hash_search_chain"](spark, sf_small)
-    assert any(f for f in pushed_filters(q) if f), (
-        "hash-search predicate not pushed to any scan: " + str(pushed_filters(q))
-    )
+    assert_plan(q, requires_pushed_filter="l_partkey")
 
 
 def test_merged_users_is_single_shuffle(spark, sf_small):
@@ -97,108 +95,114 @@ def parquet_store(spark, tmp_path_factory):
     return store
 
 
-def _nodes(plan) -> list:
-    """Every node of a JVM plan tree, logical or physical."""
-    out, stack = [], [plan]
-    while stack:
-        node = stack.pop()
-        out.append(node)
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
-    return out
-
-
 def _kind(node) -> str:
     return node.getClass().getSimpleName()
 
 
-def _table_of(node) -> str:
-    """Directory name of the table a file scan or relation reads."""
-    return node.relation().location().rootPaths().apply(0).getName()
+def _executed_nodes(df) -> list:
+    """Every node of ``df``'s executed physical plan, walked by
+    ``children()``. An adaptive plan is entered at its current plan and
+    a query stage at the plan it wraps. An ``InMemoryTableScanExec`` is
+    a leaf, so the cached plan behind it is not walked; its tree string
+    would print that plan, file scans and exchanges included."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kind = _kind(node)
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
 
 
-def _assert_entity_scans(df, table: str, id_filter: str, n: int) -> None:
-    """Each of the ``n`` scans of ``table`` in ``df``'s plan carries the
-    entity predicate: website_id = fa as a partition filter and
-    ``id_filter`` as a data filter."""
+def _assert_filters_the_cached_view(df, predicates: tuple[str, ...], shuffles: int) -> None:
+    """``df`` reads one in-memory scan of a materialized serve view and
+    no file: each of ``predicates`` is among the scan's predicates, no
+    join runs, ``shuffles`` shuffle exchanges run, and no Python eval
+    sits anywhere in the plan, the cached build included."""
     import re
 
-    scans = [
-        node
-        for node in _nodes(df._jdf.queryExecution().sparkPlan())
-        if _kind(node) == "FileSourceScanExec" and _table_of(node) == table
-    ]
-    assert len(scans) == n
-    for scan in scans:
-        assert re.search(r"\(website_id#\d+ = fa\)", scan.partitionFilters().toString())
-        assert re.search(id_filter, scan.dataFilters().toString())
+    nodes = _executed_nodes(df)
+    kinds = [_kind(node) for node in nodes]
+    assert "FileSourceScanExec" not in kinds, kinds
+    assert not [k for k in kinds if "Join" in k], kinds
+    assert kinds.count("ShuffleExchangeExec") == shuffles, kinds
+    [scan] = [node for node in nodes if _kind(node) == "InMemoryTableScanExec"]
+    pushed = scan.predicates().toString()
+    for predicate in predicates:
+        assert re.search(predicate, pushed), pushed
+    assert_plan(df, max_python_evals=0)
 
 
-def test_view_submission_filter_reaches_both_snapshot_scans(spark, parquet_store):
-    """A view is one entity predicate on the store's memoized merged
-    plan. Catalyst must push it below both merge aggregates into both
-    snapshot scans, as a partition filter on website_id and a data
-    filter on site_submission_id; otherwise each lookup would merge the
-    whole store. Shuffles stay at the per-call plan's 5."""
+def test_view_submission_filters_the_materialized_merged_view(spark, parquet_store):
+    """A view is one entity predicate on the store's materialized merged
+    view: the merge aggregates and child joins ran once, so the lookup
+    scans no file and shuffles nothing."""
     from faexport_db_spark.serve.api import _merged_submission
 
     view = _merged_submission(parquet_store, "fa", "101")
-    assert_plan(view, requires_pushed_filter="site_submission_id", max_python_evals=0, max_shuffles=5)
-    _assert_entity_scans(view, "submission_snapshots", r"\(site_submission_id#\d+ = 101\)", 2)
+    _assert_filters_the_cached_view(
+        view, (r"\(website_id#\d+ = fa\)", r"\(site_submission_id#\d+ = 101\)"), 0
+    )
 
 
-def test_view_user_filter_reaches_the_user_scan(spark, parquet_store):
-    """view_user's predicate on the memoized merged-user plan must pass
-    the merge aggregate and reach the user snapshot scan."""
+def test_view_user_filters_the_materialized_user_view(spark, parquet_store):
+    """view_user is one entity predicate on the store's materialized
+    merged-user view."""
     from faexport_db_spark.serve.api import _merged_user
 
     view = _merged_user(parquet_store, "fa", "u1")
-    assert_plan(view, max_python_evals=0, max_shuffles=1)
-    _assert_entity_scans(view, "user_snapshots", r"\(site_user_id#\d+ = u1\)", 1)
+    _assert_filters_the_cached_view(
+        view, (r"\(website_id#\d+ = fa\)", r"\(site_user_id#\d+ = u1\)"), 0
+    )
 
 
-def test_submission_history_filter_reaches_the_snapshot_scan(spark, parquet_store):
-    """view_submission_snapshots' predicate on the memoized nested plan
-    must pass the child left joins and reach the snapshot scan, with the
-    per-call plan's 4 shuffles."""
+def test_submission_history_filters_the_materialized_nested_view(spark, parquet_store):
+    """view_submission_snapshots filters the store's materialized nested
+    view; its one shuffle is the newest-first sort of the entity's rows."""
     from faexport_db_spark.serve.api import _submission_history
 
     history = _submission_history(parquet_store, "fa", "101")
-    assert_plan(history, max_python_evals=0, max_shuffles=4)
-    _assert_entity_scans(history, "submission_snapshots", r"\(site_submission_id#\d+ = 101\)", 1)
+    _assert_filters_the_cached_view(
+        history, (r"\(website_id#\d+ = fa\)", r"\(site_submission_id#\d+ = 101\)"), 1
+    )
 
 
-def test_merged_submissions_plans_no_sort_aggregate(spark, parquet_store):
-    """The archive export and serve path merge on ObjectHashAggregate:
-    its collect_list aggregates carry every max_by with them, so no
-    partition is sorted (the scalar-only merges do sort; merge.py)."""
-    from faexport_db_spark.serve.api import _merged_store, _merged_submission, _store_plan
-
-    merged = _store_plan(parquet_store, _merged_store)
-    for df in (merged, _merged_submission(parquet_store, "fa", "101")):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortAggregate" not in plan, plan
-
-
-def test_search_hash_semi_join_sits_on_the_snapshot_scan(spark, parquet_store):
-    """The search's LeftSemi on the matched snapshot ids is written on
-    top of the store's nested plan; Catalyst must push it down to sit
-    directly on the submission_snapshots relation (only filters and
-    projections between), below every child join and aggregate."""
+def test_search_hash_filters_the_materialized_nested_view(spark, parquet_store):
+    """A hash search is one predicate on the nested view's file hashes,
+    with no join to the file or hash tables; its one shuffle is the
+    sort of the matched snapshots."""
     from faexport_db_spark.serve.api import _hash_search
 
     search = _hash_search(parquet_store, 1, b"\x01\x01")
-    assert_plan(search, max_python_evals=0, max_shuffles=5)
-    [semi] = [
-        node
-        for node in _nodes(search._jdf.queryExecution().optimizedPlan())
-        if _kind(node) == "Join" and node.joinType().toString() == "LeftSemi"
-    ]
-    left = semi.left()
-    while _kind(left) in ("Filter", "Project"):
-        left = left.child()
-    assert _kind(left) == "LogicalRelation", left.toString()
-    assert _table_of(left) == "submission_snapshots"
+    _assert_filters_the_cached_view(
+        search, (r"^List\(exists\(files#\d+, .*hash_value = 0x0101\)",), 1
+    )
+
+
+def test_merged_submissions_plans_no_sort_aggregate(spark, parquet_store):
+    """The archive export merges on ObjectHashAggregate: its
+    collect_list aggregates carry every max_by with them, so no
+    partition is sorted (the scalar-only merges do sort; merge.py)."""
+    from faexport_db_spark.serve.api import _merged_store
+
+    plan = _merged_store(parquet_store)._jdf.queryExecution().executedPlan().toString()
+    assert "ObjectHashAggregate" in plan and "SortAggregate" not in plan, plan
+
+
+def test_pushed_filter_check_ignores_inferred_null_checks(spark, sf_small):
+    """Catalyst infers IsNotNull(user_id) from a predicate it cannot push;
+    that null check alone must not pass ``requires_pushed_filter``."""
+    ev = load_table(spark, sf_small, "events")
+    q = ev.filter(F.col("user_id") + 1 == 8)
+    assert any("IsNotNull(user_id)" in f for f in pushed_filters(q)), pushed_filters(q)
+    with pytest.raises(AssertionError, match="no scan pushed a filter on 'user_id'"):
+        assert_plan(q, requires_pushed_filter="user_id")
 
 
 def test_merged_entity_flagship_plan(spark, sf_small):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 import fixtures_faexport as fx
@@ -111,10 +112,13 @@ def test_view_submission_sees_a_replaced_child_table(store):
 
 
 def test_store_plans_are_released_with_the_store(store):
+    """A store's memo entries and the views they materialized go when
+    the store's key tables are collected."""
     import gc
     import weakref
 
-    memo = serve.api._plans_by_store
+    api = serve.api
+    memo = api._plans_by_store
     local = {
         **store,
         "submission_snapshots": store["submission_snapshots"].filter(F.lit(True)),
@@ -125,12 +129,59 @@ def test_store_plans_are_released_with_the_store(store):
     assert serve.view_submission(local, "fa", "102")["submission_data"]["title"] == "Keep"
     assert serve.view_user(local, "weasyl", "u9")["user_data"]["display_name"] == "W9"
     assert len(memo) == before + 2
+    views = [
+        api._store_plan(local, api._merged_store),
+        api._store_plan(local, api._merged_user_store, "user_snapshots", ()),
+    ]
+    assert all(v.storageLevel != StorageLevel.NONE for v in views)
     snaps = weakref.ref(local["submission_snapshots"])
     users = weakref.ref(local["user_snapshots"])
     del local
     gc.collect()
     assert snaps() is None and users() is None
     assert len(memo) == before
+    assert all(v.storageLevel == StorageLevel.NONE for v in views)
+
+
+def test_replaced_store_view_releases_its_materialization(store):
+    """An entry rebuilt because one of its input tables changed releases
+    the view it replaces; the new view is materialized in its place."""
+    api = serve.api
+
+    def keywords(tables):
+        data = serve.view_submission(tables, "fa", "101")
+        return [k["keyword"] for k in data["submission_data"]["keywords"]]
+
+    snaps = store["submission_snapshots"]
+    local = {**store, "submission_snapshots": snaps.filter(F.col("submission_snapshot_id") > 0)}
+    assert keywords(local) == ["cat", "dog"]
+    old = api._store_plan(local, api._merged_store)
+    assert old.storageLevel != StorageLevel.NONE
+    kw = local["submission_snapshot_keywords"]
+    swapped = {**local, "submission_snapshot_keywords": kw.filter(F.col("keyword") != "dog")}
+    assert keywords(swapped) == ["cat"]
+    assert old.storageLevel == StorageLevel.NONE
+    assert api._store_plan(swapped, api._merged_store).storageLevel != StorageLevel.NONE
+
+
+def test_a_spark_write_to_a_store_path_refreshes_its_view(spark, store, tmp_path):
+    """Spark refreshes a persisted view, and the file listing it shares
+    with the store's own DataFrame, when it writes to a path the view
+    reads: after an append, the same store object answers from the new
+    files."""
+    from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT
+
+    path = str(tmp_path / "submission_snapshots")
+    snaps = store["submission_snapshots"]
+    DEFAULT_FORMAT.append(snaps, path, ["website_id"])
+    local = {**store, "submission_snapshots": DEFAULT_FORMAT.read(spark, path)}
+    assert serve.view_submission(local, "fa", "101")["cache_data"]["snapshot_count"] == 3
+    rescan = snaps.filter(F.col("submission_snapshot_id") == 1).withColumn(
+        "submission_snapshot_id", F.lit(99).cast("long")
+    )
+    DEFAULT_FORMAT.append(rescan, path, ["website_id"])
+    assert serve.view_submission(local, "fa", "101")["cache_data"]["snapshot_count"] == 4
+    assert local["submission_snapshots"].count() == snaps.count() + 1
 
 
 def test_view_user_merged(store):
@@ -169,7 +220,9 @@ def test_view_user_snapshots(store):
     data = serve.view_user_snapshots(store, "fa", "u1")
     assert data["snapshot_count"] == 2
     assert [s["user_snapshot_id"] for s in data["snapshots"]] == [2, 1]
-    assert data["snapshots"][1]["user_data"]["display_name"] == "N1" or True
+    newest, oldest = data["snapshots"]
+    assert newest["user_data"]["display_name"] is None
+    assert oldest["user_data"]["display_name"] == "Name1"
     assert serve.view_user_snapshots(store, "fa", "nobody") is None
 
 
