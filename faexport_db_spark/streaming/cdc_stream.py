@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from faexport_db_spark.datamodel.table_format import ParquetFormat, TableFormat
-from faexport_db_spark.streaming.dedup_stream import _batch_marker, _stream_id
+from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT, TableFormat
+from faexport_db_spark.streaming.microbatch import _batch_marker, _read_store_or_none
 
 PB_COL = "pb"
 DEL_COL = "__del"
@@ -52,12 +52,11 @@ DEL_COL = "__del"
 def read_cdc_state(
     spark: SparkSession,
     store_path: str,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame:
     """Current materialized state: the store minus tombstone markers
     and internal columns — column-for-column what batch ``cdc_apply``
     of the full log returns (minus the changelog's op column)."""
-    fmt = fmt or ParquetFormat()
     return (
         fmt.read(spark, store_path)
         .filter(~F.col(DEL_COL))
@@ -73,15 +72,16 @@ def cdc_apply_batch_against_store(
     op_col: str = "op",
     delete_op: str = "D",
     n_buckets: int = 16,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
     batch_id: int | None = None,
     stream_id: str | None = None,
 ) -> None:
-    """Apply one changelog micro-batch to the materialized store."""
-    from faexport_db_spark.streaming.dedup_stream import _read_store_or_none
-
+    """Apply one changelog micro-batch to the materialized store.
+    Stream it with ``start_batch_stream(changelog,
+    cdc_apply_batch_against_store, checkpoint, store_path, key_cols,
+    seq_col)``; ``changelog`` carries ``key_cols + [seq_col, op_col]``
+    plus payload columns."""
     spark = batch.sparkSession
-    fmt = fmt or ParquetFormat()
     committed, mark = _batch_marker(spark, store_path, batch_id, stream_id)
     if committed:
         return
@@ -112,32 +112,3 @@ def cdc_apply_batch_against_store(
         rows, store_path, [*key_cols, PB_COL], [PB_COL], keys=touched
     )
     mark()
-
-
-def start_streaming_cdc_apply(
-    spark: SparkSession,
-    changelog: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    key_cols: list[str],
-    seq_col: str,
-    trigger: dict | None = None,
-    **cdc_kwargs,
-):
-    """Wire the CDC materializer into a streaming query via
-    foreachBatch. ``changelog`` is any streaming DataFrame carrying
-    ``key_cols + [seq_col, op_col]`` plus payload columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        cdc_apply_batch_against_store(
-            batch_df, store_path, key_cols, seq_col,
-            batch_id=batch_id, stream_id=sid, **cdc_kwargs,
-        )
-
-    writer = changelog.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

@@ -14,6 +14,12 @@ operator state could not hold a corpus-lifetime seen-set; the index
 can, because probing it is one broadcast-join scan per batch
 (training/dedup.py::minhash_dedup_against_index).
 
+Each function here is one micro-batch step. Stream it with the shared
+runner, e.g. ``start_batch_stream(source, dedup_batch_against_store,
+checkpoint, store_path, index_path, fmt=fmt)``
+(streaming/microbatch.py), or call it directly without a ``batch_id``
+for the batch API.
+
 The same batch-against-store shape carries the exact granularities
 (line/passage/substring), embedding/semantic vectors, byte-level
 media (fixed-width AND insertion-robust CDC entries), and the
@@ -31,7 +37,8 @@ rows are harmless duplicate candidates (the verify stage's per-pair
 groupBy collapses them).
 
 ATOMICITY of the two appends (store + index): a per-batch commit
-marker under ``<index>/_batch_committed/<id>`` is written only after
+marker under ``<index>/_batch_committed/<stream_id>/<id>``
+(``microbatch._batch_marker``) is written only after
 BOTH appends succeed, and a batch whose marker exists is skipped
 entirely on re-delivery — the common foreachBatch retry therefore
 re-appends NOTHING. The two crash windows in between converge on
@@ -50,98 +57,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
-from faexport_db_spark.datamodel.table_format import ParquetFormat, TableFormat
+from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT, TableFormat
+from faexport_db_spark.streaming.microbatch import _batch_marker, _read_store_or_none
 from faexport_db_spark.training.dedup import (
     minhash_band_rows,
     minhash_dedup_pairs,
     minhash_dedup_against_index,
 )
-
-
-def _read_store_or_none(fmt: TableFormat, spark: SparkSession, store_path: str):
-    """The store before the first committed batch reads as ``None``.
-    Only the no-committed-data conditions qualify: a missing path, a
-    directory a crashed first write left with zero parquet footers
-    (``UNABLE_TO_INFER_SCHEMA``), or — manifest strategies — no
-    committed manifest (``FileNotFoundError``). Any other failure
-    propagates so the micro-batch retries; a swallowed transient error
-    here would let duplicates through silently."""
-    try:
-        return fmt.read(spark, store_path)
-    except FileNotFoundError:
-        return None
-    except AnalysisException as exc:
-        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        return None
-
-
-def _batch_marker(
-    spark: SparkSession,
-    index_path: str,
-    batch_id: int | None,
-    stream_id: str | None,
-):
-    """(committed?, mark_fn) for the per-batch commit marker — see the
-    module docstring's atomicity contract. Batch ids are only unique
-    WITHIN one stream-checkpoint lifetime (a fresh or wiped checkpoint
-    renumbers from 0), so markers are namespaced by ``stream_id`` —
-    the checkpoint-resident token ``_stream_id`` mints.
-    ``batch_id=None`` (direct batch-API callers outside a stream)
-    disables the protocol."""
-    if batch_id is None:
-        return False, lambda: None
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    fs = HadoopFs(spark, index_path)
-    ns = stream_id or "direct"
-    ns_dir = f"{index_path.rstrip('/')}/_batch_committed/{ns}"
-    marker = f"{ns_dir}/{batch_id}"
-
-    def mark() -> None:
-        fs.write_text(marker, "")
-        # Markers only matter for RECENT batches (a re-delivery is
-        # always near the checkpoint's tail), so prune the long tail —
-        # without this, one empty file per batch accumulates forever.
-        # Prune every ~50 batches, not every batch: the directory LIST
-        # is an RPC worth amortizing on object stores.
-        if batch_id % 50 == 0:
-            for name in fs.list_names(ns_dir):
-                if name.isdigit() and int(name) < batch_id - 200:
-                    fs.delete(f"{ns_dir}/{name}")
-
-    return fs.exists(marker), mark
-
-
-def _stream_id(spark: SparkSession, checkpoint: str) -> str:
-    """Stream-instance namespace for batch markers: a token file
-    INSIDE the checkpoint directory, created on first use. Batch ids
-    are only meaningful relative to a checkpoint's lifetime — if the
-    checkpoint is wiped, Spark renumbers batches from 0, and a
-    path-derived namespace would then skip brand-new batches 0..N as
-    'already committed' (review finding: silent data loss). The token
-    dies with the checkpoint, so a wiped checkpoint gets a fresh
-    namespace while restarts of a live checkpoint keep their markers."""
-    import uuid
-
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    fs = HadoopFs(spark, checkpoint)
-    token_path = f"{checkpoint.rstrip('/')}/_dedup_stream_token"
-    if fs.exists(token_path):
-        token = fs.read_text(token_path).strip()
-        # An empty/truncated token (crash mid-create) must re-mint —
-        # falling through to the shared 'direct' namespace could skip
-        # batches whose ids collide with another degraded stream's
-        # markers (review finding).
-        if token:
-            return token
-    token = uuid.uuid4().hex[:12]
-    fs.mkdirs(checkpoint.rstrip("/"))
-    fs.write_text(token_path, token)
-    return token
+from faexport_db_spark.training.indexmeta import ensure_index_meta, has_index_meta
 
 
 def dedup_batch_against_store(
@@ -156,7 +80,7 @@ def dedup_batch_against_store(
     threshold: float = 0.6,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """One micro-batch step: return the batch rows that are NOT
     near-duplicates of the indexed corpus or of an earlier row in the
@@ -173,8 +97,6 @@ def dedup_batch_against_store(
     manifest-format stores stay transactional; the band index is an
     engine-internal artifact with a fixed parquet layout and stays
     raw."""
-    fmt = fmt or ParquetFormat()
-    from faexport_db_spark.training.indexmeta import ensure_index_meta
 
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
@@ -229,35 +151,6 @@ def dedup_batch_against_store(
     return survivors
 
 
-def start_streaming_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``dedup_batch_against_store`` into a streaming query via
-    foreachBatch. ``source`` is any streaming DataFrame with
-    (doc_id, text) columns."""
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def embed_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -271,7 +164,7 @@ def embed_dedup_batch_against_store(
     threshold: float = 0.95,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Embedding analog of ``dedup_batch_against_store``: one
     micro-batch of vectors is coded ONCE (Arrow matmul, map-side),
@@ -284,14 +177,12 @@ def embed_dedup_batch_against_store(
     marker (module docstring): an already-committed batch returns
     ``None`` without appending. ``fmt`` is the store's strategy, as in
     ``dedup_batch_against_store``; the code index stays raw parquet."""
-    from faexport_db_spark.training.indexmeta import ensure_index_meta
     from faexport_db_spark.training.similarity import (
         _code_rows,
         cosine_near_dup_pairs_lsh,
         embed_dedup_against_index,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
@@ -342,35 +233,6 @@ def embed_dedup_batch_against_store(
     return survivors
 
 
-def start_streaming_embed_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``embed_dedup_batch_against_store`` into a streaming query
-    via foreachBatch. ``source`` is any streaming DataFrame with
-    (vec_id, embedding) columns."""
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        embed_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def semantic_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -383,7 +245,7 @@ def semantic_dedup_batch_against_store(
     max_cluster: int | None = 10_000,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Semantic (SemDeDup) analog of ``embed_dedup_batch_against_store``:
     the first non-empty batch trains the k-means model ONCE and seeds
@@ -421,7 +283,6 @@ def semantic_dedup_batch_against_store(
         semantic_dedup_pairs,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
@@ -481,34 +342,6 @@ def _read_centroids(spark: SparkSession, index_path: str) -> list[list[float]]:
     return read_model_sidecar(spark, index_path, "_centroids.json")
 
 
-def start_streaming_semantic_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``semantic_dedup_batch_against_store`` into a streaming
-    query via foreachBatch. ``source`` is any streaming DataFrame with
-    (vec_id, embedding) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        semantic_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def passage_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -518,7 +351,7 @@ def passage_dedup_batch_against_store(
     id_col: str = "doc_id",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Passage-level analog of ``dedup_batch_against_store``: the
     batch's duplicated passages (vs the indexed corpus AND earlier
@@ -548,17 +381,12 @@ def passage_dedup_batch_against_store(
         passage_dedup_probe,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, text_col)
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not has_index_meta(spark, index_path):
         # first batch bootstraps an empty index (sidecar + zero tiles)
         build_passage_index(
             batch.filter(F.lit(False)), index_path, tile_tokens, text_col, id_col
@@ -582,34 +410,6 @@ def passage_dedup_batch_against_store(
     return survivors
 
 
-def start_streaming_passage_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``passage_dedup_batch_against_store`` into a streaming
-    query via foreachBatch. ``source`` is any streaming DataFrame with
-    (doc_id, text) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        passage_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def substring_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -619,7 +419,7 @@ def substring_dedup_batch_against_store(
     id_col: str = "doc_id",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Substring-level analog of ``passage_dedup_batch_against_store``
     — the third granularity's streaming form: every batch token
@@ -642,22 +442,18 @@ def substring_dedup_batch_against_store(
     exact duplicates the maintenance dedup collapses; after BOTH
     appends it re-cleans to empty against the batch's own grams,
     appends nothing, and just completes the marker."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
     from faexport_db_spark.training.text import (
         append_substring_index,
         build_substring_index,
         substring_dedup_against_index,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, text_col)
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not has_index_meta(spark, index_path):
         # first batch bootstraps an empty index (sidecar + zero grams)
         build_substring_index(
             batch.filter(F.lit(False)), index_path, min_tokens, text_col, id_col
@@ -676,34 +472,6 @@ def substring_dedup_batch_against_store(
     return survivors
 
 
-def start_streaming_substring_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``substring_dedup_batch_against_store`` into a streaming
-    query via foreachBatch. ``source`` is any streaming DataFrame with
-    (doc_id, text) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        substring_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def media_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -715,7 +483,7 @@ def media_dedup_batch_against_store(
     bytes_col: str = "media_bytes",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Byte-level media analog of ``embed_dedup_batch_against_store``:
     one micro-batch of opaque payloads is chunk-signed ONCE (map-side,
@@ -726,7 +494,6 @@ def media_dedup_batch_against_store(
     against batch N with no corpus re-signing. Same commit-marker
     protocol, parameter-sidecar validation and store-strategy seam as
     the other dedup streams; the signature index stays raw parquet."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
     from faexport_db_spark.training.multimodal import (
         build_media_chunk_index,
         media_chunk_signatures,
@@ -734,15 +501,12 @@ def media_dedup_batch_against_store(
         media_near_dup_pairs,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, bytes_col)
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not has_index_meta(spark, index_path):
         # first batch bootstraps an empty index (sidecar + zero rows)
         build_media_chunk_index(
             batch.filter(F.lit(False)), index_path, chunk_bytes, id_col, bytes_col
@@ -778,34 +542,6 @@ def media_dedup_batch_against_store(
     return survivors
 
 
-def start_streaming_media_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``media_dedup_batch_against_store`` into a streaming query
-    via foreachBatch. ``source`` is any streaming DataFrame with
-    (media_id, media_bytes) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        media_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def line_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -817,7 +553,7 @@ def line_dedup_batch_against_store(
     normalize: bool = True,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Line-level analog of ``passage_dedup_batch_against_store``:
     every batch line whose historical+in-batch frequency exceeds
@@ -846,17 +582,12 @@ def line_dedup_batch_against_store(
 
     from faexport_db_spark.training.text import line_dedup_against_index
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, text_col)
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not has_index_meta(spark, index_path):
         # Bootstrap with a zero-count sentinel row, not an empty frame:
         # a rowless partitioned write creates NO files, and the next
         # probe's schema inference would fail on the empty directory.
@@ -917,34 +648,6 @@ def line_dedup_batch_against_store(
     return survivors
 
 
-def start_streaming_line_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``line_dedup_batch_against_store`` into a streaming query
-    via foreachBatch. ``source`` is any streaming DataFrame with
-    (doc_id, text) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        line_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def media_cdc_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -958,7 +661,7 @@ def media_cdc_dedup_batch_against_store(
     bytes_col: str = "media_bytes",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Insertion-robust streaming media dedup: the CDC analog of
     ``media_dedup_batch_against_store`` — each micro-batch is
@@ -970,7 +673,6 @@ def media_cdc_dedup_batch_against_store(
     protocol, parameter-sidecar validation and store-strategy seam as
     the fixed-width stream; mid-batch crash window is identical
     (marker granularity is whole-batch — see module docstring)."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
     from faexport_db_spark.training.multimodal import (
         _cdc_entries,
         build_cdc_chunk_index,
@@ -978,15 +680,12 @@ def media_cdc_dedup_batch_against_store(
         media_cdc_near_dup_pairs,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, bytes_col)
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not has_index_meta(spark, index_path):
         build_cdc_chunk_index(
             batch.filter(F.lit(False)), index_path,
             window, boundary_prefix, min_chunk, id_col, bytes_col,
@@ -1027,34 +726,6 @@ def media_cdc_dedup_batch_against_store(
     return survivors
 
 
-def start_streaming_media_cdc_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``media_cdc_dedup_batch_against_store`` into a streaming
-    query via foreachBatch. ``source`` is any streaming DataFrame with
-    (media_id, media_bytes) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        media_cdc_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def fuzzy_decontaminate_batch_against_benchmark(
     batch: DataFrame,
     benchmark: DataFrame,
@@ -1068,7 +739,7 @@ def fuzzy_decontaminate_batch_against_benchmark(
     max_bucket: int | None = 10_000,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Streaming fuzzy decontamination: each micro-batch of corpus
     docs drops everything within MinHash Jaccard ``threshold`` of the
@@ -1082,7 +753,6 @@ def fuzzy_decontaminate_batch_against_benchmark(
     namespaces the two sides internally before they meet."""
     from faexport_db_spark.training.dedup import fuzzy_decontaminate
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, store_path, batch_id, stream_id)
     if committed:
@@ -1096,35 +766,6 @@ def fuzzy_decontaminate_batch_against_benchmark(
     return clean
 
 
-def start_streaming_fuzzy_decontaminate(
-    spark: SparkSession,
-    source: DataFrame,
-    benchmark: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **decon_kwargs,
-):
-    """Wire ``fuzzy_decontaminate_batch_against_benchmark`` into a
-    streaming query via foreachBatch. ``source`` is any streaming
-    DataFrame with (doc_id, text) columns; ``benchmark`` is a static
-    frame."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fuzzy_decontaminate_batch_against_benchmark(
-            batch_df, benchmark, store_path,
-            batch_id=batch_id, stream_id=sid, **decon_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def bloom_decontaminate_batch(
     batch: DataFrame,
     bloom_words: list[int],
@@ -1136,7 +777,7 @@ def bloom_decontaminate_batch(
     id_col: str = "doc_id",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Streaming Bloom decontamination: each micro-batch probes a
     PREBUILT filter (``build_bloom_filter`` output — built once when
@@ -1147,7 +788,6 @@ def bloom_decontaminate_batch(
     closure, the streaming analog of a broadcast tokenizer vocab."""
     from faexport_db_spark.training.text import bloom_probe_filter
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, store_path, batch_id, stream_id)
     if committed:
@@ -1158,38 +798,3 @@ def bloom_decontaminate_batch(
     fmt.append(clean, store_path)
     mark()
     return clean
-
-
-def start_streaming_bloom_decontaminate(
-    spark: SparkSession,
-    source: DataFrame,
-    benchmark: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    n: int = 5,
-    m_bits: int = 1 << 22,
-    k: int = 3,
-    trigger: dict | None = None,
-    **batch_kwargs,
-):
-    """Wire ``bloom_decontaminate_batch`` into a streaming query via
-    foreachBatch. The Bloom filter is built from the static
-    ``benchmark`` ONCE, before the stream starts — every micro-batch
-    reuses the same word array."""
-    from faexport_db_spark.training.text import build_bloom_filter
-
-    words = build_bloom_filter(benchmark, n, m_bits, k)
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        bloom_decontaminate_batch(
-            batch_df, words, store_path, n, m_bits, k,
-            batch_id=batch_id, stream_id=sid, **batch_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

@@ -29,6 +29,7 @@ from faexport_db_spark.ingest.faexport_api import (
     parse_submission_payloads,
     submission_snapshots,
 )
+from faexport_db_spark.streaming.microbatch import start_batch_stream
 
 # Batch-local minted ids get the micro-batch id in the high bits so ids
 # are unique ACROSS batches without reading the store's current max
@@ -86,7 +87,7 @@ def start_submission_ingest(
     """
     stream = payload_stream(spark, dropzone)
 
-    def _write_batch(batch: DataFrame, batch_id: int) -> None:
+    def _write_batch(batch: DataFrame, batch_id: int, stream_id: str) -> None:
         parsed = parse_submission_payloads(batch)
         nested = submission_snapshots(parsed, contributor_id, scan_time=scan_time)
         tables = explode_to_store(nested)
@@ -108,8 +109,7 @@ def start_submission_ingest(
         if on_batch_complete is not None:
             on_batch_complete(batch_id)
 
-    writer = stream.writeStream.foreachBatch(_write_batch).option(
-        "checkpointLocation", checkpoint
+    return start_batch_stream(
+        stream, _write_batch, checkpoint,
+        trigger=trigger or {"processingTime": "60 seconds"},
     )
-    writer = writer.trigger(**(trigger or {"processingTime": "60 seconds"}))
-    return writer.start()

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT, TableFormat
 from faexport_db_spark.operators.merge import merged_users
+from faexport_db_spark.streaming.microbatch import start_batch_stream
 
 ENTITY_KEY = ["website_id", "site_user_id"]
 
@@ -41,7 +42,7 @@ def refresh_touched_users(
     merged_view_dir: str,
     touched_keys: DataFrame,
     fmt: TableFormat = DEFAULT_FORMAT,
-    store_fmt: TableFormat | None = None,
+    store_fmt: TableFormat = DEFAULT_FORMAT,
 ) -> None:
     """Re-merge the entities in ``touched_keys`` and upsert them into
     the merged view through the storage seam: on parquet that is
@@ -52,7 +53,7 @@ def refresh_touched_users(
     store — appended by the ingest stream, plain parquet unless stated
     otherwise — is read with ``store_fmt`` (defaults to the parquet
     strategy, NOT to ``fmt``: the two tables' formats are independent)."""
-    store = (store_fmt or DEFAULT_FORMAT).read(spark, snapshot_store_dir)
+    store = store_fmt.read(spark, snapshot_store_dir)
     touched = touched_keys.distinct()
     touched_snaps = store.join(F.broadcast(touched), ENTITY_KEY, "left_semi")
     recomputed = merged_users(touched_snaps)
@@ -80,7 +81,7 @@ def start_incremental_merged_users(
     store, then refreshes exactly the touched entities.
     """
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
+    def _process(batch: DataFrame, batch_id: int, stream_id: str) -> None:
         if not batch.take(1):
             return
         DEFAULT_FORMAT.append(batch, snapshot_store_dir, ["website_id"])
@@ -91,8 +92,7 @@ def start_incremental_merged_users(
             batch.select(*ENTITY_KEY),
         )
 
-    writer = snapshot_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
+    return start_batch_stream(
+        snapshot_stream, _process, checkpoint,
+        trigger=trigger or {"processingTime": "60 seconds"},
     )
-    writer = writer.trigger(**(trigger or {"processingTime": "60 seconds"}))
-    return writer.start()

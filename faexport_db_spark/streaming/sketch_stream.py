@@ -28,6 +28,36 @@ from pyspark.sql import functions as F
 from faexport_db_spark.training.pipeline import hll_register_table
 
 
+def _publish_batch_partition(
+    table: DataFrame,
+    store_path: str,
+    batch_id: int | None,
+    stream_id: str | None,
+) -> None:
+    """Publish one batch's sketch ``table`` as the store partition
+    ``batch=<stream_id>-<batch_id>``: write to a hidden dot-prefixed
+    dir, then rename. An identified batch (a stream delivery) always
+    lands under the same name, so a re-delivery overwrites it with
+    identical rows. A direct call without a ``batch_id`` gets a unique
+    name instead: a fixed one would make a second direct call replace
+    the first call's partition and lose its rows from the merge."""
+    import uuid
+
+    from faexport_db_spark.operators.hadoop_fs import HadoopFs
+
+    ns = stream_id or "direct"
+    bid = batch_id if batch_id is not None else f"x{uuid.uuid4().hex[:12]}"
+    base = store_path.rstrip("/")
+    tag = f"{ns}-{bid}"
+    part = f"{base}/batch={tag}"
+    tmp = f"{base}/.tmp-batch={tag}"
+    table.write.mode("overwrite").parquet(tmp)
+    fs = HadoopFs(table.sparkSession, base)
+    if fs.exists(part):
+        fs.delete(part, recursive=True)
+    fs.rename(tmp, part)
+
+
 def hll_batch_into_store(
     batch: DataFrame,
     store_path: str,
@@ -47,19 +77,12 @@ def hll_batch_into_store(
     undercount that the monotone MAX-merge repairs on the next read).
     Re-delivery of a crashed batch rewrites the identical rows, so a
     crash at any point (partial hidden dir, missing final dir) is
-    repaired by idempotence — see the module docstring."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    ns = stream_id or "direct"
-    base = store_path.rstrip("/")
-    tag = f"{ns}-{batch_id if batch_id is not None else 0}"
-    part = f"{base}/batch={tag}"
-    tmp = f"{base}/.tmp-batch={tag}"
-    hll_register_table(batch, col, p).write.mode("overwrite").parquet(tmp)
-    fs = HadoopFs(batch.sparkSession, base)
-    if fs.exists(part):
-        fs.delete(part, recursive=True)
-    fs.rename(tmp, part)
+    repaired by idempotence — see the module docstring. Stream it with
+    ``start_batch_stream(source, hll_batch_into_store, checkpoint,
+    store_path, col)``."""
+    _publish_batch_partition(
+        hll_register_table(batch, col, p), store_path, batch_id, stream_id
+    )
 
 
 def read_hll_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -72,37 +95,6 @@ def read_hll_store(spark: SparkSession, store_path: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.max("register").alias("register"))
     )
-
-
-def start_streaming_hll(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    col: str,
-    p: int = 8,
-    trigger: dict | None = None,
-):
-    """Wire ``hll_batch_into_store`` into a streaming query via
-    foreachBatch. ``source`` is any streaming DataFrame carrying
-    ``col``; distinct counts over everything ever streamed come from
-    ``hll_estimate(read_hll_store(...))`` at any time, concurrent with
-    the stream — the hidden-dir-then-rename publish means a concurrent
-    read never sees partial files, only (at worst) a transient
-    undercount of the in-flight batch."""
-    from faexport_db_spark.streaming.dedup_stream import _stream_id
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        hll_batch_into_store(batch_df, store_path, col, p, batch_id, sid)
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def kmv_batch_into_store(
@@ -118,20 +110,15 @@ def kmv_batch_into_store(
     ≤k-row sketch lands under an idempotent per-batch partition via
     the same hidden-dir-then-rename publish. KMV union (bottom-k of a
     concatenation) is idempotent and commutative exactly like the HLL
-    MAX, so re-delivery and mid-write crashes need no commit marker."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
+    MAX, so re-delivery and mid-write crashes need no commit marker.
+    Streamed through ``start_batch_stream``, its set algebra
+    (union/intersection vs OTHER corpora or streams) stays available
+    at any time."""
     from faexport_db_spark.training.pipeline import kmv_sketch
 
-    ns = stream_id or "direct"
-    base = store_path.rstrip("/")
-    tag = f"{ns}-{batch_id if batch_id is not None else 0}"
-    part = f"{base}/batch={tag}"
-    tmp = f"{base}/.tmp-batch={tag}"
-    kmv_sketch(batch, col, k).write.mode("overwrite").parquet(tmp)
-    fs = HadoopFs(batch.sparkSession, base)
-    if fs.exists(part):
-        fs.delete(part, recursive=True)
-    fs.rename(tmp, part)
+    _publish_batch_partition(
+        kmv_sketch(batch, col, k), store_path, batch_id, stream_id
+    )
 
 
 def read_kmv_store(spark: SparkSession, store_path: str, k: int = 256) -> DataFrame:
@@ -152,35 +139,6 @@ def read_kmv_store(spark: SparkSession, store_path: str, k: int = 256) -> DataFr
     )
 
 
-def start_streaming_kmv(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    col: str,
-    k: int = 256,
-    trigger: dict | None = None,
-):
-    """Wire ``kmv_batch_into_store`` into a streaming query via
-    foreachBatch: a continuously-maintained distinct sketch whose
-    set algebra (union/intersection vs OTHER corpora or streams)
-    stays available at any time, with the same no-partial-files
-    read guarantee as the HLL store."""
-    from faexport_db_spark.streaming.dedup_stream import _stream_id
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        kmv_batch_into_store(batch_df, store_path, col, k, batch_id, sid)
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def qsketch_batch_into_store(
     batch: DataFrame,
     store_path: str,
@@ -197,20 +155,14 @@ def qsketch_batch_into_store(
     keeps concurrent readers off partial files), and the read path
     sums each batch's contribution exactly once — the line-dedup
     count-partition scheme, where the IDEMPOTENT WRITE stands in for
-    an idempotent merge."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
+    an idempotent merge. Streamed through ``start_batch_stream`` it
+    answers "p99 of everything ever streamed" at any time via
+    ``qsketch_quantile_brackets(read_qsketch_store(...))``."""
     from faexport_db_spark.training.pipeline import qsketch_register_table
 
-    ns = stream_id or "direct"
-    base = store_path.rstrip("/")
-    tag = f"{ns}-{batch_id if batch_id is not None else 0}"
-    part = f"{base}/batch={tag}"
-    tmp = f"{base}/.tmp-batch={tag}"
-    qsketch_register_table(batch, value).write.mode("overwrite").parquet(tmp)
-    fs = HadoopFs(batch.sparkSession, base)
-    if fs.exists(part):
-        fs.delete(part, recursive=True)
-    fs.rename(tmp, part)
+    _publish_batch_partition(
+        qsketch_register_table(batch, value), store_path, batch_id, stream_id
+    )
 
 
 def read_qsketch_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -225,31 +177,3 @@ def read_qsketch_store(spark: SparkSession, store_path: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
-
-
-def start_streaming_qsketch(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    value,
-    trigger: dict | None = None,
-):
-    """Wire ``qsketch_batch_into_store`` into a streaming query via
-    foreachBatch: continuously-maintained rank statistics — "p99 of
-    everything ever streamed" — from constant per-batch state, read
-    at any time via ``qsketch_quantile_brackets(read_qsketch_store)``.
-    """
-    from faexport_db_spark.streaming.dedup_stream import _stream_id
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        qsketch_batch_into_store(batch_df, store_path, value, batch_id, sid)
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

@@ -23,9 +23,9 @@ from faexport_db_spark.training.dedup import (  # noqa: F401
 from faexport_db_spark.training.retrieval import (  # noqa: F401
     bm25_append_index,
     bm25_build_index,
+    bm25_index_batch,
     bm25_topk,
     bm25_topk_persisted,
-    start_streaming_bm25_index,
 )
 from faexport_db_spark.training.similarity import (  # noqa: F401
     brute_force_topk,

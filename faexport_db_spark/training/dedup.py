@@ -733,7 +733,7 @@ def minhash_build_index(
     pruning can't help here — the economics come from never re-signing
     the corpus, not from skipping index bytes.
 
-    Signing parameters are persisted in an ``_index_meta.json`` sidecar
+    Signing parameters are persisted in the ``INDEX_META_NAME`` sidecar
     and validated by ``minhash_dedup_against_index`` — a probe signed
     with different parameters would silently match nothing."""
     from faexport_db_spark.training.indexmeta import write_index_meta

@@ -37,15 +37,21 @@ def write_index_meta(
     )
 
 
+def has_index_meta(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` carries the parameter sidecar — the bootstrap
+    test of every streaming index step (the first batch writes it)."""
+    return HadoopFs(spark, path).exists(
+        posixpath.join(path.rstrip("/"), INDEX_META_NAME)
+    )
+
+
 def ensure_index_meta(
     spark: SparkSession, path: str, kind: str, params: dict
 ) -> None:
     """Write the sidecar only if absent — the incremental/streaming
     append paths call this per batch; the first append creates it,
     later ones validate instead of blindly rewriting."""
-    fs = HadoopFs(spark, path)
-    meta_path = posixpath.join(path.rstrip("/"), INDEX_META_NAME)
-    if fs.exists(meta_path):
+    if has_index_meta(spark, path):
         check_index_meta(spark, path, kind, params)
         return
     write_index_meta(spark, path, kind, params)
@@ -59,16 +65,15 @@ def check_index_meta(
     missing-passes-as-legacy exemption became a hole when the signing
     scheme changed (review finding: a pre-sidecar index probed with
     token-hash shingles silently admits every duplicate)."""
-    fs = HadoopFs(spark, path)
-    meta_path = posixpath.join(path.rstrip("/"), INDEX_META_NAME)
-    if not fs.exists(meta_path):
+    if not has_index_meta(spark, path):
         raise ValueError(
             f"index at {path} has no {INDEX_META_NAME} sidecar; its signing "
             f"scheme is unknown and a mismatched probe silently returns ~zero "
             f"pairs — rebuild the index with a current builder, or write the "
             f"sidecar stating its true parameters (write_index_meta)."
         )
-    meta = json.loads(fs.read_text(meta_path))
+    meta_path = posixpath.join(path.rstrip("/"), INDEX_META_NAME)
+    meta = json.loads(HadoopFs(spark, path).read_text(meta_path))
     mismatches = {}
     if meta.get("kind") != kind:
         mismatches["kind"] = (meta.get("kind"), kind)

@@ -263,7 +263,7 @@ def bm25_build_index(
     own file), summed at probe time — a bounded directory listing, and
     idempotent under append retries because a retry OVERWRITES its own
     partial instead of double-counting. Parameters live in the
-    standard ``_index_meta.json`` sidecar and are validated on
+    standard ``INDEX_META_NAME`` sidecar and are validated on
     probe."""
     from faexport_db_spark.training.indexmeta import write_index_meta
 
@@ -278,7 +278,7 @@ def bm25_build_index(
             f"bm25_build_index at {path}: the corpus has no documents with "
             f"at least one token — an empty index would make every later "
             f"probe divide by zero; build from a non-empty corpus (the "
-            f"streaming wrapper bootstraps from its first non-empty batch)."
+            f"streaming step bootstraps from its first non-empty batch)."
         )
     write_index_meta(
         docs.sparkSession,
@@ -304,8 +304,8 @@ def bm25_append_index(
     batch-sized work only, the corpus is never re-tokenized, and the
     probe's derived-df design means no stored idf input goes stale.
 
-    At-least-once safe: ``commit_name`` names the stats partial (the
-    streaming wrapper passes its stream/batch identity), so a retried
+    At-least-once safe: ``commit_name`` names the stats partial
+    (``bm25_index_batch`` passes its stream/batch identity), so a retried
     batch overwrites its own partial rather than double-counting,
     and its re-appended posting rows are exact duplicates the probe's
     per-(term, doc) collapse removes. Doc ids must be new to the
@@ -333,50 +333,38 @@ def bm25_append_index(
     )
 
 
-def start_streaming_bm25_index(
-    spark: SparkSession,
-    source: DataFrame,
+def bm25_index_batch(
+    batch: DataFrame,
     index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
+    batch_id: int | None = None,
+    stream_id: str | None = None,
     **index_kwargs,
-):
-    """Maintain a BM25 index from a document stream via foreachBatch:
-    each micro-batch appends its postings + one idempotently-named
-    stats partial (stream-token + batch id, same namespacing rule as
-    the dedup streams), so redelivery never double-counts. ``source``
-    is any streaming DataFrame with (doc_id, text) columns; the first
-    batch bootstraps the index."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-    from faexport_db_spark.streaming.dedup_stream import _stream_id
+) -> None:
+    """One micro-batch of a BM25 index maintained from a document
+    stream: ``start_batch_stream(source, bm25_index_batch, checkpoint,
+    index_path)`` with ``source`` any streaming DataFrame with
+    (doc_id, text) columns. The first non-empty batch bootstraps the
+    index; every later batch appends its postings + one stats partial
+    named by its idempotent identity ``<stream_id>-<batch_id>`` (the
+    dedup streams' namespacing rule), so redelivery overwrites its own
+    partial and never double-counts. A direct call without a
+    ``batch_id`` keeps the builder's and appender's own naming."""
+    from faexport_db_spark.training.indexmeta import has_index_meta
 
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fs = HadoopFs(spark, index_path)
-        if not fs.exists(f"{index_path.rstrip('/')}/_index_meta.json"):
-            if batch_df.isEmpty():
-                return  # nothing to bootstrap from yet
-            # the batch's idempotent identity names the stats partial
-            # DIRECTLY — a build-then-rename would leave a crash window
-            # (driver dies after build, before rename) where the
-            # redelivered batch 0 takes the append path and the base
-            # partial double-counts the corpus forever (ADVICE r05)
-            bm25_build_index(
-                batch_df, index_path,
-                stats_name=f"{sid}-{batch_id}", **index_kwargs,
-            )
-            return
-        bm25_append_index(
-            batch_df, index_path, commit_name=f"{sid}-{batch_id}", **index_kwargs
+    name = f"{stream_id}-{batch_id}" if batch_id is not None else None
+    if not has_index_meta(batch.sparkSession, index_path):
+        if batch.isEmpty():
+            return  # nothing to bootstrap from yet
+        # the batch's idempotent identity names the stats partial
+        # DIRECTLY — a build-then-rename would leave a crash window
+        # (driver dies after build, before rename) where the
+        # redelivered batch 0 takes the append path and the base
+        # partial double-counts the corpus forever (ADVICE r05)
+        bm25_build_index(
+            batch, index_path, stats_name=name or "base", **index_kwargs
         )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+        return
+    bm25_append_index(batch, index_path, commit_name=name, **index_kwargs)
 
 
 def bm25_compact(

@@ -747,7 +747,7 @@ def embed_lsh_build_index(
     rebuild rewrite one table), mirroring the MinHash band index. The
     hyperplanes derive from the fixed seed, so batch and index codes
     agree without storing the planes; (nbits, n_tables, dim, seed) are
-    persisted in an ``_index_meta.json`` sidecar and validated by
+    persisted in the ``INDEX_META_NAME`` sidecar and validated by
     ``embed_dedup_against_index`` — a probe coded with different
     parameters would silently match nothing."""
     from faexport_db_spark.training.indexmeta import write_index_meta

@@ -510,7 +510,8 @@ def test_streaming_dedup_filters_within_and_across_batches(
     its internal near-dup; batch 2's near-dup of a batch-1 doc is
     caught by the INDEX probe (no corpus re-signing), while its fresh
     doc survives. The store ends with exactly the three originals."""
-    from faexport_db_spark.streaming.dedup_stream import start_streaming_dedup
+    from faexport_db_spark.streaming.dedup_stream import dedup_batch_against_store
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
     rows = docs.orderBy("doc_id").limit(3).collect()
@@ -534,8 +535,8 @@ def test_streaming_dedup_filters_within_and_across_batches(
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, dedup_batch_against_store, f"{ckpt}/b{i}", store, index,
             trigger={"availableNow": True}, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -576,7 +577,8 @@ def test_streaming_embed_dedup_filters_within_and_across_batches(
     survivors plus the parameter sidecar."""
     from pyspark.sql import functions as F
 
-    from faexport_db_spark.streaming.dedup_stream import start_streaming_embed_dedup
+    from faexport_db_spark.streaming.dedup_stream import embed_dedup_batch_against_store
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     emb = load_table(spark, sf_small, "embeddings").orderBy("vec_id").limit(3)
     rows = emb.collect()
@@ -600,8 +602,8 @@ def test_streaming_embed_dedup_filters_within_and_across_batches(
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_embed_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, embed_dedup_batch_against_store, f"{ckpt}/b{i}", store, index,
             trigger={"availableNow": True}, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -636,8 +638,8 @@ def test_streaming_semantic_dedup_filters_within_and_across_batches(
     is a marker no-op."""
     from faexport_db_spark.streaming.dedup_stream import (
         semantic_dedup_batch_against_store,
-        start_streaming_semantic_dedup,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     emb = load_table(spark, sf_small, "embeddings").orderBy("vec_id").limit(3)
     va, vb, vc = (list(r["embedding"]) for r in emb.collect())
@@ -659,9 +661,9 @@ def test_streaming_semantic_dedup_filters_within_and_across_batches(
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_semantic_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
-            trigger={"availableNow": True}, n_centroids=2,
+        q = start_batch_stream(
+            stream, semantic_dedup_batch_against_store, f"{ckpt}/b{i}",
+            store, index, trigger={"availableNow": True}, n_centroids=2,
         )
         q.awaitTermination(120)
 
@@ -718,6 +720,123 @@ def test_batch_commit_marker_skips_redelivered_batch(spark, tmp_path):
     assert spark.read.parquet(store).count() == n_store + 1
 
 
+def _drain(spark, step, src, ckpt, *args, **kwargs):
+    """One ``availableNow`` run of ``step`` over the parquet dir ``src``."""
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
+
+    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
+    q = start_batch_stream(
+        stream, step, ckpt, *args, trigger={"availableNow": True}, **kwargs
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+
+def test_batch_stream_token_contract(spark, tmp_path):
+    """The runner's stream token: a restart of the same checkpoint sees
+    the next batch id under the SAME stream_id; a wiped checkpoint gets
+    a new one; an empty or truncated token file is re-minted."""
+    import shutil
+
+    seen = []
+
+    def record(batch, batch_id=None, stream_id=None, tag=None):
+        seen.append((tag, batch_id, stream_id, batch.count()))
+
+    schema = "doc_id bigint, text string"
+    src = tmp_path / "src"
+    ckpt = tmp_path / "ckpt"
+    spark.createDataFrame([(1, "a")], schema).write.mode("append").parquet(str(src))
+    _drain(spark, record, str(src), str(ckpt), tag="t")
+    spark.createDataFrame([(2, "b")], schema).write.mode("append").parquet(str(src))
+    _drain(spark, record, str(src), str(ckpt), tag="t")
+    assert [(t, b, n) for t, b, _, n in seen] == [("t", 0, 1), ("t", 1, 1)]
+    sid = seen[0][2]
+    assert sid and seen[1][2] == sid
+    assert (ckpt / "_dedup_stream_token").read_text().strip() == sid
+
+    shutil.rmtree(ckpt)
+    _drain(spark, record, str(src), str(ckpt))
+    assert seen[2][1] == 0 and seen[2][2] not in (None, "", sid)
+
+    for i, junk in enumerate(["", "  \n"]):
+        fresh = tmp_path / f"ckpt_junk{i}"
+        fresh.mkdir()
+        (fresh / "_dedup_stream_token").write_text(junk)
+        _drain(spark, record, str(src), str(fresh))
+        minted = seen[-1][2]
+        assert minted.strip() and minted not in (sid, seen[2][2])
+        assert (fresh / "_dedup_stream_token").read_text().strip() == minted
+
+
+def test_batch_stream_resumes_existing_token_and_markers(spark, tmp_path):
+    """Commit-protocol compatibility: a checkpoint that already holds a
+    ``_dedup_stream_token`` keeps it (no re-mint), markers land at
+    ``<root>/_batch_committed/<token>/<batch_id>``, and a batch Spark
+    re-delivers after a crash before its checkpoint commit is skipped
+    by that marker instead of appending twice."""
+    from faexport_db_spark.streaming.dedup_stream import bloom_decontaminate_batch
+    from faexport_db_spark.training.text import build_bloom_filter
+
+    schema = "doc_id bigint, text string"
+    m_bits = 1 << 12
+    words = build_bloom_filter(
+        spark.createDataFrame([(0, "one two three four five six")], schema),
+        m_bits=m_bits,
+    )
+    src = tmp_path / "src"
+    store = tmp_path / "store"
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "_dedup_stream_token").write_text("0123456789ab")
+    spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta iota kappa")],
+        schema,
+    ).write.mode("append").parquet(str(src))
+    run = lambda: _drain(  # noqa: E731
+        spark, bloom_decontaminate_batch, str(src), str(ckpt),
+        words, str(store), m_bits=m_bits,
+    )
+    run()
+    assert (store / "_batch_committed" / "0123456789ab" / "0").exists()
+    assert spark.read.parquet(str(store)).count() == 2
+
+    # crash after the step, before Spark's commit: batch 0 is re-delivered
+    for name in ("0", ".0.crc"):
+        (ckpt / "commits" / name).unlink(missing_ok=True)
+    run()
+    assert spark.read.parquet(str(store)).count() == 2
+    assert (ckpt / "_dedup_stream_token").read_text() == "0123456789ab"
+
+    spark.createDataFrame([(3, "lambda mu nu xi omicron")], schema).write.mode(
+        "append"
+    ).parquet(str(src))
+    run()
+    assert (store / "_batch_committed" / "0123456789ab" / "1").exists()
+    assert spark.read.parquet(str(store)).count() == 3
+
+
+def test_direct_qsketch_calls_accumulate(spark, tmp_path):
+    """Two direct ``qsketch_batch_into_store`` calls without a batch id
+    both count: the store reads back as the register table of their
+    union, not of the last call alone."""
+    from faexport_db_spark.streaming.sketch_stream import (
+        qsketch_batch_into_store,
+        read_qsketch_store,
+    )
+    from faexport_db_spark.training.pipeline import qsketch_register_table
+
+    store = str(tmp_path / "q_store")
+    first = [(i,) for i in range(1, 200)]
+    second = [(i * 13,) for i in range(1, 300)]
+    for data in (first, second):
+        qsketch_batch_into_store(spark.createDataFrame(data, "v bigint"), store, "v")
+    merged = {r["bucket"]: r["cnt"] for r in read_qsketch_store(spark, store).collect()}
+    union = spark.createDataFrame(first + second, "v bigint")
+    want = {r["bucket"]: r["cnt"] for r in qsketch_register_table(union, "v").collect()}
+    assert merged == want
+
+
 @pytest.mark.parametrize("fmt_name", sorted(STORE_FORMATS))
 @pytest.mark.slow
 def test_streaming_passage_dedup_cleans_across_batches(spark, tmp_path, fmt_name):
@@ -725,8 +844,9 @@ def test_streaming_passage_dedup_cleans_across_batches(spark, tmp_path, fmt_name
     batch 1's are cut via the growing tile index; cleaned docs land in
     the store; fully-duplicated docs never do."""
     from faexport_db_spark.streaming.dedup_stream import (
-        start_streaming_passage_dedup,
+        passage_dedup_batch_against_store,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -746,9 +866,9 @@ def test_streaming_passage_dedup_cleans_across_batches(spark, tmp_path, fmt_name
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_passage_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
-            trigger={"availableNow": True}, tile_tokens=5, fmt=fmt,
+        q = start_batch_stream(
+            stream, passage_dedup_batch_against_store, f"{ckpt}/b{i}",
+            store, index, trigger={"availableNow": True}, tile_tokens=5, fmt=fmt,
         )
         q.awaitTermination(120)
 
@@ -761,11 +881,12 @@ def test_streaming_passage_dedup_cleans_across_batches(spark, tmp_path, fmt_name
 
 @pytest.mark.parametrize("fmt_name", sorted(STORE_FORMATS))
 def test_streaming_line_dedup_cleans_across_batches(spark, tmp_path, fmt_name):
-    """``start_streaming_line_dedup`` end to end: batch 2 repeats batch
+    """``line_dedup_batch_against_store`` streamed end to end: batch 2 repeats batch
     1's boilerplate line, which pushes the line's count past
     ``max_freq`` — it is cut from batch 2's stored text, while batch 1
     (written before the repeat existed) keeps it."""
-    from faexport_db_spark.streaming.dedup_stream import start_streaming_line_dedup
+    from faexport_db_spark.streaming.dedup_stream import line_dedup_batch_against_store
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -783,9 +904,9 @@ def test_streaming_line_dedup_cleans_across_batches(spark, tmp_path, fmt_name):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_line_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
-            trigger={"availableNow": True}, line_tokens=5, fmt=fmt,
+        q = start_batch_stream(
+            stream, line_dedup_batch_against_store, f"{ckpt}/b{i}",
+            store, index, trigger={"availableNow": True}, line_tokens=5, fmt=fmt,
         )
         q.awaitTermination(120)
 
@@ -1102,7 +1223,8 @@ def test_cdc_stream_materializes_across_batches(spark, tmp_path):
     events and a delete-then-revive, applied over two micro-batches,
     must land exactly where the batch cdc_apply of the full log lands."""
     from faexport_db_spark.operators.merge import cdc_apply
-    from faexport_db_spark.streaming.cdc_stream import start_streaming_cdc_apply
+    from faexport_db_spark.streaming.cdc_stream import cdc_apply_batch_against_store
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     schema = "k bigint, seq bigint, v string, op string"
     b0 = [
@@ -1125,9 +1247,9 @@ def test_cdc_stream_materializes_across_batches(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     store = str(tmp_path / "cdc_store")
-    q = start_streaming_cdc_apply(
-        spark, stream, store, str(tmp_path / "cdc_ckpt"),
-        key_cols=["k"], seq_col="seq",
+    q = start_batch_stream(
+        stream, cdc_apply_batch_against_store, str(tmp_path / "cdc_ckpt"),
+        store, key_cols=["k"], seq_col="seq",
         trigger={"availableNow": True},
     )
     q.awaitTermination(300)
@@ -1245,8 +1367,9 @@ def test_streaming_substring_dedup_cleans_across_batches(spark, tmp_path, fmt_na
     docs land in the store; a doc whose every token is covered never
     does."""
     from faexport_db_spark.streaming.dedup_stream import (
-        start_streaming_substring_dedup,
+        substring_dedup_batch_against_store,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -1265,9 +1388,9 @@ def test_streaming_substring_dedup_cleans_across_batches(spark, tmp_path, fmt_na
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_substring_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
-            trigger={"availableNow": True}, min_tokens=8, fmt=fmt,
+        q = start_batch_stream(
+            stream, substring_dedup_batch_against_store, f"{ckpt}/b{i}",
+            store, index, trigger={"availableNow": True}, min_tokens=8, fmt=fmt,
         )
         q.awaitTermination(120)
 
@@ -1334,8 +1457,9 @@ def test_streaming_media_dedup_across_batches(spark, tmp_path, fmt_name):
     signature index; novel payloads survive; within-batch exact copies
     keep the lowest id."""
     from faexport_db_spark.streaming.dedup_stream import (
-        start_streaming_media_dedup,
+        media_dedup_batch_against_store,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -1355,9 +1479,9 @@ def test_streaming_media_dedup_across_batches(spark, tmp_path, fmt_name):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_media_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
-            trigger={"availableNow": True},
+        q = start_batch_stream(
+            stream, media_dedup_batch_against_store, f"{ckpt}/b{i}",
+            store, index, trigger={"availableNow": True},
             threshold=0.8, chunk_bytes=256, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -1402,8 +1526,9 @@ def test_streaming_media_cdc_dedup_insertion_across_batches(spark, tmp_path, fmt
     import random
 
     from faexport_db_spark.streaming.dedup_stream import (
-        start_streaming_media_cdc_dedup,
+        media_cdc_dedup_batch_against_store,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -1424,9 +1549,9 @@ def test_streaming_media_cdc_dedup_insertion_across_batches(spark, tmp_path, fmt
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_media_cdc_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
-            trigger={"availableNow": True},
+        q = start_batch_stream(
+            stream, media_cdc_dedup_batch_against_store, f"{ckpt}/b{i}",
+            store, index, trigger={"availableNow": True},
             threshold=0.5, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -1501,8 +1626,8 @@ def test_streaming_fuzzy_decontaminate(spark, tmp_path, fmt_name):
     redelivery of a committed batch is a no-op."""
     from faexport_db_spark.streaming.dedup_stream import (
         fuzzy_decontaminate_batch_against_benchmark,
-        start_streaming_fuzzy_decontaminate,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -1526,9 +1651,9 @@ def test_streaming_fuzzy_decontaminate(spark, tmp_path, fmt_name):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_fuzzy_decontaminate(
-            spark, stream, benchmark, store, checkpoint=f"{ckpt}/b{i}",
-            trigger={"availableNow": True}, fmt=fmt,
+        q = start_batch_stream(
+            stream, fuzzy_decontaminate_batch_against_benchmark, f"{ckpt}/b{i}",
+            benchmark, store, trigger={"availableNow": True}, fmt=fmt,
         )
         q.awaitTermination(120)
     ids = sorted(r["doc_id"] for r in fmt.read(spark, store).collect())
@@ -1560,8 +1685,8 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
     committed batch is a no-op; batch parity with the batch API."""
     from faexport_db_spark.streaming.dedup_stream import (
         bloom_decontaminate_batch,
-        start_streaming_bloom_decontaminate,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.text import (
         bloom_decontaminate,
         build_bloom_filter,
@@ -1590,8 +1715,9 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_bloom_decontaminate(
-            spark, stream, benchmark, store, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, bloom_decontaminate_batch, f"{ckpt}/b{i}",
+            build_bloom_filter(benchmark, m_bits=m_bits), store,
             m_bits=m_bits, trigger={"availableNow": True}, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -1632,8 +1758,8 @@ def test_streaming_hll_register_store(spark, tmp_path):
     from faexport_db_spark.streaming.sketch_stream import (
         hll_batch_into_store,
         read_hll_store,
-        start_streaming_hll,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.pipeline import hll_estimate, hll_register_table
 
     src = tmp_path / "src"
@@ -1649,8 +1775,8 @@ def test_streaming_hll_register_store(spark, tmp_path):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_hll(
-            spark, stream, store, checkpoint=f"{ckpt}/b{i}", col="v",
+        q = start_batch_stream(
+            stream, hll_batch_into_store, f"{ckpt}/b{i}", store, "v",
             trigger={"availableNow": True},
         )
         q.awaitTermination(120)
@@ -1682,8 +1808,8 @@ def test_streaming_kmv_store(spark, tmp_path):
     from faexport_db_spark.streaming.sketch_stream import (
         kmv_batch_into_store,
         read_kmv_store,
-        start_streaming_kmv,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.pipeline import kmv_estimate, kmv_sketch
 
     src = tmp_path / "src"
@@ -1699,8 +1825,8 @@ def test_streaming_kmv_store(spark, tmp_path):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_kmv(
-            spark, stream, store, checkpoint=f"{ckpt}/b{i}", col="v",
+        q = start_batch_stream(
+            stream, kmv_batch_into_store, f"{ckpt}/b{i}", store, "v",
             trigger={"availableNow": True},
         )
         q.awaitTermination(120)
@@ -1730,8 +1856,8 @@ def test_streaming_qsketch_store(spark, tmp_path):
     from faexport_db_spark.streaming.sketch_stream import (
         qsketch_batch_into_store,
         read_qsketch_store,
-        start_streaming_qsketch,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.pipeline import (
         qsketch_quantile_brackets,
         qsketch_register_table,
@@ -1750,8 +1876,8 @@ def test_streaming_qsketch_store(spark, tmp_path):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_qsketch(
-            spark, stream, store, checkpoint=f"{ckpt}/b{i}", value="v",
+        q = start_batch_stream(
+            stream, qsketch_batch_into_store, f"{ckpt}/b{i}", store, "v",
             trigger={"availableNow": True},
         )
         q.awaitTermination(120)

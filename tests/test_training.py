@@ -1122,9 +1122,10 @@ def test_streaming_bm25_index_maintenance(spark, sf_small, tmp_path):
     from faexport_db_spark.queries.training_queries import _bm25_queries
     from faexport_db_spark.training.retrieval import (
         bm25_build_index,
+        bm25_index_batch,
         bm25_topk_persisted,
-        start_streaming_bm25_index,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
     half = [
@@ -1139,8 +1140,8 @@ def test_streaming_bm25_index_maintenance(spark, sf_small, tmp_path):
         stream = spark.readStream.schema("doc_id bigint, text string").parquet(
             str(src / f"b{i}")
         )
-        q = start_streaming_bm25_index(
-            spark, stream, idx, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, bm25_index_batch, f"{ckpt}/b{i}", idx,
             trigger={"availableNow": True},
         )
         q.awaitTermination(120)
