@@ -2,8 +2,11 @@
 
 Flask itself is out of engine scope (SURVEY.md §7.2 step 6); these are
 the query-layer functions each route in reference web.py delegates to,
-re-expressed as DataFrame plans. A point lookup is one entity predicate
-over a serve view materialized once per store (see ``api``).
+re-expressed as DataFrame plans. A point lookup is one job: an entity
+or hash predicate over the pin (a local checkpoint) of a serve view
+built once per store. The view itself stays persisted, which keeps it
+fresh when Spark writes to a store path and keeps the lineage a rebuild
+needs (see ``api``).
 """
 
 from faexport_db_spark.serve.api import (  # noqa: F401

@@ -6,15 +6,19 @@ query lifecycle (SURVEY.md §3.1) as a single Spark plan:
 
 - Point lookups (view_submission, view_submission_snapshots,
   view_user, hash search) are one predicate over a serve view that is
-  materialized once per store (``_store_plan``): the merged
-  submissions, the nested snapshot rows, or the merged users. The
-  first lookup of each kind on a store pays the whole-store build;
-  every later one filters the cached rows — no file scan, no merge
-  aggregate, no child join — the Spark analog of the reference's
-  indexes, which its write path keeps current (reference:
-  faexport_db/schema/indexes.sql:10-11,21). tests/test_plans.py pins
-  that shape. The cached rows are not sorted by the lookup key, so a
-  lookup still reads the whole view from memory (ROADMAP direction 1).
+  built once per store (``_store_plan``): the merged submissions, the
+  nested snapshot rows, or the merged users. The view is persisted,
+  which keeps it fresh when Spark writes to a store path and keeps the
+  lineage a rebuild needs, and then pinned with a local checkpoint.
+  The first lookup of each kind on a store pays the whole-store build
+  and the pin; every later one is one job that filters the pin — one
+  RDD scan, no file scan, no merge aggregate, no child join, no sort —
+  the Spark analog of the reference's indexes, which its write path
+  keeps current (reference: faexport_db/schema/indexes.sql:10-11,21).
+  Lookups that return several rows sort them in Python.
+  tests/test_plans.py pins that shape. The pinned rows are not sorted
+  by the lookup key, so a lookup still reads the whole pin from memory
+  (ROADMAP direction 1).
 - Child attach is one nested aggregation, not the reference's N+1
   IN-list round-trips (reference: faexport_db/models/submission.py:149-168).
 - Listing/count endpoints return DataFrames (distributed; caller limits
@@ -31,10 +35,13 @@ from __future__ import annotations
 
 import base64
 import json
+import re
 import weakref
 from collections.abc import Callable, Mapping
-from typing import Any
+from typing import Any, NamedTuple
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
@@ -82,18 +89,20 @@ def _entity_filter(df: DataFrame, website_id: str, id_col: str, site_id: str) ->
     )
 
 
-# Serve views, each built and persisted on first use once per store and
-# weakly keyed on the table it is built over. An entry also records the
-# other tables its view read and is reused only while each is the same
-# object, so reuse serves the data the caller's mapping names. A view
-# shares its file listings with the store's own DataFrames: when Spark
-# writes to a path the view reads, it refreshes that listing for both,
-# and the next lookup rebuilds the view over the new files. A view is
-# persisted, not checkpointed: a lost block is recomputed from its
-# lineage instead of failing every later lookup. Its cached data is
-# released when the key table is collected or when the entry is
-# replaced because an input changed. Concurrent first calls may both
-# build; the last one is kept.
+# Serve views. Each is built once per store, weakly keyed on the table
+# it is built over, and held twice. The persisted view keeps the build's
+# plan: it shares its file listings with the store's own DataFrames, so
+# when Spark writes to a path the view reads, it refreshes that listing
+# for both. The pin is a local checkpoint of the persisted view, and a
+# lookup filters the pin: its plan is one RDD scan and a filter, so no
+# lookup makes Spark describe (explain, walk, clean) the whole-store
+# merge again. An entry is reused only while every input table is the
+# same object and still lists the same files; otherwise the next lookup
+# rebuilds it over the new files. A pin that loses a block with its
+# executor fails the lookup that reads it: that lookup drops the entry,
+# rebuilds it and retries once. An entry's view and pin are released
+# when the key table is collected or when the entry is replaced.
+# Concurrent first calls may both build; the last one is kept.
 _SUBMISSION_INPUTS = (
     "submission_snapshot_keywords",
     "submission_snapshot_files",
@@ -101,6 +110,28 @@ _SUBMISSION_INPUTS = (
     "archive_contributors",
 )
 _plans_by_store: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_LOST_PIN = re.compile(r"\[CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND\][^\n]*?\brdd_(\d+)_")
+
+
+class _StoreView(NamedTuple):
+    deps: tuple
+    listing: tuple[int, ...]
+    pin: DataFrame
+    pin_rdd_id: int
+    release: weakref.finalize
+
+
+def _listing(frames: tuple[DataFrame, ...]) -> tuple[int, ...]:
+    """A hash of each frame's input files, computed in the JVM: two
+    round trips per frame, and the file list never reaches Python."""
+    client = frames[0]._sc._gateway._gateway_client
+    murmur = getattr(JavaClass("scala.util.hashing.MurmurHash3$", client), "MODULE$")
+    return tuple(murmur.arrayHash(df._jdf.inputFiles()) for df in frames)
+
+
+def _release(view: DataFrame, pin_rdd) -> None:
+    view.unpersist(False)
+    pin_rdd.unpersist(False)
 
 
 def _store_plan(
@@ -109,24 +140,57 @@ def _store_plan(
     key: str = "submission_snapshots",
     inputs: tuple[str, ...] = _SUBMISSION_INPUTS,
 ) -> DataFrame:
-    """``build(tables)`` over the whole store, persisted and memoized
-    on ``tables[key]`` while the ``inputs`` tables stay the same
-    objects; a lookup adds one predicate on top."""
+    """The pin of ``build(tables)`` over the whole store, memoized on
+    ``tables[key]`` while the ``inputs`` tables stay the same objects
+    and every input lists the same files; a lookup adds one predicate
+    on top."""
     owner = tables[key]
     deps = tuple(tables.get(name) for name in inputs)
+    listing = _listing((owner, *(df for df in deps if df is not None)))
     views = _plans_by_store.get(owner)
     if views is None:
         views = _plans_by_store[owner] = {}
     hit = views.get(build)
-    if hit is None or any(a is not b for a, b in zip(hit[0], deps)):
+    if hit is None or hit.listing != listing or any(a is not b for a, b in zip(hit.deps, deps)):
         if hit is not None:
-            hit[2]()  # releases the replaced view
+            hit.release()
         view = build(tables).persist()
+        pin = view.localCheckpoint(eager=True)
+        pin_rdd = pin._jdf.queryExecution().analyzed().rdd()
         # atexit off: the session may be stopped before the interpreter exits
-        release = weakref.finalize(owner, view.unpersist, False)
+        release = weakref.finalize(owner, _release, view, pin_rdd)
         release.atexit = False
-        hit = views[build] = (deps, view, release)
-    return hit[1]
+        hit = views[build] = _StoreView(deps, listing, pin, pin_rdd.id(), release)
+    return hit.pin
+
+
+def _collect(lookup: Callable[..., DataFrame], tables: Tables, *args) -> list[Row]:
+    """``lookup(tables, *args).collect()``. When the pin it reads has
+    lost a block, the pin's entry is dropped, rebuilt by the retry, and
+    the lookup runs once more."""
+    try:
+        return lookup(tables, *args).collect()
+    except Py4JJavaError as err:
+        lost = _LOST_PIN.search(str(err))
+        if lost is None or not _drop_pin(int(lost[1])):
+            raise
+    return lookup(tables, *args).collect()
+
+
+def _drop_pin(rdd_id: int) -> bool:
+    for views in list(_plans_by_store.values()):
+        for build, hit in list(views.items()):
+            if hit.pin_rdd_id == rdd_id:
+                del views[build]
+                hit.release()
+                return True
+    return False
+
+
+def _newest_first(rows: list[Row], *cols: str) -> list[Row]:
+    """``rows`` in the order ``orderBy(*map(F.desc, cols))`` gives:
+    descending, nulls last."""
+    return sorted(rows, key=lambda r: [(r[c] is not None, r[c]) for c in cols], reverse=True)
 
 
 def _merged_store(tables: Tables) -> DataFrame:
@@ -157,13 +221,14 @@ def view_submission(
 ) -> dict | None:
     """GET /api/view/submissions/<site>/<id>.json (web.py:68-78).
 
-    The entity predicate filters the store's materialized merged view;
-    the merge aggregates and child joins ran once, on the store's first
-    view.
+    The entity predicate filters the pin of the store's merged view, in
+    one job; the merge aggregates and child joins ran once, on the
+    store's first view. The key is unique in the merged view.
     """
-    row = _merged_submission(tables, website_id, site_submission_id).first()
-    if row is None:
+    rows = _collect(_merged_submission, tables, website_id, site_submission_id)
+    if not rows:
         return None
+    row = rows[0]
     return {
         "website_id": row["website_id"],
         "site_submission_id": row["site_submission_id"],
@@ -204,11 +269,12 @@ def view_submission(
 
 def view_user(tables: Tables, website_id: str, site_user_id: str) -> dict | None:
     """GET /api/view/users/<site>/<id>.json (web.py:112-122). The
-    entity predicate filters the store's materialized merged-user
-    view."""
-    row = _merged_user(tables, website_id, site_user_id).first()
-    if row is None:
+    entity predicate filters the pin of the store's merged-user view,
+    in one job; the key is unique in that view."""
+    rows = _collect(_merged_user, tables, website_id, site_user_id)
+    if not rows:
         return None
+    row = rows[0]
     return {
         "website_id": row["website_id"],
         "site_user_id": row["site_user_id"],
@@ -315,18 +381,21 @@ def _snapshot_web_dict(row: Row) -> dict:
 
 def _submission_history(tables: Tables, website_id: str, site_submission_id: str) -> DataFrame:
     nested = _store_plan(tables, _nested_submission_snapshots)
-    return _entity_filter(nested, website_id, "site_submission_id", site_submission_id).orderBy(
-        F.desc("scan_datetime"), F.desc("submission_snapshot_id")
-    )
+    return _entity_filter(nested, website_id, "site_submission_id", site_submission_id)
 
 
 def view_submission_snapshots(
     tables: Tables, website_id: str, site_submission_id: str
 ) -> dict | None:
     """GET /api/view/submissions/<site>/<id>/snapshots.json (web.py:81-94).
-    Snapshots sorted newest-first (models/submission.py:127-133). The
-    entity predicate filters the store's materialized nested view."""
-    rows = _submission_history(tables, website_id, site_submission_id).collect()
+    Snapshots sorted newest-first (models/submission.py:127-133), in
+    Python. The entity predicate filters the pin of the store's nested
+    view, in one job."""
+    rows = _newest_first(
+        _collect(_submission_history, tables, website_id, site_submission_id),
+        "scan_datetime",
+        "submission_snapshot_id",
+    )
     if not rows:
         return None
     return {
@@ -341,16 +410,18 @@ def view_user_snapshots(
     tables: Tables, website_id: str, site_user_id: str
 ) -> dict | None:
     """GET /api/view/users/<site>/<id>/snapshots.json (web.py:125-135);
-    per-snapshot shape models/user.py:144-160."""
+    per-snapshot shape models/user.py:144-160. The user's rows are
+    sorted newest-first in Python."""
     contrib = tables["archive_contributors"].select(
         F.col("contributor_id").alias("archive_contributor_id"),
         F.col("name").alias("contributor_name"),
     )
-    rows = (
+    rows = _newest_first(
         _entity_filter(tables["user_snapshots"], website_id, "site_user_id", site_user_id)
         .join(F.broadcast(contrib), "archive_contributor_id", "left")
-        .orderBy(F.desc("scan_datetime"), F.desc("user_snapshot_id"))
-        .collect()
+        .collect(),
+        "scan_datetime",
+        "user_snapshot_id",
     )
     if not rows:
         return None
@@ -526,18 +597,22 @@ def _hash_search(tables: Tables, algo_id: int, hash_value: bytes) -> DataFrame:
             lambda h: (h["algo_id"] == algo_id) & (h["hash_value"] == F.lit(hash_value)),
         ),
     )
-    return nested.filter(has_hash).orderBy("submission_snapshot_id")
+    return nested.filter(has_hash)
 
 
 def search_hash(tables: Tables, algo_id: int, hash_value: bytes) -> list[dict]:
     """POST /api/hash_search/ (web.py:202-216 →
-    models/submission.py:400-431). The hash predicate filters the
-    store's materialized nested view on its files' hashes, so the
+    models/submission.py:400-431). The hash predicate filters the pin
+    of the store's nested view on its files' hashes, in one job, so the
     matched snapshots come back with their children already attached,
     not fetched per snapshot as the reference does
-    (models/submission.py:416-431).
+    (models/submission.py:416-431). The few matches are sorted by
+    snapshot id in Python.
     """
-    return [_snapshot_web_dict(r) for r in _hash_search(tables, algo_id, hash_value).collect()]
+    rows = _collect(_hash_search, tables, algo_id, hash_value)
+    return [
+        _snapshot_web_dict(r) for r in sorted(rows, key=lambda r: r["submission_snapshot_id"])
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -1033,11 +1033,12 @@ def build_line_index(
     probes lined/normalized differently.
 
     ``partitioned`` writes the counts under a ``src=corpus`` hive
-    partition — REQUIRED when the index will be appended to by the
-    streaming wrapper, whose per-batch ``src=`` partitions make
-    retries idempotent (dynamic partition overwrite); a flat layout
-    cannot be mixed with partitioned appends (Spark rejects
-    conflicting directory structures)."""
+    partition — REQUIRED when the index will be appended to by a
+    stream (``start_batch_stream`` running
+    ``line_dedup_batch_against_store``), whose per-batch ``src=``
+    partitions make retries idempotent (dynamic partition overwrite);
+    a flat layout cannot be mixed with partitioned appends (Spark
+    rejects conflicting directory structures)."""
     from faexport_db_spark.training.indexmeta import write_index_meta
 
     counts = (
@@ -1083,8 +1084,9 @@ def line_dedup_against_index(
     scan semi-filtered by the broadcast batch digest set
     (batch-sized, never corpus-sized). With ``append``, the batch's
     line counts land as additive delta rows (summed on the next
-    probe). Streaming wrappers must write surviving text to the store
-    BEFORE appending counts (the store-first ordering of
+    probe). A stream (``start_batch_stream`` running
+    ``line_dedup_batch_against_store``) must write surviving text to
+    the store BEFORE appending counts (the store-first ordering of
     streaming/dedup_stream.py; a counts-first crash would over-clean
     the retry).
 

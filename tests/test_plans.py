@@ -16,6 +16,7 @@ from faexport_db_spark.datamodel.testdata import load_table
 from faexport_db_spark.operators.merge import merged_users
 from faexport_db_spark.plans import (
     assert_plan,
+    formatted_plan,
     join_strategies,
     pushed_filters,
     read_schemas,
@@ -102,9 +103,7 @@ def _kind(node) -> str:
 def _executed_nodes(df) -> list:
     """Every node of ``df``'s executed physical plan, walked by
     ``children()``. An adaptive plan is entered at its current plan and
-    a query stage at the plan it wraps. An ``InMemoryTableScanExec`` is
-    a leaf, so the cached plan behind it is not walked; its tree string
-    would print that plan, file scans and exchanges included."""
+    a query stage at the plan it wraps."""
     out, stack = [], [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
@@ -120,68 +119,79 @@ def _executed_nodes(df) -> list:
     return out
 
 
-def _assert_filters_the_cached_view(df, predicates: tuple[str, ...], shuffles: int) -> None:
-    """``df`` reads one in-memory scan of a materialized serve view and
-    no file: each of ``predicates`` is among the scan's predicates, no
-    join runs, ``shuffles`` shuffle exchanges run, and no Python eval
-    sits anywhere in the plan, the cached build included."""
+def _assert_filters_the_pinned_view(df, build, predicates: tuple[str, ...]) -> None:
+    """``df`` is one filter over the pin of a serve view: one RDD scan,
+    no in-memory or file scan, no join and no shuffle exchange; each of
+    ``predicates`` is in the filter's condition, and the formatted plan
+    is short, because it no longer describes the whole-store merge the
+    pin was built from. ``build``, that merge, runs no Python."""
     import re
 
     nodes = _executed_nodes(df)
     kinds = [_kind(node) for node in nodes]
-    assert "FileSourceScanExec" not in kinds, kinds
+    assert kinds.count("RDDScanExec") == 1, kinds
+    for kind in ("InMemoryTableScanExec", "FileSourceScanExec", "ShuffleExchangeExec"):
+        assert kind not in kinds, kinds
     assert not [k for k in kinds if "Join" in k], kinds
-    assert kinds.count("ShuffleExchangeExec") == shuffles, kinds
-    [scan] = [node for node in nodes if _kind(node) == "InMemoryTableScanExec"]
-    pushed = scan.predicates().toString()
+    [condition] = [node.condition().toString() for node in nodes if _kind(node) == "FilterExec"]
     for predicate in predicates:
-        assert re.search(predicate, pushed), pushed
-    assert_plan(df, max_python_evals=0)
+        assert re.search(predicate, condition), condition
+    explained = formatted_plan(df)
+    assert len(explained) < 5_000, len(explained)
+    assert_plan(build, max_python_evals=0)
 
 
 def test_view_submission_filters_the_materialized_merged_view(spark, parquet_store):
-    """A view is one entity predicate on the store's materialized merged
+    """A view is one entity predicate on the pin of the store's merged
     view: the merge aggregates and child joins ran once, so the lookup
-    scans no file and shuffles nothing."""
-    from faexport_db_spark.serve.api import _merged_submission
+    scans no file, shuffles nothing and plans in a few lines."""
+    from faexport_db_spark.serve.api import _merged_store, _merged_submission
 
     view = _merged_submission(parquet_store, "fa", "101")
-    _assert_filters_the_cached_view(
-        view, (r"\(website_id#\d+ = fa\)", r"\(site_submission_id#\d+ = 101\)"), 0
+    _assert_filters_the_pinned_view(
+        view,
+        _merged_store(parquet_store),
+        (r"\(website_id#\d+ = fa\)", r"\(site_submission_id#\d+ = 101\)"),
     )
 
 
 def test_view_user_filters_the_materialized_user_view(spark, parquet_store):
-    """view_user is one entity predicate on the store's materialized
+    """view_user is one entity predicate on the pin of the store's
     merged-user view."""
-    from faexport_db_spark.serve.api import _merged_user
+    from faexport_db_spark.serve.api import _merged_user, _merged_user_store
 
     view = _merged_user(parquet_store, "fa", "u1")
-    _assert_filters_the_cached_view(
-        view, (r"\(website_id#\d+ = fa\)", r"\(site_user_id#\d+ = u1\)"), 0
+    _assert_filters_the_pinned_view(
+        view,
+        _merged_user_store(parquet_store),
+        (r"\(website_id#\d+ = fa\)", r"\(site_user_id#\d+ = u1\)"),
     )
 
 
 def test_submission_history_filters_the_materialized_nested_view(spark, parquet_store):
-    """view_submission_snapshots filters the store's materialized nested
-    view; its one shuffle is the newest-first sort of the entity's rows."""
-    from faexport_db_spark.serve.api import _submission_history
+    """view_submission_snapshots filters the pin of the store's nested
+    view; the newest-first order is applied in Python, so the plan
+    has no sort and no shuffle."""
+    from faexport_db_spark.serve.api import _nested_submission_snapshots, _submission_history
 
     history = _submission_history(parquet_store, "fa", "101")
-    _assert_filters_the_cached_view(
-        history, (r"\(website_id#\d+ = fa\)", r"\(site_submission_id#\d+ = 101\)"), 1
+    _assert_filters_the_pinned_view(
+        history,
+        _nested_submission_snapshots(parquet_store),
+        (r"\(website_id#\d+ = fa\)", r"\(site_submission_id#\d+ = 101\)"),
     )
 
 
 def test_search_hash_filters_the_materialized_nested_view(spark, parquet_store):
-    """A hash search is one predicate on the nested view's file hashes,
-    with no join to the file or hash tables; its one shuffle is the
-    sort of the matched snapshots."""
-    from faexport_db_spark.serve.api import _hash_search
+    """A hash search is one predicate on the file hashes of the nested
+    view's pin, with no join to the file or hash tables and no sort."""
+    from faexport_db_spark.serve.api import _hash_search, _nested_submission_snapshots
 
     search = _hash_search(parquet_store, 1, b"\x01\x01")
-    _assert_filters_the_cached_view(
-        search, (r"^List\(exists\(files#\d+, .*hash_value = 0x0101\)",), 1
+    _assert_filters_the_pinned_view(
+        search,
+        _nested_submission_snapshots(parquet_store),
+        (r"exists\(files#\d+, .*hash_value = 0x0101\)",),
     )
 
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 import fixtures_faexport as fx
@@ -111,9 +110,25 @@ def test_view_submission_sees_a_replaced_child_table(store):
     assert [k["keyword"] for k in again["submission_data"]["keywords"]] == ["cat", "dog"]
 
 
-def test_store_plans_are_released_with_the_store(store):
-    """A store's memo entries and the views they materialized go when
-    the store's key tables are collected."""
+def _stored_rdds(spark) -> set[int]:
+    """Ids of the RDDs that hold blocks in storage."""
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _still_stored(spark, ids: set[int], timeout_s: float = 30.0) -> set[int]:
+    """Those of ``ids`` still in storage once none is left or
+    ``timeout_s`` has passed: a release unpersists without blocking."""
+    import time
+
+    deadline = time.monotonic() + timeout_s
+    while (left := ids & _stored_rdds(spark)) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    return left
+
+
+def test_store_plans_are_released_with_the_store(spark, store):
+    """A store's memo entries go when the store's key tables are
+    collected, and the blocks of their views and pins go with them."""
     import gc
     import weakref
 
@@ -126,26 +141,31 @@ def test_store_plans_are_released_with_the_store(store):
     }
     gc.collect()
     before = len(memo)
+    stored = _stored_rdds(spark)
     assert serve.view_submission(local, "fa", "102")["submission_data"]["title"] == "Keep"
     assert serve.view_user(local, "weasyl", "u9")["user_data"]["display_name"] == "W9"
     assert len(memo) == before + 2
-    views = [
-        api._store_plan(local, api._merged_store),
-        api._store_plan(local, api._merged_user_store, "user_snapshots", ()),
-    ]
-    assert all(v.storageLevel != StorageLevel.NONE for v in views)
+    built = _stored_rdds(spark) - stored
+    pins = {
+        hit.pin_rdd_id
+        for key in ("submission_snapshots", "user_snapshots")
+        for hit in memo[local[key]].values()
+    }
+    # one persisted view and one pin per entry
+    assert len(built) == 4 and pins < built, (built, pins)
     snaps = weakref.ref(local["submission_snapshots"])
     users = weakref.ref(local["user_snapshots"])
     del local
     gc.collect()
     assert snaps() is None and users() is None
     assert len(memo) == before
-    assert all(v.storageLevel == StorageLevel.NONE for v in views)
+    assert not _still_stored(spark, built)
 
 
-def test_replaced_store_view_releases_its_materialization(store):
+def test_replaced_store_view_releases_its_materialization(spark, store):
     """An entry rebuilt because one of its input tables changed releases
-    the view it replaces; the new view is materialized in its place."""
+    the blocks of the view and the pin it replaces; a new view and pin
+    are stored in their place."""
     api = serve.api
 
     def keywords(tables):
@@ -154,14 +174,44 @@ def test_replaced_store_view_releases_its_materialization(store):
 
     snaps = store["submission_snapshots"]
     local = {**store, "submission_snapshots": snaps.filter(F.col("submission_snapshot_id") > 0)}
+    stored = _stored_rdds(spark)
     assert keywords(local) == ["cat", "dog"]
-    old = api._store_plan(local, api._merged_store)
-    assert old.storageLevel != StorageLevel.NONE
+    old = _stored_rdds(spark) - stored
+    old_pin = api._plans_by_store[local["submission_snapshots"]][api._merged_store].pin_rdd_id
+    assert len(old) == 2 and old_pin in old, old
     kw = local["submission_snapshot_keywords"]
     swapped = {**local, "submission_snapshot_keywords": kw.filter(F.col("keyword") != "dog")}
     assert keywords(swapped) == ["cat"]
-    assert old.storageLevel == StorageLevel.NONE
-    assert api._store_plan(swapped, api._merged_store).storageLevel != StorageLevel.NONE
+    assert not _still_stored(spark, old)
+    new = _stored_rdds(spark) - stored
+    new_pin = api._plans_by_store[swapped["submission_snapshots"]][api._merged_store].pin_rdd_id
+    assert len(new) == 2 and new_pin in new, new
+
+
+def test_a_lost_pin_is_rebuilt_by_the_lookup_that_reads_it(store):
+    """An executor loss takes a pin's blocks with it. The next lookup
+    that reads that pin drops its entry, rebuilds it and answers from
+    the rebuild; the store's other entry is kept."""
+    api = serve.api
+    snaps = store["submission_snapshots"]
+    local = {**store, "submission_snapshots": snaps.filter(F.col("submission_snapshot_id") >= 0)}
+
+    def truth():
+        data = serve.view_submission(local, "fa", "101")
+        found = [r["submission_snapshot_id"] for r in serve.search_hash(local, 1, b"\x01\x01")]
+        return data["cache_data"]["snapshot_count"], data["submission_data"]["title"], found
+
+    assert truth() == (3, "Old Title", [1])
+    entries = api._plans_by_store[local["submission_snapshots"]]
+    for lost, kept in (
+        (api._merged_store, api._nested_submission_snapshots),
+        (api._nested_submission_snapshots, api._merged_store),
+    ):
+        lost_entry, kept_entry = entries[lost], entries[kept]
+        lost_entry.pin._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        assert truth() == (3, "Old Title", [1])
+        assert entries[lost] is not lost_entry
+        assert entries[kept] is kept_entry
 
 
 def test_a_spark_write_to_a_store_path_refreshes_its_view(spark, store, tmp_path):
