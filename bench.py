@@ -75,8 +75,8 @@ def main() -> None:
         best, worst = measure(df)  # best-of-3: GC/JIT jitter on a shared box is large
         timings[name] = round(best, 4)
         # Same-invocation spread — the noise floor a cross-round delta
-        # must clear before it means anything (repeated-run study:
-        # tools/bench_variance.py measured 18–67% spreads per query).
+        # must clear before it means anything (repeated runs measured
+        # 18–67% spreads per query).
         spread[name] = round(worst / best - 1.0, 3)
 
     prev_round, prev = _previous_round_queries()

@@ -47,11 +47,10 @@ def with_dense_ids(df: DataFrame, name: str) -> DataFrame:
     ``persist()`` would work too, but CacheManager entries are never
     auto-released — in a long-running foreachBatch loop (4 calls per
     ingested batch) that leaks storage memory indefinitely, while
-    checkpoint blocks are freed by the ContextCleaner. They are NOT
-    freed when the frame leaves Python scope: the ContextCleaner drops
-    the RDD only after a JVM GC collects it, so until then the pins
-    stay in block storage (an archive pass was seen to leave 8–10 of
-    them, 43–51 MB, with no Python reference left).
+    checkpoint blocks are freed by the ContextCleaner once a JVM GC
+    collects the RDD. The returned frame reads the pin, so nothing here
+    can release it earlier (``operators.pins.unpin`` states the rule
+    and the trade-off).
     """
     marked = df.withColumn("_mid", F.monotonically_increasing_id()).localCheckpoint(
         eager=True

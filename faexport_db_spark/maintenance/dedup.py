@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from faexport_db_spark.operators.pins import unpin
+
 
 def dedup_keep_one(
     df: DataFrame, keys: list[str], id_col: str, keep: str = "highest"
@@ -98,9 +100,9 @@ def cleanup(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     Eager: each kept table is deduplicated, filtered and materialized
     ONCE with ``localCheckpoint(eager=True)`` — one job per table,
     parents before children, so a child reads its parent's pinned copy
-    and the returned plans read only the pins. Trade-off: the pinned
-    blocks live in executor storage; a lost executor fails the returned
-    plan instead of recomputing it.
+    and the returned plans read only the pins. The caller owns the
+    returned pins (``operators.pins.unpin`` states the trade-off and
+    when one may be released).
 
     Input/output dict keys: user_snapshots, submission_snapshots,
     submission_snapshot_keywords, submission_snapshot_files,
@@ -149,12 +151,20 @@ def cleanup_to_fixpoint(
 
     ``cleanup`` is a fixpoint in one pass, so round 2 is the audit: it
     re-cleans round 1's pins, its counts read the new pins, and equal
-    counts end the loop. The returned tables are the last round's pins,
-    so writing them re-runs no dedup plan."""
+    counts end the loop. Once a round's counts have run, the pins of
+    the round it superseded are released; input frames and tables
+    passed through unchanged are kept. The returned tables are the last
+    round's pins, owned by the caller, so writing them re-runs no
+    dedup plan."""
+    inputs = list(tables.values())
     counts = {name: df.count() for name, df in tables.items()}
     for _ in range(max_rounds):
-        tables = cleanup(tables)
+        done, tables = tables, cleanup(tables)
         new_counts = {name: df.count() for name, df in tables.items()}
+        kept = {id(df) for df in (*inputs, *tables.values())}
+        for df in done.values():
+            if id(df) not in kept:
+                unpin(df)
         if new_counts == counts:
             break
         counts = new_counts

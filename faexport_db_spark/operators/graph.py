@@ -1,7 +1,7 @@
 """Distributed graph metrics over edge-list DataFrames.
 
 The near-dup clustering path already does connected components
-(training/dedup.py: min-label propagation + large-star/small-star);
+(training/dedup.py: large-star/small-star);
 this module adds the other graph shapes an analytics engine needs —
 triangle counting and degree statistics — as pure DataFrame
 compositions over an ``(src, dst)`` edge list.
@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from faexport_db_spark.operators.pins import unpin
 
 
 def canonical_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -192,7 +194,8 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     collected to the driver. The edge frame is eagerly
     localCheckpoint-ed each round so the plan stays three stages per
     round instead of re-embedding every prior round's derivation
-    (the PageRank lesson, ``pagerank`` above).
+    (the PageRank lesson, ``pagerank`` above), and the round it
+    replaces is released (``operators.pins.unpin``).
 
     Output: (node, degree) for nodes alive after ``rounds`` peels,
     degree measured in the surviving subgraph.
@@ -200,11 +203,13 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     g = edges
     for _ in range(rounds):
         keep = degrees(g).filter(F.col("degree") >= k).select("node")
-        g = (
+        done, g = g, (
             g.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
             .localCheckpoint(eager=True)
         )
+        if done is not edges:
+            unpin(done)
     return degrees(g)
 
 
@@ -293,7 +298,9 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 4) -> DataFrame
       shuffle), one anti-join against settled nodes, one distinct —
       all keyed on node ids, nothing driver-side. Eager
       localCheckpoint pins each level so level k's plan does not
-      re-derive levels 1..k-1 (the PageRank lineage lesson).
+      re-derive levels 1..k-1 (the PageRank lineage lesson); the
+      level it replaces, and at the end the symmetrized edges, are
+      released (``operators.pins.unpin``).
     - Level-synchronous BFS reaches every node first at its true
       minimum distance, so fixed ``max_hops`` levels compute exactly
       ``min(hops) <= max_hops`` — the same value an all-walks
@@ -325,6 +332,8 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 4) -> DataFrame
         fresh = reached.join(dist, "node", "left_anti").select(
             "node", F.lit(level).cast("bigint").alias("hops")
         )
-        dist = dist.unionAll(fresh).localCheckpoint(eager=True)
+        done, dist = dist, dist.unionAll(fresh).localCheckpoint(eager=True)
+        unpin(done)
         frontier = dist.filter(F.col("hops") == level).select("node")
+    unpin(sym)
     return dist

@@ -268,19 +268,19 @@ def _sparse_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def g6_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G6 — connected components to CONVERGENCE, labels = component
-    minimum. The engine runs the alternating large-star/small-star
-    contraction (training/dedup.py::dedup_clusters_star — O(log n)
-    rounds regardless of diameter, edge-shaped rows only, the Kiveris
-    et al. SoCC'14 scheme the near-dup clusterer already uses); the
+    minimum. The engine runs the near-dup clusterer's alternating
+    large-star/small-star contraction (training/dedup.py::dedup_clusters
+    — O(log n) rounds regardless of diameter, edge-shaped rows only,
+    the Kiveris et al. SoCC'14 scheme); the
     oracle computes the same fixpoint from first principles as a
     recursive-CTE transitive closure + min. Component minimum is
     convergence-order-independent, so the two meet exactly."""
-    from faexport_db_spark.training.dedup import dedup_clusters_star
+    from faexport_db_spark.training.dedup import dedup_clusters
 
     pairs = _sparse_edges(spark, sf_dir).select(
         F.col("a").alias("id_a"), F.col("b").alias("id_b")
     )
-    return dedup_clusters_star(pairs).select(
+    return dedup_clusters(pairs).select(
         F.col("doc_id").alias("node"),
         F.col("cluster_rep").cast("bigint").alias("component"),
     )
@@ -445,14 +445,14 @@ def g9_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     modularity term (Q_c = L_c/m − (D_c/2m)², scaled by 4m² — the
     by-now-standard trick: a positive constant scale preserves every
     comparison, so community quality ranks exactly, no floats).
-    Engine: star-contraction labels + two label-keyed joins/aggs; the
+    Engine: ``dedup_clusters`` labels + two label-keyed joins/aggs; the
     oracle recomputes the partition from first principles via the
     recursive closure, so label AND metric must both agree."""
     from faexport_db_spark.operators.graph import degrees
-    from faexport_db_spark.training.dedup import dedup_clusters_star
+    from faexport_db_spark.training.dedup import dedup_clusters
 
     edges = _sparse_edges(spark, sf_dir).localCheckpoint(eager=True)
-    comp = dedup_clusters_star(
+    comp = dedup_clusters(
         edges.select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
     ).select(F.col("doc_id").alias("node"), F.col("cluster_rep").alias("c"))
     comp = comp.localCheckpoint(eager=True)

@@ -171,25 +171,18 @@ def t_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs → dedup CLUSTERS: connected components over the
     exact bigram-Jaccard pair graph, each clustered doc labeled with
     its cluster's min id (the representative a dedup keeps). Spark runs
-    iterative min-label propagation (O(diameter) joins, checkpointed
-    lineage); the oracle replays it as a recursive-CTE transitive
-    closure over the identical edge set."""
+    the large-star/small-star contraction (``dedup_clusters``: O(log n)
+    rounds, each round pinned); the oracle computes the same fixpoint
+    as a recursive-CTE transitive closure over the identical edge set."""
     pairs = t_ngram_jaccard_pairs(spark, sf_dir)
     return dedup_clusters(pairs)
 
 
 @register("t_dedup_clusters_star", oracle=_CLUSTERS_ORACLE)
 def t_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same connected-components labeling through the large-star/
-    small-star backend (Kiveris et al. SoCC 2014,
-    training/dedup.py::dedup_clusters_star) — O(log n) rounds
-    regardless of component diameter, no per-node neighbor arrays.
-    Identical oracle as t_dedup_clusters: both backends compute the
-    same fixpoint, and the driver check pins them to it independently."""
-    from faexport_db_spark.training.dedup import dedup_clusters_star
-
-    pairs = t_ngram_jaccard_pairs(spark, sf_dir)
-    return dedup_clusters_star(pairs)
+    """The same labeling as ``t_dedup_clusters``, kept as its own
+    registry key; one CC implementation serves both."""
+    return t_dedup_clusters(spark, sf_dir)
 
 
 @register("t_minhash_lsh_dedup")  # xxhash64 signatures aren't DuckDB-reproducible

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from faexport_db_spark.operators.merge import merged_submissions, merged_users
+from faexport_db_spark.operators.pins import pinned_rdd, unpin
 
 Tables = Mapping[str, DataFrame]
 
@@ -129,9 +130,9 @@ def _listing(frames: tuple[DataFrame, ...]) -> tuple[int, ...]:
     return tuple(murmur.arrayHash(df._jdf.inputFiles()) for df in frames)
 
 
-def _release(view: DataFrame, pin_rdd) -> None:
+def _release(view: DataFrame, pin: DataFrame) -> None:
     view.unpersist(False)
-    pin_rdd.unpersist(False)
+    unpin(pin)
 
 
 def _store_plan(
@@ -156,11 +157,10 @@ def _store_plan(
             hit.release()
         view = build(tables).persist()
         pin = view.localCheckpoint(eager=True)
-        pin_rdd = pin._jdf.queryExecution().analyzed().rdd()
         # atexit off: the session may be stopped before the interpreter exits
-        release = weakref.finalize(owner, _release, view, pin_rdd)
+        release = weakref.finalize(owner, _release, view, pin)
         release.atexit = False
-        hit = views[build] = _StoreView(deps, listing, pin, pin_rdd.id(), release)
+        hit = views[build] = _StoreView(deps, listing, pin, pinned_rdd(pin).id(), release)
     return hit.pin
 
 

@@ -14,7 +14,6 @@ seeded hashing (no RNG at runtime).
 
 from faexport_db_spark.training.dedup import (  # noqa: F401
     dedup_clusters,
-    dedup_clusters_star,
     exact_dedup,
     minhash_dedup_pairs,
     simhash_dedup_pairs,

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from faexport_db_spark.operators.partitioning import fan_out
+from faexport_db_spark.operators.pins import unpin
 
 
 def tokens_expr(text: str | Column) -> Column:
@@ -535,79 +536,6 @@ def simhash_dedup_pairs(
     return intra.unionByName(cross)
 
 
-def _propagate_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """One min-label propagation round: each node takes the min of its
-    own label and its neighbors' labels (one equi-join + one min
-    groupBy on uniform keys)."""
-    nbr_min = (
-        edges.join(labels, edges["dst"] == labels["node"])
-        .groupBy("src")
-        .agg(F.min("label").alias("nbr_label"))
-    )
-    return labels.join(nbr_min, labels["node"] == nbr_min["src"], "left").select(
-        F.col("node"),
-        F.least(
-            F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-        ).alias("label"),
-    )
-
-
-def dedup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components over near-duplicate pairs: every clustered
-    doc labeled with its cluster's minimum id (the canonical
-    representative a dedup keeps). Output: (doc_id, cluster_rep) for
-    every doc that appears in a pair.
-
-    Iterative min-label propagation — the standard Spark CC shape:
-    each round joins labels across edges and takes the elementwise min,
-    converging in O(diameter) rounds (near-dup clusters are shallow;
-    chains longer than ~20 hops mean the threshold is wrong). Each
-    round is one equi-join + one groupBy on uniform keys; lineage is
-    truncated with localCheckpoint so the plan doesn't grow per round.
-    At massive-graph scale swap the loop body for the large-star/
-    small-star rewrite (Kiveris et al., "Connected Components in
-    MapReduce and Beyond") — same fixpoint, fewer skew hazards.
-    """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(max_iters):
-        new_labels = _propagate_round(edges, labels).localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # Unconverged labels are WRONG labels (a tail node still holds
-        # an intermediate id, so one cluster gets several
-        # "representatives") — failing loudly beats silently returning
-        # them. Diameter > max_iters usually means the pair threshold
-        # chains unrelated docs.
-        raise RuntimeError(
-            f"dedup_clusters did not converge within max_iters={max_iters}; "
-            f"the pair graph has a longer chain than expected — raise "
-            f"max_iters or tighten the near-dup threshold."
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_rep"))
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star operation: symmetrize, then connect every neighbor
     LARGER than u to u's neighborhood minimum. Purely relational — a
@@ -651,26 +579,28 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relinked.union(self_links).distinct()
 
 
-def dedup_clusters_star(
+def dedup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 25,
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the massive-graph backend ``dedup_clusters``'s
-    docstring prescribes. Same contract: (doc_id, cluster_rep) for
-    every doc in a pair, rep = component minimum.
+    """Connected components over near-duplicate pairs: every clustered
+    doc labeled with its cluster's minimum id (the canonical
+    representative a dedup keeps). Output: (doc_id, cluster_rep) for
+    every doc that appears in a pair.
 
-    Where min-label propagation needs O(diameter) rounds — a
-    200-doc near-dup CHAIN (threshold too loose) blows its iteration
-    budget — the star rewrite contracts path lengths geometrically and
-    converges in O(log n) rounds regardless of diameter, with each
-    round two min-groupBys + two equi-joins on edge-shaped rows and no
-    per-node neighbor arrays anywhere. Fixpoint is a star forest:
-    every non-root points directly at its component min, which IS the
-    label set."""
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014): the rewrite
+    contracts path lengths geometrically, so it converges in O(log n)
+    rounds regardless of diameter (a 200-doc near-dup chain included),
+    with each round two min-groupBys + two equi-joins on edge-shaped
+    rows and no per-node neighbor arrays anywhere. Fixpoint is a star
+    forest: every non-root points directly at its component min, which
+    IS the label set. Each round's edges are pinned, so the plan does
+    not grow per round, and the round they replace is released
+    (``operators.pins.unpin``); the result reads the last round's pin.
+    """
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
@@ -684,12 +614,18 @@ def dedup_clusters_star(
             new_edges.exceptAll(edges).limit(1).count()
             + edges.exceptAll(new_edges).limit(1).count()
         )
+        unpin(edges)
         edges = new_edges
         if changed == 0:
             break
     else:
+        # Unconverged labels are WRONG labels (a tail node still points
+        # at an intermediate id, so one cluster gets several
+        # "representatives") — failing loudly beats silently returning
+        # them.
+        unpin(edges)
         raise RuntimeError(
-            f"dedup_clusters_star did not converge within "
+            f"dedup_clusters did not converge within "
             f"max_iters={max_iters}; star contraction halves component "
             f"depth per round, so this graph is vastly deeper than any "
             f"plausible near-dup output — check the pair generator."
@@ -698,8 +634,7 @@ def dedup_clusters_star(
         F.col("src").alias("doc_id"), F.col("dst").alias("cluster_rep")
     )
     # Roots (and nodes whose only pair was a self-pair) have no
-    # outgoing star edge — they label themselves, same contract as the
-    # propagation backend.
+    # outgoing star edge — they label themselves.
     nodes = (
         pairs.select(F.col(id_a).alias("doc_id"))
         .union(pairs.select(F.col(id_b).alias("doc_id")))

@@ -67,11 +67,8 @@ def _chunk_offsets(
     The totals travel back as an n_chunks-row literal map.
 
     Returns (materialized ``narrow``, chunk-id column, per-chunk offset
-    column = sum of ``weight`` over all earlier chunks). Trade-off of
-    ``localCheckpoint``: its blocks live in executor storage (memory,
-    spilling to disk), not in reliable storage, so a plan reading the
-    checkpoint fails rather than recomputes if an executor holding one
-    of its blocks is lost (dynamic allocation included)."""
+    column = sum of ``weight`` over all earlier chunks); the caller
+    owns the pin (``operators.pins.unpin`` states the trade-off)."""
     narrow = narrow.localCheckpoint(eager=True)
     probs = [i / n_chunks for i in range(1, n_chunks)]
     pid = _chunk_pid(key, sorted(set(narrow.approxQuantile(key, probs, 0.001))))
@@ -454,7 +451,7 @@ def cluster_split(
     By default clusters are exact-content groups (md5 of text), which
     needs ONE shuffle total: a window over the content hash picks the
     representative (min id) with no join back. Pass ``clusters`` —
-    (id, cluster_id) from ``dedup_clusters_star`` / minhash CC — to
+    (id, cluster_id) from ``dedup_clusters`` over minhash pairs — to
     split on near-duplicate components instead; that path joins on id
     (sort-merge on the corpus key, the partitioner big joins already
     use).

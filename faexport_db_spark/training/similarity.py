@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from faexport_db_spark.operators.partitioning import fan_out
+from faexport_db_spark.operators.pins import unpin
 
 
 def _as_double(arr: Column) -> Column:
@@ -1627,7 +1628,9 @@ def mmr_rerank_quantized(
     generation (one map-only dot product against the broadcast query
     + a top-``pool`` window); the greedy loop then runs ``picks``
     unrolled rounds on the ``pool``-row frame — pool × picks tiny
-    joins, the corpus is never touched again.
+    joins, the corpus is never touched again. Each round's selection
+    is pinned and the one it extends released; the candidate pool is
+    released before return (``operators.pins.unpin``).
 
     Output: (sel_rank, id, rel, max_sim, mmr) — all integers; the
     first pick carries max_sim 0 and mmr = lam_num·rel.
@@ -1672,7 +1675,7 @@ def mmr_rerank_quantized(
             (F.lit(lam_num) * F.col("rel")).cast("bigint").alias("mmr"),
         )
     )
-    selected = first
+    selected = first.localCheckpoint(eager=True)
     for t in range(2, picks + 1):
         sel_vecs = selected.select(
             F.col("id").alias("sid"), F.col("qv").alias("sv")
@@ -1699,7 +1702,9 @@ def mmr_rerank_quantized(
                 "id", "qv", "rel", "max_sim", "mmr",
             )
         )
-        selected = selected.unionAll(pick).localCheckpoint(eager=True)
+        done, selected = selected, selected.unionAll(pick).localCheckpoint(eager=True)
+        unpin(done)
+    unpin(cand)
     return selected.drop("qv")
 
 
@@ -1734,7 +1739,9 @@ def power_iteration_quantized(
     integer sums, the ``kmeans_quantized`` Arrow-path rule). The
     iteration itself runs on the dim²-row M frame: per step one
     broadcast of the dim-row vector and one M-keyed aggregate —
-    the corpus is never touched again.
+    the corpus is never touched again. Each step's vector is pinned
+    and the one it replaces released, and M is released before return
+    (``operators.pins.unpin``).
 
     Output: (pos, v) — the un-normalized integer direction after
     ``iters`` damped steps, one row per dimension.
@@ -1768,7 +1775,7 @@ def power_iteration_quantized(
         .localCheckpoint(eager=True)
     )
     for _ in range(iters - 1):
-        v = (
+        done, v = v, (
             m.join(
                 F.broadcast(v.select(F.col("pos").alias("j"), F.col("v").alias("vj"))),
                 "j",
@@ -1779,4 +1786,6 @@ def power_iteration_quantized(
             )
             .localCheckpoint(eager=True)
         )
+        unpin(done)
+    unpin(m)
     return v

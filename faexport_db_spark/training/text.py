@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from faexport_db_spark.operators.partitioning import fan_out
+from faexport_db_spark.operators.pins import unpin
 
 # Marker-word profiles for the n-gram/stopword language heuristic.
 # Real pipelines plug fasttext/cld3 here; the operator contract is the
@@ -1399,7 +1400,9 @@ def bpe_merges(
     Catalyst ``aggregate`` fold over the symbol array — no Python in
     any per-row path — and each iteration's symbol frame is EAGERLY
     localCheckpointed so iteration i+1 does not re-embed i's whole
-    derivation (the r06 pagerank lesson). The symbol frame is
+    derivation (the r06 pagerank lesson), and the one it replaces is
+    released (``operators.pins.unpin``); the merge table is built from
+    the collected merges, so no pin outlives the call. The symbol frame is
     vocab-sized (distinct words), orders of magnitude smaller than
     the corpus it summarizes.
 
@@ -1456,7 +1459,9 @@ def bpe_merges(
                 ),
             ).otherwise(F.concat(acc, F.array(s))),
         )
-        cur = cur.select("freq", folded.alias("syms")).localCheckpoint(eager=True)
+        done, cur = cur, cur.select("freq", folded.alias("syms")).localCheckpoint(eager=True)
+        unpin(done)
+    unpin(cur)
     return spark.createDataFrame(
         merges, "it bigint, lhs string, rhs string, merged string, pair_count bigint"
     )

@@ -48,8 +48,10 @@ def dumps(tmp_path_factory):
     return str(first), str(second)
 
 
-@pytest.fixture(scope="module")
-def store(spark, dumps):
+def _redelivered(spark, dumps):
+    """Both dumps as nested snapshots, the second delivered TWICE (the
+    reference's re-run reality; SURVEY §2.10 contract: append + dedup,
+    never upsert)."""
     first, second = dumps
     snaps1 = e621.to_snapshots(
         e621.read_csv(spark, first), contributor_id=1,
@@ -59,10 +61,12 @@ def store(spark, dumps):
         e621.read_csv(spark, second), contributor_id=1,
         scan_datetime_lit="2022-08-13 00:00:00",
     )
-    # second dump delivered TWICE (the reference's re-run reality;
-    # SURVEY §2.10 contract: append + dedup, never upsert)
-    nested = snaps1.unionByName(snaps2).unionByName(snaps2)
-    tables = explode_to_store(nested)
+    return snaps1.unionByName(snaps2).unionByName(snaps2)
+
+
+@pytest.fixture(scope="module")
+def store(spark, dumps):
+    tables = explode_to_store(_redelivered(spark, dumps))
     # single-pass cleanup mirrors the reference's cron order, which
     # leaves children newly orphaned by snapshot dedup for the NEXT
     # run; the fixpoint composition converges in one call.
@@ -152,3 +156,29 @@ def test_export_roundtrip(spark, store, tmp_path):
     assert set(back) == {"2001", "2002"}
     assert back["2001"]["submission_data"]["description"] == "edited text"
     assert back["2001"]["cache_data"]["snapshot_count"] == 2
+
+
+def test_cleanup_to_fixpoint_releases_superseded_rounds(spark, dumps, monkeypatch):
+    """The redelivery makes round 1 remove rows, so round 2 runs as the
+    audit. Round 1's pins are released once round 2's counts have run;
+    the returned round's pins stay stored."""
+    from block_storage import still_stored, stored_rdds
+
+    from faexport_db_spark.maintenance import dedup as maintenance
+    from faexport_db_spark.operators.pins import pinned_rdd
+
+    rounds = []
+    one_round = maintenance.cleanup
+
+    def recorded(tables):
+        rounds.append(one_round(tables))
+        return rounds[-1]
+
+    monkeypatch.setattr(maintenance, "cleanup", recorded)
+    tables = maintenance.cleanup_to_fixpoint(explode_to_store(_redelivered(spark, dumps)))
+    assert len(rounds) == 2 and tables is rounds[-1]
+    superseded = {pinned_rdd(df).id() for df in rounds[0].values()}
+    returned = {pinned_rdd(df).id() for df in tables.values()}
+    assert len(superseded) == len(returned) == 4
+    assert not still_stored(spark, superseded)
+    assert returned <= stored_rdds(spark)

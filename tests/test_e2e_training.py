@@ -92,12 +92,12 @@ def test_round6_split_chunk_compose_with_dedup(spark, sf_small, corpus):
     cluster-aware split -> chunking of the train slice. The leakage
     property the split exists for: NO near-dup pair ever straddles two
     splits; and chunk accounting covers every surviving train doc."""
-    from faexport_db_spark.training.dedup import dedup_clusters_star, minhash_dedup_pairs
+    from faexport_db_spark.training.dedup import dedup_clusters, minhash_dedup_pairs
     from faexport_db_spark.training.pipeline import cluster_split
     from faexport_db_spark.training.text import chunk_documents
 
     pairs = minhash_dedup_pairs(corpus, threshold=0.6).localCheckpoint()
-    clusters = dedup_clusters_star(pairs).select(
+    clusters = dedup_clusters(pairs).select(
         "doc_id", F.col("cluster_rep").alias("cluster_id")
     )
     split = cluster_split(corpus, clusters=clusters, val_frac=0.3, test_frac=0.3)

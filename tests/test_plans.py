@@ -367,13 +367,12 @@ def test_corpus_prep_and_clusters_stay_jvm_side(spark, sf_small):
         max_python_evals=0,
         forbid_join=("CartesianProduct", "BroadcastNestedLoopJoin"),
     )
-    from faexport_db_spark.training.dedup import _propagate_round
+    from faexport_db_spark.training.dedup import _large_star, _small_star
 
     pairs = QUERIES["t_ngram_jaccard_pairs"](spark, sf_small)
     edges = pairs.selectExpr("id_a AS src", "id_b AS dst")
-    labels = edges.selectExpr("src AS node", "src AS label")
     assert_plan(
-        _propagate_round(edges, labels),
+        _small_star(_large_star(edges)),
         max_python_evals=0,
         forbid_join=("CartesianProduct",),
     )

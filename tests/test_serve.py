@@ -8,6 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from block_storage import still_stored, stored_rdds
 import fixtures_faexport as fx
 from faexport_db_spark import serve
 
@@ -110,22 +111,6 @@ def test_view_submission_sees_a_replaced_child_table(store):
     assert [k["keyword"] for k in again["submission_data"]["keywords"]] == ["cat", "dog"]
 
 
-def _stored_rdds(spark) -> set[int]:
-    """Ids of the RDDs that hold blocks in storage."""
-    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-
-
-def _still_stored(spark, ids: set[int], timeout_s: float = 30.0) -> set[int]:
-    """Those of ``ids`` still in storage once none is left or
-    ``timeout_s`` has passed: a release unpersists without blocking."""
-    import time
-
-    deadline = time.monotonic() + timeout_s
-    while (left := ids & _stored_rdds(spark)) and time.monotonic() < deadline:
-        time.sleep(0.1)
-    return left
-
-
 def test_store_plans_are_released_with_the_store(spark, store):
     """A store's memo entries go when the store's key tables are
     collected, and the blocks of their views and pins go with them."""
@@ -141,11 +126,11 @@ def test_store_plans_are_released_with_the_store(spark, store):
     }
     gc.collect()
     before = len(memo)
-    stored = _stored_rdds(spark)
+    stored = stored_rdds(spark)
     assert serve.view_submission(local, "fa", "102")["submission_data"]["title"] == "Keep"
     assert serve.view_user(local, "weasyl", "u9")["user_data"]["display_name"] == "W9"
     assert len(memo) == before + 2
-    built = _stored_rdds(spark) - stored
+    built = stored_rdds(spark) - stored
     pins = {
         hit.pin_rdd_id
         for key in ("submission_snapshots", "user_snapshots")
@@ -159,7 +144,7 @@ def test_store_plans_are_released_with_the_store(spark, store):
     gc.collect()
     assert snaps() is None and users() is None
     assert len(memo) == before
-    assert not _still_stored(spark, built)
+    assert not still_stored(spark, built)
 
 
 def test_replaced_store_view_releases_its_materialization(spark, store):
@@ -174,16 +159,16 @@ def test_replaced_store_view_releases_its_materialization(spark, store):
 
     snaps = store["submission_snapshots"]
     local = {**store, "submission_snapshots": snaps.filter(F.col("submission_snapshot_id") > 0)}
-    stored = _stored_rdds(spark)
+    stored = stored_rdds(spark)
     assert keywords(local) == ["cat", "dog"]
-    old = _stored_rdds(spark) - stored
+    old = stored_rdds(spark) - stored
     old_pin = api._plans_by_store[local["submission_snapshots"]][api._merged_store].pin_rdd_id
     assert len(old) == 2 and old_pin in old, old
     kw = local["submission_snapshot_keywords"]
     swapped = {**local, "submission_snapshot_keywords": kw.filter(F.col("keyword") != "dog")}
     assert keywords(swapped) == ["cat"]
-    assert not _still_stored(spark, old)
-    new = _stored_rdds(spark) - stored
+    assert not still_stored(spark, old)
+    new = stored_rdds(spark) - stored
     new_pin = api._plans_by_store[swapped["submission_snapshots"]][api._merged_store].pin_rdd_id
     assert len(new) == 2 and new_pin in new, new
 

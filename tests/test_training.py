@@ -490,15 +490,16 @@ def test_index_probe_rejects_mismatched_signing_params(spark, sf_small, tmp_path
 def test_dedup_clusters_raises_when_unconverged(spark):
     """Hitting the iteration cap with labels still moving must fail
     loudly — unconverged labels are wrong labels."""
+    from golden_components import golden_components
+
     from faexport_db_spark.training.dedup import dedup_clusters
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "id_a bigint, id_b bigint"
-    )
+    edges = [(i, i + 1) for i in range(1, 8)]
+    chain = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_clusters(chain, max_iters=2)
-    got = {r["doc_id"]: r["cluster_rep"] for r in dedup_clusters(chain).collect()}
-    assert set(got.values()) == {1}
+    got = {(r["doc_id"], r["cluster_rep"]) for r in dedup_clusters(chain).collect()}
+    assert got == golden_components(edges)
 
 
 def test_simhash_pair_survives_dropped_first_shared_chunk(spark):
@@ -880,19 +881,16 @@ def test_ann_model_sidecars_go_through_hadoop_fs(spark, sf_small, tmp_path):
         ivf_topk_persisted(spark, f"file://{tmp_path}/nope", queries)
 
 
-def test_star_clusters_match_propagation_backend(spark, sf_small):
-    """dedup_clusters_star (Kiveris et al. large-star/small-star) must
-    produce the identical (doc_id, cluster_rep) labeling as the
-    min-label propagation backend on a real near-dup pair set and on a
-    seeded random graph."""
+def test_star_clusters_match_union_find_golden(spark, sf_small):
+    """dedup_clusters (Kiveris et al. large-star/small-star) produces
+    the union-find golden's (doc_id, cluster_rep) labeling on a real
+    near-dup pair set and on a seeded random graph."""
     import random
 
+    from golden_components import golden_components
+
     from faexport_db_spark.queries.training_queries import _mutated_corpus
-    from faexport_db_spark.training.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-        simhash_dedup_pairs,
-    )
+    from faexport_db_spark.training.dedup import dedup_clusters, simhash_dedup_pairs
 
     def labels(df):
         return {(r["doc_id"], r["cluster_rep"]) for r in df.collect()}
@@ -901,40 +899,52 @@ def test_star_clusters_match_propagation_backend(spark, sf_small):
         load_table(spark, sf_small, "documents").select("doc_id", "text")
     )
     pairs = simhash_dedup_pairs(docs, max_hamming=3).localCheckpoint()
-    assert labels(dedup_clusters_star(pairs)) == labels(dedup_clusters(pairs))
+    edges = [(r["id_a"], r["id_b"]) for r in pairs.collect()]
+    assert edges
+    assert labels(dedup_clusters(pairs)) == golden_components(edges)
 
     rng = random.Random(7)
     rand_edges = [
         (rng.randrange(500), rng.randrange(500)) for _ in range(400)
     ]
-    rand = spark.createDataFrame(
-        [(a, b) for a, b in rand_edges if a != b], "id_a bigint, id_b bigint"
-    )
-    assert labels(dedup_clusters_star(rand)) == labels(dedup_clusters(rand))
+    rand_edges = [(a, b) for a, b in rand_edges if a != b]
+    rand = spark.createDataFrame(rand_edges, "id_a bigint, id_b bigint")
+    assert labels(dedup_clusters(rand)) == golden_components(rand_edges)
 
 
 def test_star_clusters_converge_on_deep_chains(spark):
-    """The star backend's reason to exist: a 200-node path graph —
-    diameter 199 — converges in O(log n) star rounds where min-label
-    propagation needs 199 rounds and fails loudly at its default
-    budget."""
-    import pytest as _pytest
+    """A 200-node path graph — diameter 199 — converges in O(log n)
+    star rounds, well inside a 12-round budget, to the golden's
+    labeling."""
+    from golden_components import golden_components
 
-    from faexport_db_spark.training.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-    )
+    from faexport_db_spark.training.dedup import dedup_clusters
+
+    edges = [(i, i + 1) for i in range(1, 200)]
+    chain = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+    out = {
+        (r["doc_id"], r["cluster_rep"])
+        for r in dedup_clusters(chain, max_iters=12).collect()
+    }
+    assert out == golden_components(edges) == {(i, 1) for i in range(1, 201)}
+
+
+def test_dedup_clusters_releases_superseded_rounds(spark):
+    """On a 200-node chain, block storage gains at most one round's pin
+    plus the pin the result reads: every superseded round is
+    released."""
+    from block_storage import gained_rdds, stored_rdds
+
+    from faexport_db_spark.training.dedup import dedup_clusters
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 200)], "id_a bigint, id_b bigint"
     )
-    out = {
-        (r["doc_id"], r["cluster_rep"])
-        for r in dedup_clusters_star(chain, max_iters=12).collect()
-    }
-    assert out == {(i, 1) for i in range(1, 201)}
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(chain, max_iters=12)
+    before = stored_rdds(spark)
+    out = dedup_clusters(chain)
+    assert {r["cluster_rep"] for r in out.collect()} == {1}
+    gained = gained_rdds(spark, before, at_most=2)
+    assert len(gained) <= 2, gained
 
 
 def test_bm25_retrieval_properties(spark, sf_small, tmp_path):
@@ -2997,11 +3007,46 @@ def test_bfs_hops_multi_seed_takes_min(spark):
     assert got == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}
 
 
+def test_unpin_releases_a_pin_and_refuses_other_frames(spark):
+    """``unpin`` frees the blocks of a localCheckpoint and refuses a
+    frame derived from one, which holds no blocks of its own."""
+    from block_storage import still_stored, stored_rdds
+
+    from faexport_db_spark.operators.pins import pinned_rdd, unpin
+
+    pin = spark.range(10).localCheckpoint(eager=True)
+    with pytest.raises(ValueError, match="not a localCheckpoint"):
+        unpin(pin.filter("id > 3"))
+    rdd = pinned_rdd(pin).id()
+    assert rdd in stored_rdds(spark)
+    unpin(pin)
+    assert not still_stored(spark, {rdd})
+
+
+def test_bfs_hops_releases_superseded_levels(spark):
+    """Ten levels on a path: block storage gains at most one level's pin
+    plus the returned pin; every superseded level and the symmetrized
+    edges are released."""
+    from block_storage import gained_rdds, stored_rdds
+
+    from faexport_db_spark.operators.graph import bfs_hops, canonical_edges
+
+    edges = canonical_edges(
+        spark.createDataFrame([(i, i + 1) for i in range(15)], "src bigint, dst bigint")
+    )
+    seeds = spark.createDataFrame([(0,)], "node bigint")
+    before = stored_rdds(spark)
+    got = {r["node"]: r["hops"] for r in bfs_hops(edges, seeds, max_hops=10).collect()}
+    assert got == {i: i for i in range(11)}
+    gained = gained_rdds(spark, before, at_most=2)
+    assert len(gained) <= 2, gained
+
+
 def test_connected_components_query_matches_star_labels(spark):
-    """g6's star-contraction backend labels a chain + a triangle + an
-    isolated edge with their component minima, even though the chain's
-    diameter exceeds any single propagation round."""
-    from faexport_db_spark.training.dedup import dedup_clusters_star
+    """g6's star contraction labels a chain + a triangle + an isolated
+    edge with their component minima, even though the chain's diameter
+    exceeds a single round."""
+    from faexport_db_spark.training.dedup import dedup_clusters
 
     pairs = spark.createDataFrame(
         [(10, 11), (11, 12), (12, 13), (13, 14),  # chain, min 10
@@ -3009,7 +3054,7 @@ def test_connected_components_query_matches_star_labels(spark):
          (30, 31)],                               # edge, min 30
         "id_a bigint, id_b bigint",
     )
-    got = {r["doc_id"]: r["cluster_rep"] for r in dedup_clusters_star(pairs).collect()}
+    got = {r["doc_id"]: r["cluster_rep"] for r in dedup_clusters(pairs).collect()}
     assert got == {10: 10, 11: 10, 12: 10, 13: 10, 14: 10,
                    20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
 
@@ -3484,13 +3529,13 @@ def test_modularity_numerator_hand_graph(spark):
     """Two triangles joined by nothing: each component's q_num =
     4m*L_c - D_c^2 with m=6, L_c=3, D_c=6 -> 72 - 36 = 36."""
     from faexport_db_spark.operators.graph import canonical_edges, degrees
-    from faexport_db_spark.training.dedup import dedup_clusters_star
+    from faexport_db_spark.training.dedup import dedup_clusters
     from pyspark.sql import functions as F
 
     edges = canonical_edges(spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10)],
         "src bigint, dst bigint"))
-    comp = dedup_clusters_star(
+    comp = dedup_clusters(
         edges.select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
     ).select(F.col("doc_id").alias("node"), F.col("cluster_rep").alias("c"))
     m = edges.count()
