@@ -13,17 +13,21 @@ and those files' hashes (:217-250). ``cleanup`` reaches the same state
 in dependency order instead — parents before children, each table
 deduplicated once and filtered once against its parent's FINAL kept
 set — so one pass leaves no orphans and is a fixpoint by construction.
-``cleanup_to_fixpoint`` runs a second pass as the audit.
+``cleanup_to_fixpoint`` checks that with one unpinned audit query over
+the pass's output and runs another pass only if the audit finds work.
 
 Every kept table is materialized once (``localCheckpoint(eager=True)``)
 before its children read it, so no window is re-derived downstream and
 appending the returned tables is a pure write. Scale notes: every
 window partitions on a high-cardinality composite key; every semi-join
 joins child fact to parent fact on the surrogate id — co-partitionable,
-handled by AQE. Nothing collects to the driver.
+handled by AQE. Only the audit's one-row probe reaches the driver.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -79,6 +83,50 @@ USER_DEDUP_KEYS = [
 ]
 
 
+class Rule(NamedTuple):
+    """How ``cleanup`` keeps one table, and what the audit checks: one
+    row per ``keys`` group (the ``keep`` end of ``id_col``) whose ``fk``
+    is in ``parent``'s ``fk`` column."""
+
+    table: str
+    keys: list[str]
+    id_col: str
+    keep: str
+    parent: str | None = None
+    fk: str | None = None
+
+
+_SNAPS, _SNAP_ID = "submission_snapshots", "submission_snapshot_id"
+_FILES = "submission_snapshot_files"
+
+# Dependency order: every parent before its children.
+CLEANUP_RULES = (
+    Rule("user_snapshots", USER_DEDUP_KEYS, "user_snapshot_id", "lowest"),
+    Rule(_SNAPS, SUBMISSION_DEDUP_KEYS, _SNAP_ID, "lowest"),
+    Rule(_FILES, [_SNAP_ID, "site_file_id"], "file_id", "highest", _SNAPS, _SNAP_ID),
+    Rule(
+        "submission_snapshot_file_hashes", ["file_id", "algo_id"], "hash_id", "highest",
+        _FILES, "file_id",
+    ),
+    # The reference never needs a keyword dedup: duplicate snapshots
+    # always carry fresh serial ids there, so the snapshot-dedup cascade
+    # removes the losing snapshot's keywords. Our streaming redelivery
+    # mints the SAME ids deterministically, leaving full-row keyword
+    # duplicates the cascade can't see — collapse them (a no-op on
+    # reference-shaped data).
+    Rule(
+        "submission_snapshot_keywords", [_SNAP_ID, "keyword", "ordinal"], "keyword_id",
+        "lowest", _SNAPS, _SNAP_ID,
+    ),
+)
+
+
+def _applies(rule: Rule, tables: dict[str, DataFrame]) -> bool:
+    """A missing table is skipped, and so is a child whose parent table
+    is missing (the reference cascade passes it through unchanged)."""
+    return rule.table in tables and (rule.parent is None or rule.parent in tables)
+
+
 def cleanup(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """One pass of the reference's cleanup (remove_duplicates.py:316-322),
     in dependency order, as eager DataFrame rewrites::
@@ -104,68 +152,90 @@ def cleanup(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     returned pins (``operators.pins.unpin`` states the trade-off and
     when one may be released).
 
-    Input/output dict keys: user_snapshots, submission_snapshots,
-    submission_snapshot_keywords, submission_snapshot_files,
-    submission_snapshot_file_hashes. A missing table is skipped, and a
-    child whose parent table is missing is passed through unchanged,
-    as in the reference cascade; other keys pass through.
+    Input/output dict keys: the tables of ``CLEANUP_RULES``. A missing
+    table is skipped, and a child whose parent table is missing is
+    passed through unchanged, as in the reference cascade; other keys
+    pass through.
     """
     out = dict(tables)
-
-    def keep(name, keys, id_col, order, parent=None, fk=None):
-        df = out.get(name)
-        if df is None or (parent is not None and parent not in out):
-            return
-        if parent is not None:
-            df = remove_orphans(df, out[parent], fk, fk)
-        out[name] = dedup_keep_one(df, keys, id_col, order).localCheckpoint(eager=True)
-
-    snaps, snap_id = "submission_snapshots", "submission_snapshot_id"
-    files = "submission_snapshot_files"
-    keep("user_snapshots", USER_DEDUP_KEYS, "user_snapshot_id", "lowest")
-    keep(snaps, SUBMISSION_DEDUP_KEYS, snap_id, "lowest")
-    keep(files, [snap_id, "site_file_id"], "file_id", "highest", snaps, snap_id)
-    keep(
-        "submission_snapshot_file_hashes", ["file_id", "algo_id"], "hash_id", "highest",
-        files, "file_id",
-    )
-    # The reference never needs a keyword dedup: duplicate snapshots
-    # always carry fresh serial ids there, so the snapshot-dedup cascade
-    # removes the losing snapshot's keywords. Our streaming redelivery
-    # mints the SAME ids deterministically, leaving full-row keyword
-    # duplicates the cascade can't see — collapse them (a no-op on
-    # reference-shaped data).
-    keep(
-        "submission_snapshot_keywords", [snap_id, "keyword", "ordinal"], "keyword_id", "lowest",
-        snaps, snap_id,
-    )
+    for rule in CLEANUP_RULES:
+        if not _applies(rule, out):
+            continue
+        df = out[rule.table]
+        if rule.parent is not None:
+            df = remove_orphans(df, out[rule.parent], rule.fk, rule.fk)
+        kept = dedup_keep_one(df, rule.keys, rule.id_col, rule.keep)
+        out[rule.table] = kept.localCheckpoint(eager=True)
     return out
+
+
+def _keyed(df: DataFrame, check: str, cols: list[str], rows: int, parents: int) -> DataFrame:
+    """``df``'s rows as ``(check, key, rows, parents)`` audit rows; the
+    key is ``cols`` as an array of strings, which compares exactly for
+    the key columns' types (ids, strings, timestamps)."""
+    return df.select(
+        F.lit(check).alias("check"),
+        F.array(*[F.col(c).cast("string") for c in cols]).alias("key"),
+        F.lit(rows).alias("rows"),
+        F.lit(parents).alias("parents"),
+    )
+
+
+def _needs_another_round(tables: dict[str, DataFrame]) -> bool:
+    """Whether another ``cleanup`` pass would change ``tables``: some
+    dedup-key group holds more than one row, or some child row's
+    foreign key is missing from its parent.
+
+    One query with one shuffle, and nothing pinned: every row of a
+    checked table is keyed by its rule and its dedup key (a duplicate
+    is a key with two rows), and every child row and non-null parent id
+    by its rule and foreign key (an orphan is a key with child rows and
+    no parent row)."""
+    keyed = []
+    for rule in CLEANUP_RULES:
+        if not _applies(rule, tables):
+            continue
+        df = tables[rule.table]
+        keyed.append(_keyed(df, f"{rule.table} dedup", rule.keys, 1, 0))
+        if rule.parent is not None:
+            parent = tables[rule.parent].filter(F.col(rule.fk).isNotNull())
+            keyed.append(_keyed(df, f"{rule.table} fk", [rule.fk], 1, 0))
+            keyed.append(_keyed(parent, f"{rule.table} fk", [rule.fk], 0, 1))
+    if not keyed:
+        return False
+    groups = (
+        reduce(DataFrame.unionAll, keyed)
+        .groupBy("check", "key")
+        .agg(F.sum("rows").alias("rows"), F.sum("parents").alias("parents"))
+    )
+    bad = F.when(F.col("check").endswith(" dedup"), F.col("rows") > 1).otherwise(
+        (F.col("rows") > 0) & (F.col("parents") == 0)
+    )
+    return not groups.filter(bad).isEmpty()
 
 
 def cleanup_to_fixpoint(
     tables: dict[str, DataFrame], max_rounds: int = 3
 ) -> dict[str, DataFrame]:
-    """Run ``cleanup`` until row counts stop changing (the reference
-    reaches the same state by being run repeatedly from cron). Counts
-    are the only extra actions; bounded by ``max_rounds``.
+    """Run ``cleanup`` until another pass would change nothing (the
+    reference reaches the same state by being run repeatedly from
+    cron); bounded by ``max_rounds``.
 
-    ``cleanup`` is a fixpoint in one pass, so round 2 is the audit: it
-    re-cleans round 1's pins, its counts read the new pins, and equal
-    counts end the loop. Once a round's counts have run, the pins of
-    the round it superseded are released; input frames and tables
-    passed through unchanged are kept. The returned tables are the last
-    round's pins, owned by the caller, so writing them re-runs no
-    dedup plan."""
+    ``cleanup`` is a fixpoint in one pass, so after each pass an audit
+    query over its pins (``_needs_another_round``: a duplicate dedup
+    key or an orphan child row) decides whether another pass runs; on
+    correct input it never does, and the audit pins nothing. A round's
+    pins are released as soon as the next round has materialized its
+    own; input frames and tables passed through unchanged are kept.
+    The returned tables are the last round's pins, owned by the
+    caller, so writing them re-runs no dedup plan."""
     inputs = list(tables.values())
-    counts = {name: df.count() for name, df in tables.items()}
     for _ in range(max_rounds):
         done, tables = tables, cleanup(tables)
-        new_counts = {name: df.count() for name, df in tables.items()}
         kept = {id(df) for df in (*inputs, *tables.values())}
         for df in done.values():
             if id(df) not in kept:
                 unpin(df)
-        if new_counts == counts:
+        if not _needs_another_round(tables):
             break
-        counts = new_counts
     return tables

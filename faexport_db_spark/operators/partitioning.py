@@ -47,7 +47,12 @@ def fan_out(
     (OPTIMIZATION_r10.md) and was deleted, and the override with it.
 
     Intended for source scans (every call site wraps a freshly-loaded
-    table). The width probe estimates the scan's split count from file
+    table). It widens only the work planned above the exchange: a
+    deterministic filter on the fanned-out frame is pushed below the
+    exchange by Catalyst, and with it every expression the filter
+    reads, which then runs in the scan's tasks at the source's width
+    (and again above the exchange, if a projection there computes it).
+    The width probe estimates the scan's split count from file
     metadata instead of ``df.rdd.getNumPartitions()``, which converts
     the plan to an RDD and thereby plans the whole query a second time
     on every call (VERDICT r02 item 5). Non-file-backed inputs (tiny

@@ -35,10 +35,13 @@ from faexport_db_spark.streaming.microbatch import start_batch_stream
 # are unique ACROSS batches without reading the store's current max
 # (the reference round-trips RETURNING ids instead,
 # models/submission.py:353-360). explode_to_store mints DENSE 0..n-1
-# ids (ingest/base.py::with_dense_ids), so any batch of < 2^40 rows
-# (a trillion) cannot collide with the next batch's stride — unlike raw
-# monotonically_increasing_id, whose partition-indexed sparse ids
-# overflow the stride as soon as a batch has >= 128 partitions.
+# ids per table from one pin of the batch (ingest/base.py), so any
+# batch with < 2^40 rows in each table (a trillion) cannot collide with
+# the next batch's stride — unlike raw monotonically_increasing_id,
+# whose partition-indexed sparse ids overflow the stride as soon as a
+# batch has >= 128 partitions. A re-delivered batch mints the same ids
+# again, so its duplicates are full-row copies that maintenance
+# collapses.
 _BATCH_ID_STRIDE = 1 << 40
 
 

@@ -85,8 +85,16 @@ def quality_features(
     filter blocks whole-stage codegen) with no common-subexpression
     elimination — measured 0.42s → 0.30s at sf0.1. CollapseProject
     never re-merges: every bound column is non-cheap and
-    multi-referenced. ``fan_out`` spreads the map work when the source
-    arrives with fewer splits than cores (no-op on wide inputs)."""
+    multi-referenced.
+
+    ``fan_out`` repartitions a source that arrives with fewer splits
+    than cores (no-op on wide inputs), but that spreads this map work
+    only when nothing filters on the result. A caller's
+    ``filter(quality_score >= x)`` is deterministic, so Catalyst pushes
+    it through these projections and below the ``REPARTITION_BY_NUM``
+    exchange: the whole quality expression then runs in the scan's
+    tasks (one task for a single small JSON file), and the projections
+    above the exchange compute it again for the rows that pass."""
     keep_cols = [F.col(c) for c in keep]
     n_chars = F.col("n_chars_computed")
     n_toks = F.col("__nt")

@@ -158,27 +158,86 @@ def test_export_roundtrip(spark, store, tmp_path):
     assert back["2001"]["cache_data"]["snapshot_count"] == 2
 
 
-def test_cleanup_to_fixpoint_releases_superseded_rounds(spark, dumps, monkeypatch):
-    """The redelivery makes round 1 remove rows, so round 2 runs as the
-    audit. Round 1's pins are released once round 2's counts have run;
-    the returned round's pins stay stored."""
-    from block_storage import still_stored, stored_rdds
-
+def _recorded_rounds(monkeypatch, doctor=None):
+    """Patch ``maintenance.cleanup`` (the module global
+    ``cleanup_to_fixpoint`` calls) to record every round's output;
+    ``doctor(spark_tables)`` may rewrite the first round's output."""
     from faexport_db_spark.maintenance import dedup as maintenance
-    from faexport_db_spark.operators.pins import pinned_rdd
 
     rounds = []
     one_round = maintenance.cleanup
 
     def recorded(tables):
-        rounds.append(one_round(tables))
-        return rounds[-1]
+        out = one_round(tables)
+        if doctor is not None and not rounds:
+            out = doctor(out)
+        rounds.append(out)
+        return out
 
     monkeypatch.setattr(maintenance, "cleanup", recorded)
-    tables = maintenance.cleanup_to_fixpoint(explode_to_store(_redelivered(spark, dumps)))
-    assert len(rounds) == 2 and tables is rounds[-1]
-    superseded = {pinned_rdd(df).id() for df in rounds[0].values()}
+    return rounds
+
+
+def test_cleanup_to_fixpoint_runs_one_round_and_audit_pins_nothing(spark, dumps, monkeypatch):
+    """One ``cleanup`` pass is a fixpoint, so on the redelivered dumps
+    the loop runs one round; its audit then finds nothing to do and
+    leaves no block in storage. The returned round's pins stay stored."""
+    from block_storage import gained_rdds, stored_rdds
+
+    from faexport_db_spark.maintenance import dedup as maintenance
+    from faexport_db_spark.operators.pins import pinned_rdd
+
+    rounds = _recorded_rounds(monkeypatch)
+    tables = explode_to_store(_redelivered(spark, dumps))
+    before = stored_rdds(spark)
+    tables = maintenance.cleanup_to_fixpoint(tables)
+    assert len(rounds) == 1 and tables is rounds[0]
     returned = {pinned_rdd(df).id() for df in tables.values()}
-    assert len(superseded) == len(returned) == 4
-    assert not still_stored(spark, superseded)
-    assert returned <= stored_rdds(spark)
+    assert len(returned) == 4
+    assert gained_rdds(spark, before, at_most=4) == returned
+    assert tables["submission_snapshots"].count() == 4
+
+
+def _with_duplicate(tables):
+    """Round output with one snapshot row repeated."""
+    from faexport_db_spark.operators.pins import unpin
+
+    snaps = tables["submission_snapshots"]
+    tables["submission_snapshots"] = snaps.unionByName(snaps.limit(1)).localCheckpoint(eager=True)
+    unpin(snaps)
+    return tables
+
+
+def _with_orphan(tables):
+    """Round output with one keyword row whose snapshot does not exist."""
+    from faexport_db_spark.operators.pins import unpin
+
+    kws = tables["submission_snapshot_keywords"]
+    orphan = kws.limit(1).withColumn("submission_snapshot_id", F.lit(-1).cast("bigint"))
+    tables["submission_snapshot_keywords"] = kws.unionByName(orphan).localCheckpoint(eager=True)
+    unpin(kws)
+    return tables
+
+
+def test_cleanup_to_fixpoint_releases_superseded_rounds(spark, dumps, monkeypatch):
+    """A round that leaves one duplicate, or one orphan, makes the audit
+    run a second round. The first round's pins are released once the
+    second has materialized its own; the returned round's pins stay
+    stored, and hold neither the duplicate nor the orphan."""
+    from block_storage import still_stored, stored_rdds
+
+    from faexport_db_spark.maintenance import dedup as maintenance
+    from faexport_db_spark.operators.pins import pinned_rdd
+
+    for doctor in (_with_duplicate, _with_orphan):
+        monkeypatch.undo()
+        rounds = _recorded_rounds(monkeypatch, doctor)
+        tables = maintenance.cleanup_to_fixpoint(explode_to_store(_redelivered(spark, dumps)))
+        assert len(rounds) == 2 and tables is rounds[-1], doctor.__name__
+        superseded = {pinned_rdd(df).id() for df in rounds[0].values()}
+        returned = {pinned_rdd(df).id() for df in tables.values()}
+        assert len(superseded) == len(returned) == 4
+        assert not still_stored(spark, superseded), doctor.__name__
+        assert returned <= stored_rdds(spark)
+        assert tables["submission_snapshots"].count() == 4
+        assert tables["submission_snapshot_keywords"].count() == 8

@@ -261,8 +261,8 @@ def test_explode_to_store_leaves_no_cache_entries(spark, e621_csv, tmp_path):
     """explode_to_store runs once per streaming micro-batch
     (streaming/ingest_stream.py), and CacheManager entries are never
     released on their own, so it must cache nothing. Its ids are pinned
-    by with_dense_ids' checkpoints instead: separate writes of the
-    parent and child tables still agree on them."""
+    by one checkpoint instead: separate writes of the parent and child
+    tables still agree on them."""
     spark.catalog.clearCache()
     nested = e621.to_snapshots(e621.read_csv(spark, e621_csv), 1, "2022-07-13 00:00:00")
     for name, df in explode_to_store(nested).items():
@@ -281,12 +281,150 @@ def test_explode_to_store_leaves_no_cache_entries(spark, e621_csv, tmp_path):
     )
 
 
+def _fa_dump(root):
+    """An fa JSON dump whose snapshots carry ordered, empty and
+    unrecorded (null) keyword arrays, and files with empty hash arrays."""
+    subs = {
+        "41": {"keywords": ["k2", "k1", "k3"]},
+        "42": {"keywords": []},
+        "43": {},  # no keywords field: not recorded
+        "44": {"keywords": ["solo"]},
+    }
+    for page, (sid, extra) in enumerate(subs.items()):
+        d = root / f"sub{page % 2}"
+        d.mkdir(parents=True, exist_ok=True)
+        sub = {
+            "id": int(sid), "username": "u", "title": f"T{sid}", "description": "d",
+            "date": "2019-03-01T12:00:00Z", "rating": "general",
+            "filename": f"https://f/{sid}.png", **extra,
+        }
+        (d / f"page{page}.json").write_text(json.dumps({sid: sub}))
+    return str(root)
+
+
+def _nested_mix(spark, e621_csv, fa_dir, partitions):
+    """The e621 CSV, the fa dump and hand-built snapshots with no files,
+    a file with a null hash array and one with two hashes, spread over
+    ``partitions`` partitions."""
+    from faexport_db_spark.ingest.base import FILE_ARRAY, KEYWORD_ARRAY
+
+    e = e621.to_snapshots(e621.read_csv(spark, e621_csv), 1, "2022-07-13 00:00:00")
+    fa = fa_indexer.to_snapshots(fa_indexer.read_json_dir(spark, fa_dir), 1, "2019-06-01 00:00:00")
+    rows = spark.createDataFrame(
+        [
+            ("x", "1", None, None, None, None, False, None, None, None, None, [], []),
+            (
+                "x", "2", None, None, None, None, False, None, None, None, None, None,
+                [("a", "u", 1, None, None), ("b", "v", 2, None, [(5, b"\x01"), (6, b"\x02")])],
+            ),
+        ],
+        "website_id string, site_submission_id string, scan_datetime timestamp, "
+        "archive_contributor_id bigint, ingest_datetime timestamp, "
+        "uploader_site_user_id string, is_deleted boolean, title string, "
+        "description string, datetime_posted timestamp, extra_data string, "
+        f"keywords {KEYWORD_ARRAY}, files {FILE_ARRAY}",
+    )
+    return e.unionByName(fa).unionByName(rows).repartition(partitions)
+
+
+def _snapshot_trees(snaps, kws, files, hashes):
+    """Per (website, submission): keywords in ordinal order (None when
+    not recorded) and sorted (file fields, sorted hashes), rebuilt
+    through the minted ids alone."""
+    by_id = {
+        r["submission_snapshot_id"]: (r["website_id"], r["site_submission_id"]) for r in snaps
+    }
+    trees = {
+        (r["website_id"], r["site_submission_id"]): ([] if r["keywords_recorded"] else None, [])
+        for r in snaps
+    }
+    for r in sorted(kws, key=lambda r: (r["ordinal"] is None, r["ordinal"] or 0, r["keyword"])):
+        trees[by_id[r["submission_snapshot_id"]]][0].append((r["ordinal"], r["keyword"]))
+    file_hashes = {}
+    for r in hashes:
+        file_hashes.setdefault(r["file_id"], []).append((r["algo_id"], bytes(r["hash_value"])))
+    for r in files:
+        hashes_of_file = sorted(file_hashes.get(r["file_id"], []))
+        trees[by_id[r["submission_snapshot_id"]]][1].append(
+            (r["site_file_id"], r["file_url"], r["file_size"], hashes_of_file)
+        )
+    return {key: (k, sorted(f)) for key, (k, f) in trees.items()}
+
+
+def _nested_trees(rows):
+    def kw_order(k):
+        return (k["ordinal"] is None, k["ordinal"] or 0, k["keyword"])
+
+    return {
+        (r["website_id"], r["site_submission_id"]): (
+            None
+            if r["keywords"] is None
+            else [(k["ordinal"], k["keyword"]) for k in sorted(r["keywords"], key=kw_order)],
+            sorted(
+                (
+                    f["site_file_id"], f["file_url"], f["file_size"],
+                    sorted((h["algo_id"], bytes(h["hash_value"])) for h in f["hashes"] or []),
+                )
+                for f in r["files"] or []
+            ),
+        )
+        for r in rows
+    }
+
+
+def _assert_store_rebuilds(nested, tables):
+    """Every table's ids are dense, and the snapshots rebuilt through
+    them equal ``nested``: a child linked to the wrong parent fails."""
+    id_cols = {
+        "submission_snapshots": "submission_snapshot_id",
+        "submission_snapshot_keywords": "keyword_id",
+        "submission_snapshot_files": "file_id",
+        "submission_snapshot_file_hashes": "hash_id",
+    }
+    rows = {name: tables[name].collect() for name in id_cols}
+    for name, col in id_cols.items():
+        assert sorted(r[col] for r in rows[name]) == list(range(len(rows[name]))), name
+    assert _snapshot_trees(*rows.values()) == _nested_trees(nested.collect())
+
+
+def test_explode_to_store_ids_link_the_right_rows(spark, e621_csv, tmp_path):
+    """Across several partitions, the four tables written in separate
+    jobs and read back rebuild every snapshot's keywords (by ordinal),
+    files and file hashes exactly, and each table's ids are 0..n-1."""
+    nested = _nested_mix(spark, e621_csv, _fa_dump(tmp_path / "fa"), partitions=5)
+    for name, df in explode_to_store(nested).items():
+        df.write.parquet(str(tmp_path / name))
+    back = {
+        name: spark.read.parquet(str(tmp_path / name))
+        for name in (
+            "submission_snapshots",
+            "submission_snapshot_keywords",
+            "submission_snapshot_files",
+            "submission_snapshot_file_hashes",
+        )
+    }
+    assert back["submission_snapshots"].count() == 3 + 4 + 2
+    _assert_store_rebuilds(nested, back)
+
+
+def test_explode_to_store_pins_once(spark, e621_csv):
+    """All four tables' ids come from one pin of the nested frame."""
+    from block_storage import gained_rdds, stored_rdds
+
+    nested = e621.to_snapshots(e621.read_csv(spark, e621_csv), 1, "2022-07-13 00:00:00")
+    before = stored_rdds(spark)
+    tables = explode_to_store(nested)
+    assert len(gained_rdds(spark, before, at_most=1)) == 1
+    assert tables["submission_snapshot_file_hashes"].count() == 3
+
+
 @pytest.mark.slow
-def test_with_dense_ids_dense_at_high_partition_counts(spark):
+def test_with_dense_ids_dense_at_high_partition_counts(spark, e621_csv, tmp_path):
     """Ids stay bounded by the row count no matter the partition count —
     the property the streaming batch-id stride relies on. Raw
     monotonically_increasing_id at 200 partitions would mint ids
-    >= 199*2^33 > 2^40 and collide with the next batch's stride."""
+    >= 199*2^33 > 2^40 and collide with the next batch's stride. The
+    child tables' ids are as dense, and still link the right rows."""
     from faexport_db_spark.ingest.base import with_dense_ids
 
     n = 1000
@@ -294,6 +432,9 @@ def test_with_dense_ids_dense_at_high_partition_counts(spark):
     out = with_dense_ids(df, "sid")
     ids = sorted(r["sid"] for r in out.select("sid").collect())
     assert ids == list(range(n))
+
+    nested = _nested_mix(spark, e621_csv, _fa_dump(tmp_path / "fa"), partitions=200)
+    _assert_store_rebuilds(nested, explode_to_store(nested))
 
 
 @pytest.mark.slow

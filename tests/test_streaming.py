@@ -8,6 +8,7 @@ from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
+from streams import drain
 
 from faexport_db_spark.datamodel.schemas import USER_SNAPSHOTS
 from faexport_db_spark.datamodel.table_format import (
@@ -101,7 +102,7 @@ def test_streaming_ingest_two_batches(spark, tmp_path):
         spark, str(dropzone), store, contributor_id=1, checkpoint=ckpt,
         trigger={"availableNow": True}, scan_time=SCAN_T,
     )
-    q.awaitTermination(120)
+    drain(q)
 
     # second file arrives; checkpoint resumes without re-ingesting b1
     (dropzone / "b2.jsonl").write_text(_payload(3, "three"))
@@ -109,7 +110,7 @@ def test_streaming_ingest_two_batches(spark, tmp_path):
         spark, str(dropzone), store, contributor_id=1, checkpoint=ckpt,
         trigger={"availableNow": True}, scan_time=SCAN_T,
     )
-    q.awaitTermination(120)
+    drain(q)
 
     snaps = spark.read.parquet(f"{store}/submission_snapshots")
     assert snaps.count() == 3
@@ -470,7 +471,7 @@ def test_failed_batch_redelivery_then_dedup_is_exactly_once(spark, tmp_path):
         spark, str(dropzone), store, contributor_id=1, checkpoint=ckpt,
         trigger={"availableNow": True}, scan_time=SCAN_T,
     )
-    q.awaitTermination(120)
+    drain(q)
 
     snaps = spark.read.parquet(f"{store}/submission_snapshots")
     assert snaps.count() == 4  # duplicates ARE on disk: at-least-once
@@ -482,7 +483,7 @@ def test_failed_batch_redelivery_then_dedup_is_exactly_once(spark, tmp_path):
         checkpoint=str(tmp_path / "ckpt_clean"),
         trigger={"availableNow": True}, scan_time=SCAN_T,
     )
-    q.awaitTermination(120)
+    drain(q)
 
     names = (
         "submission_snapshots",
