@@ -7,7 +7,9 @@ scripts/ingest/ingestion_job.py:42-43,92-105) and the HTTP push route
 
 - ``microbatch`` — the one micro-batch runner every sink goes through
   (``start_batch_stream``: stream token, ``foreachBatch``, checkpoint,
-  trigger) and the per-batch commit-marker protocol.
+  trigger) and the one commit protocol every batch step uses: each
+  batch's rows land in a partition named by the batch, the index
+  partition last, so a re-delivered batch replaces its output.
 - ``ingest_stream``  — drop-zone payload stream → snapshot-tree append
   (S7 + K2), with ``dropDuplicatesWithinWatermark`` at the edge.
 - ``merged_view_stream`` — incremental maintenance of the merged
@@ -18,7 +20,7 @@ scripts/ingest/ingestion_job.py:42-43,92-105) and the HTTP push route
   substring, line, media, fuzzy and Bloom decontamination).
 - ``cdc_stream`` — a changelog stream materialized as current state.
 - ``sketch_stream`` — HLL, KMV and quantile sketch stores, one
-  idempotent partition per batch.
+  partition per batch.
 - ``stateful`` — first-seen, as-of enrichment and funnel tracking with
   operator state.
 - ``events_stream`` — watermarked tumbling-window aggregation over the

@@ -16,13 +16,10 @@ form must additionally survive BATCH boundaries and redelivery:
   tombstone would see no stored seq and resurrect the key — diverging
   from what batch ``cdc_apply`` over the same log produces. The
   retained seq makes the gate total over everything ever applied.
-- Redelivery (checkpoint replay after a crash): the seq gate already
-  makes re-application a no-op for upserts (equal seq is not newer),
-  and re-deleting an absent key is harmless — but the per-batch commit
-  marker (the dedup streams' protocol, ``_batch_marker``) skips the
-  work wholesale, keeping retries cheap and store mutations
-  exactly-once even for formats where a double mutation would churn
-  manifests.
+- Redelivery (checkpoint replay after a crash): the seq gate makes
+  re-application a no-op — every key the batch touched already holds
+  a seq at least as new (equal seq is not newer), and re-deleting an
+  absent key is harmless — so CDC needs no commit record of its own.
 - One store mutation per batch: upserts and tombstone markers land in
   a SINGLE ``fmt.upsert_keys`` call — a tombstone is just a recomputed
   row with ``__del = true`` — so there is no window where a reader
@@ -43,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT, TableFormat
-from faexport_db_spark.streaming.microbatch import _batch_marker, _read_store_or_none
+from faexport_db_spark.streaming.microbatch import _read_store_or_none
 
 PB_COL = "pb"
 DEL_COL = "__del"
@@ -80,11 +77,9 @@ def cdc_apply_batch_against_store(
     Stream it with ``start_batch_stream(changelog,
     cdc_apply_batch_against_store, checkpoint, store_path, key_cols,
     seq_col)``; ``changelog`` carries ``key_cols + [seq_col, op_col]``
-    plus payload columns."""
+    plus payload columns. ``batch_id``/``stream_id`` are accepted for
+    the runner and unused: the seq gate is the redelivery guard."""
     spark = batch.sparkSession
-    committed, mark = _batch_marker(spark, store_path, batch_id, stream_id)
-    if committed:
-        return
     w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
     latest = (
         batch.withColumn("__rn", F.row_number().over(w))
@@ -111,4 +106,3 @@ def cdc_apply_batch_against_store(
     fmt.upsert_keys(
         rows, store_path, [*key_cols, PB_COL], [PB_COL], keys=touched
     )
-    mark()

@@ -1,5 +1,5 @@
-"""The one micro-batch runner every streaming sink shares, plus the
-commit-protocol helpers its batch steps use.
+"""The one micro-batch runner every streaming sink shares, and the one
+commit protocol its batch steps use.
 
 The reference has a single micro-batch loop for every ingest format
 (one buffer, flushed at 1000 rows or 60 s,
@@ -9,22 +9,47 @@ runs a batch step under ``foreachBatch``. A batch step is any function
 ``step(batch_df, *args, batch_id=..., stream_id=..., **kwargs)``; the
 same function is the direct batch API when called without a stream.
 
-Commit protocol (the dedup and CDC steps): a batch step writes a
-marker ``<root>/_batch_committed/<stream_id>/<batch_id>`` after its
-appends, and skips a re-delivered batch whose marker exists. The BM25
-and sketch steps instead name their per-batch output by
-``<stream_id>-<batch_id>``, so a re-delivery overwrites it.
-``stream_id`` is a token kept in ``<checkpoint>/_dedup_stream_token``,
-so a restarted checkpoint keeps its namespace and a wiped one gets a
-new one.
+Commit protocol. Exactly-once comes from a replayable source plus an
+idempotent sink (Structured Streaming, Armbrust et al. SIGMOD 2018):
+every output a batch makes is named by the batch, so a re-delivery
+replaces it instead of adding to it.
+
+- **Tag.** A batch's tag is ``<stream_id>-<batch_id>``
+  (``batch_tag``); a direct call without a ``batch_id`` gets a unique
+  tag, so direct calls accumulate.
+- **Store rows** land in the store partition ``batch=<tag>`` through
+  ``fmt.overwrite_partitions`` (``overwrite_batch_rows``), which the
+  parquet, manifest and Delta formats all provide.
+- **Index rows** are published last, by ``publish_partition``: written
+  to a hidden dot-prefixed dir that Spark's reader skips, then renamed
+  to ``<index>/batch=<tag>``. Any sidecar is written before that
+  rename. Every index builder writes the same ``batch=<tag>/`` layout
+  (``replace_index``), so a stream can append to a built index.
+- **Commit.** The index's ``batch=<tag>`` directory is the commit
+  record: a step whose index partition exists (``is_committed``)
+  returns ``None``.
+
+A crash before the rename leaves the index as the batch found it, so
+the retry recomputes the same rows and replaces its store partition.
+Steps without an index (decontamination, sketches) recompute and
+overwrite on every delivery; CDC's sequence gate makes a re-applied
+batch a no-op. ``stream_id`` is a token kept in
+``<checkpoint>/_dedup_stream_token``, so a restarted checkpoint keeps
+its namespace and a wiped one gets a new one.
 """
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from faexport_db_spark.datamodel.table_format import TableFormat
+from faexport_db_spark.operators.hadoop_fs import HadoopFs
+
+BATCH_COL = "batch"
 
 
 def start_batch_stream(
@@ -55,10 +80,11 @@ def start_batch_stream(
 
 
 def _read_store_or_none(fmt: TableFormat, spark: SparkSession, store_path: str):
-    """The store before the first committed batch reads as ``None``.
-    Only the no-committed-data conditions qualify: a missing path, a
-    directory a crashed first write left with zero parquet footers
-    (``UNABLE_TO_INFER_SCHEMA``), or — manifest strategies — no
+    """The store (or index) before its first committed rows reads as
+    ``None``. Only the no-committed-data conditions qualify: a missing
+    path, a directory holding no parquet footer — a crashed first
+    write, or only empty ``batch=`` partitions and sidecars
+    (``UNABLE_TO_INFER_SCHEMA``) — or, for manifest strategies, no
     committed manifest (``FileNotFoundError``). Any other failure
     propagates so the micro-batch retries; a swallowed transient error
     here would let duplicates through silently."""
@@ -72,56 +98,90 @@ def _read_store_or_none(fmt: TableFormat, spark: SparkSession, store_path: str):
         return None
 
 
-def _batch_marker(
-    spark: SparkSession,
+def batch_tag(batch_id: int | None, stream_id: str | None) -> str:
+    """``<stream_id>-<batch_id>``: the name of everything one batch
+    writes. Batch ids are unique only within one checkpoint's lifetime,
+    hence the stream token. A call without a ``batch_id`` gets a unique
+    tag: a fixed one would make the next direct call replace this
+    call's rows."""
+    bid = batch_id if batch_id is not None else f"x{uuid.uuid4().hex[:12]}"
+    return f"{stream_id or 'direct'}-{bid}"
+
+
+def _partition_dir(root: str, tag: str) -> str:
+    return f"{root.rstrip('/')}/{BATCH_COL}={tag}"
+
+
+def is_committed(spark: SparkSession, index_path: str, tag: str) -> bool:
+    """Whether the batch ``tag`` published its index partition — the
+    commit record."""
+    return HadoopFs(spark, index_path).exists(_partition_dir(index_path, tag))
+
+
+def publish_partition(
+    table: DataFrame, root: str, tag: str, partition_by: list[str] | None = None
+) -> None:
+    """Publish ``table`` as the partition ``<root>/batch=<tag>``
+    (optionally partitioned inside by ``partition_by``): write to a
+    hidden dot-prefixed dir, then rename. A concurrent reader sees the
+    partition whole or not at all; a re-published tag replaces the
+    previous copy."""
+    part = _partition_dir(root, tag)
+    tmp = f"{root.rstrip('/')}/.tmp-{BATCH_COL}={tag}"
+    writer = table.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(tmp)
+    fs = HadoopFs(table.sparkSession, root)
+    if fs.exists(part):
+        fs.delete(part, recursive=True)
+    fs.rename(tmp, part)
+
+
+def replace_index(
+    table: DataFrame, path: str, partition_by: list[str] | None = None
+) -> None:
+    """An index builder's write: drop whatever ``path`` holds and
+    publish ``table`` as its one ``batch=`` partition, the layout a
+    stream's batches add to."""
+    HadoopFs(table.sparkSession, path).delete(path, recursive=True)
+    publish_partition(table, path, batch_tag(None, None), partition_by)
+
+
+def overwrite_batch_rows(
+    fmt: TableFormat, rows: DataFrame, store_path: str, tag: str
+) -> None:
+    """``rows`` replace the store partition ``batch=<tag>``."""
+    fmt.overwrite_partitions(
+        rows.withColumn(BATCH_COL, F.lit(tag)), store_path, [BATCH_COL]
+    )
+
+
+def commit_batch(
+    fmt: TableFormat,
+    rows: DataFrame,
+    store_path: str,
+    index_rows: DataFrame,
     index_path: str,
-    batch_id: int | None,
-    stream_id: str | None,
-):
-    """(committed?, mark_fn) for the per-batch commit marker — see the
-    module docstring's atomicity contract. Batch ids are only unique
-    WITHIN one stream-checkpoint lifetime (a fresh or wiped checkpoint
-    renumbers from 0), so markers are namespaced by ``stream_id`` —
-    the checkpoint-resident token ``_stream_id`` mints.
-    ``batch_id=None`` (direct batch-API callers outside a stream)
-    disables the protocol."""
-    if batch_id is None:
-        return False, lambda: None
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    fs = HadoopFs(spark, index_path)
-    ns = stream_id or "direct"
-    ns_dir = f"{index_path.rstrip('/')}/_batch_committed/{ns}"
-    marker = f"{ns_dir}/{batch_id}"
-
-    def mark() -> None:
-        fs.write_text(marker, "")
-        # Markers only matter for RECENT batches (a re-delivery is
-        # always near the checkpoint's tail), so prune the long tail —
-        # without this, one empty file per batch accumulates forever.
-        # Prune every ~50 batches, not every batch: the directory LIST
-        # is an RPC worth amortizing on object stores.
-        if batch_id % 50 == 0:
-            for name in fs.list_names(ns_dir):
-                if name.isdigit() and int(name) < batch_id - 200:
-                    fs.delete(f"{ns_dir}/{name}")
-
-    return fs.exists(marker), mark
+    tag: str,
+    partition_by: list[str] | None = None,
+) -> None:
+    """Land one batch: ``rows`` replace its store partition, then
+    ``index_rows`` are published as the index partition of the same
+    name — the commit record, written last."""
+    overwrite_batch_rows(fmt, rows, store_path, tag)
+    publish_partition(index_rows, index_path, tag, partition_by)
 
 
 def _stream_id(spark: SparkSession, checkpoint: str) -> str:
-    """Stream-instance namespace for batch markers: a token file
-    INSIDE the checkpoint directory, created on first use. Batch ids
-    are only meaningful relative to a checkpoint's lifetime — if the
-    checkpoint is wiped, Spark renumbers batches from 0, and a
-    path-derived namespace would then skip brand-new batches 0..N as
-    'already committed' (review finding: silent data loss). The token
-    dies with the checkpoint, so a wiped checkpoint gets a fresh
-    namespace while restarts of a live checkpoint keep their markers."""
-    import uuid
-
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
+    """Stream-instance namespace for batch tags: a token file INSIDE
+    the checkpoint directory, created on first use. Batch ids are only
+    meaningful relative to a checkpoint's lifetime — if the checkpoint
+    is wiped, Spark renumbers batches from 0, and a path-derived
+    namespace would then skip brand-new batches 0..N as 'already
+    committed' (silent data loss). The token dies with the checkpoint,
+    so a wiped checkpoint gets a fresh namespace while restarts of a
+    live checkpoint keep their tags."""
     fs = HadoopFs(spark, checkpoint)
     token_path = f"{checkpoint.rstrip('/')}/_dedup_stream_token"
     if fs.exists(token_path):
@@ -129,7 +189,7 @@ def _stream_id(spark: SparkSession, checkpoint: str) -> str:
         # An empty/truncated token (crash mid-create) must re-mint —
         # falling through to the shared 'direct' namespace could skip
         # batches whose ids collide with another degraded stream's
-        # markers (review finding).
+        # tags.
         if token:
             return token
     token = uuid.uuid4().hex[:12]

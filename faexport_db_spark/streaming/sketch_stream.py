@@ -3,11 +3,11 @@ to date per micro-batch — continuous approximate distinct-counting
 over an unbounded stream with CONSTANT state.
 
 The enabling algebra is that register merge (elementwise MAX per
-bucket) is idempotent AND commutative, so the store needs none of the
-dedup streams' commit-marker protocol: each batch writes ITS OWN
-register table under an idempotent per-batch partition directory
-(the line-dedup count-partition pattern — a re-delivered batch
-overwrites the same directory with identical rows), and the read path
+bucket) is idempotent AND commutative, and each batch writes ITS OWN
+register table as the store partition ``batch=<tag>``
+(``microbatch.publish_partition``, the commit protocol's publish — a
+re-delivered batch overwrites the same partition with identical
+rows), so the store needs no commit record; the read path
 merges all partitions with one bounded groupBy. A crash anywhere
 leaves either the old partition content or the new identical content;
 double-merging changes nothing.
@@ -25,37 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from faexport_db_spark.streaming.microbatch import batch_tag, publish_partition
 from faexport_db_spark.training.pipeline import hll_register_table
-
-
-def _publish_batch_partition(
-    table: DataFrame,
-    store_path: str,
-    batch_id: int | None,
-    stream_id: str | None,
-) -> None:
-    """Publish one batch's sketch ``table`` as the store partition
-    ``batch=<stream_id>-<batch_id>``: write to a hidden dot-prefixed
-    dir, then rename. An identified batch (a stream delivery) always
-    lands under the same name, so a re-delivery overwrites it with
-    identical rows. A direct call without a ``batch_id`` gets a unique
-    name instead: a fixed one would make a second direct call replace
-    the first call's partition and lose its rows from the merge."""
-    import uuid
-
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    ns = stream_id or "direct"
-    bid = batch_id if batch_id is not None else f"x{uuid.uuid4().hex[:12]}"
-    base = store_path.rstrip("/")
-    tag = f"{ns}-{bid}"
-    part = f"{base}/batch={tag}"
-    tmp = f"{base}/.tmp-batch={tag}"
-    table.write.mode("overwrite").parquet(tmp)
-    fs = HadoopFs(table.sparkSession, base)
-    if fs.exists(part):
-        fs.delete(part, recursive=True)
-    fs.rename(tmp, part)
 
 
 def hll_batch_into_store(
@@ -80,8 +51,8 @@ def hll_batch_into_store(
     repaired by idempotence — see the module docstring. Stream it with
     ``start_batch_stream(source, hll_batch_into_store, checkpoint,
     store_path, col)``."""
-    _publish_batch_partition(
-        hll_register_table(batch, col, p), store_path, batch_id, stream_id
+    publish_partition(
+        hll_register_table(batch, col, p), store_path, batch_tag(batch_id, stream_id)
     )
 
 
@@ -110,14 +81,14 @@ def kmv_batch_into_store(
     ≤k-row sketch lands under an idempotent per-batch partition via
     the same hidden-dir-then-rename publish. KMV union (bottom-k of a
     concatenation) is idempotent and commutative exactly like the HLL
-    MAX, so re-delivery and mid-write crashes need no commit marker.
+    MAX, so re-delivery and mid-write crashes need no commit record.
     Streamed through ``start_batch_stream``, its set algebra
     (union/intersection vs OTHER corpora or streams) stays available
     at any time."""
     from faexport_db_spark.training.pipeline import kmv_sketch
 
-    _publish_batch_partition(
-        kmv_sketch(batch, col, k), store_path, batch_id, stream_id
+    publish_partition(
+        kmv_sketch(batch, col, k), store_path, batch_tag(batch_id, stream_id)
     )
 
 
@@ -153,15 +124,15 @@ def qsketch_batch_into_store(
     table lands under its idempotent ``batch=`` directory (re-delivery
     overwrites identical rows; the hidden-dir-then-rename publish
     keeps concurrent readers off partial files), and the read path
-    sums each batch's contribution exactly once — the line-dedup
-    count-partition scheme, where the IDEMPOTENT WRITE stands in for
-    an idempotent merge. Streamed through ``start_batch_stream`` it
+    sums each batch's contribution exactly once — the line-count
+    index's scheme, where the IDEMPOTENT WRITE stands in for an
+    idempotent merge. Streamed through ``start_batch_stream`` it
     answers "p99 of everything ever streamed" at any time via
     ``qsketch_quantile_brackets(read_qsketch_store(...))``."""
     from faexport_db_spark.training.pipeline import qsketch_register_table
 
-    _publish_batch_partition(
-        qsketch_register_table(batch, value), store_path, batch_id, stream_id
+    publish_partition(
+        qsketch_register_table(batch, value), store_path, batch_tag(batch_id, stream_id)
     )
 
 

@@ -609,14 +609,14 @@ def dedup_clusters(
     )
     for _ in range(max_iters):
         new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        # star fixpoint: the oriented edge set stops changing
-        changed = (
-            new_edges.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(new_edges).limit(1).count()
+        # star fixpoint: the oriented edge set stops changing (one
+        # check over both differences)
+        converged = (
+            new_edges.exceptAll(edges).union(edges.exceptAll(new_edges)).isEmpty()
         )
         unpin(edges)
         edges = new_edges
-        if changed == 0:
+        if converged:
             break
     else:
         # Unconverged labels are WRONG labels (a tail node still points
@@ -670,16 +670,17 @@ def minhash_build_index(
 
     Signing parameters are persisted in the ``INDEX_META_NAME`` sidecar
     and validated by ``minhash_dedup_against_index`` — a probe signed
-    with different parameters would silently match nothing."""
+    with different parameters would silently match nothing. The rows
+    land as one ``batch=`` partition (``microbatch.replace_index``), so
+    a dedup stream can add its batches to a built index."""
+    from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
     banded = minhash_band_rows(docs, text_col, id_col, num_perm, bands, shingle_n)
-    (
-        banded.repartition("band_idx")
-        .sortWithinPartitions("band_hash")
-        .write.mode("overwrite")
-        .partitionBy("band_idx")
-        .parquet(path)
+    replace_index(
+        banded.repartition("band_idx").sortWithinPartitions("band_hash"),
+        path,
+        ["band_idx"],
     )
     write_index_meta(
         docs.sparkSession,

@@ -336,14 +336,16 @@ def build_media_chunk_index(
     """Persist the corpus' chunk signatures — (media_id, n_chunks,
     chunk_idx, chunk_hash), sorted by chunk_hash for row-group
     min/max pruning on probe joins — plus a parameter sidecar that
-    rejects probes sliced with a different chunk width."""
+    rejects probes sliced with a different chunk width. The rows land
+    as one ``batch=`` partition (``microbatch.replace_index``), the
+    layout a media dedup stream adds its batches to."""
+    from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
-    (
+    replace_index(
         media_chunk_signatures(media, chunk_bytes, id_col, bytes_col)
-        .sortWithinPartitions("chunk_hash")
-        .write.mode("overwrite")
-        .parquet(index_path)
+        .sortWithinPartitions("chunk_hash"),
+        index_path,
     )
     write_index_meta(
         media.sparkSession, index_path, "media_chunks",
@@ -597,14 +599,16 @@ def build_cdc_chunk_index(
     chunk_md5) sorted by chunk_md5 for row-group min/max pruning on
     probe joins — plus a parameter sidecar that rejects probes chunked
     under a different boundary rule (a mismatched rule would silently
-    match nothing)."""
+    match nothing). The rows land as one ``batch=`` partition
+    (``microbatch.replace_index``), the layout a CDC media dedup stream
+    adds its batches to."""
+    from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
-    (
+    replace_index(
         _cdc_entries(media, window, boundary_prefix, min_chunk, id_col, bytes_col)
-        .sortWithinPartitions("chunk_md5")
-        .write.mode("overwrite")
-        .parquet(index_path)
+        .sortWithinPartitions("chunk_md5"),
+        index_path,
     )
     write_index_meta(
         media.sparkSession, index_path, "media_cdc_chunks",

@@ -379,30 +379,19 @@ def _cell_probes_arrow(centroids: list[list[float]], nprobe: int):
     return probes
 
 
-def _cell_probes(
-    vec: Column,
-    centroids: list[list[float]],
-    nprobe: int,
-    force: str | None = None,
-) -> Column:
+def _cell_probes(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
     """Size-gated nprobe-nearest-cells: literal expression up to
-    ``LITERAL_CENTROID_MAX`` centroids, Arrow coder above (``force``
-    pins a path for tests)."""
-    path = force or (
-        "literal" if len(centroids) <= LITERAL_CENTROID_MAX else "arrow"
-    )
-    if path == "literal":
+    ``LITERAL_CENTROID_MAX`` centroids, Arrow coder above."""
+    if len(centroids) <= LITERAL_CENTROID_MAX:
         return _cell_probes_expr(vec, centroids, nprobe)
     return _cell_probes_arrow(centroids, nprobe)(vec)
 
 
-def _nearest_centroid(
-    vec: Column, centroids: list[list[float]], force: str | None = None
-) -> Column:
+def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     """argmax cosine over the centroid set (scale-invariant, so IVF
     assignment is stable under embedding renormalization). Size-gated:
     see ``_cell_probes``."""
-    return _cell_probes(vec, centroids, 1, force=force)[0]
+    return _cell_probes(vec, centroids, 1)[0]
 
 
 def ivf_centroids(
@@ -596,34 +585,6 @@ def semantic_dedup_against_index(
     )
 
 
-def semantic_append_index(
-    new_vecs: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Append a batch's rows to a persisted IVF index: assign against
-    the SIDECAR centroids (the model is never retrained — cell
-    membership stays consistent with every past batch, the property
-    incremental dedup depends on) and append in the same
-    cid-partitioned layout ``ivf_build`` writes. Batch-sized work
-    only."""
-    from faexport_db_spark.training.indexmeta import read_model_sidecar
-
-    centroids = read_model_sidecar(new_vecs.sparkSession, index_path, "_centroids.json")
-    (
-        fan_out(new_vecs, by=[id_col])
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            _nearest_centroid(F.col(vec_col), centroids).alias("cid"),
-        )
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(index_path)
-    )
-
-
 def _probed_queries(
     queries: DataFrame, centroids: list[list[float]], nprobe: int, id_col: str, vec_col: str
 ) -> DataFrame:
@@ -695,7 +656,10 @@ def ivf_build(
     ~nprobe/n_centroids of the corpus is ever listed or scanned — plus
     the (tiny) centroid table as an underscore-prefixed JSON sidecar
     Spark's scanner ignores (written through the index's own Hadoop
-    filesystem, so object-store paths work like local ones)."""
+    filesystem, so object-store paths work like local ones). The cells
+    land as one ``batch=`` partition (``microbatch.replace_index``), the
+    layout a semantic dedup stream adds its batches to."""
+    from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_model_sidecar
 
     centroids = ivf_centroids(corpus, n_centroids, iters, id_col, vec_col)
@@ -704,7 +668,7 @@ def ivf_build(
         F.col(vec_col).alias("c_vec"),
         _nearest_centroid(F.col(vec_col), centroids).alias("cid"),
     )
-    assigned.write.mode("overwrite").partitionBy("cid").parquet(path)
+    replace_index(assigned, path, ["cid"])
     write_model_sidecar(corpus.sparkSession, path, "_centroids.json", centroids)
     return centroids
 
@@ -750,16 +714,15 @@ def embed_lsh_build_index(
     agree without storing the planes; (nbits, n_tables, dim, seed) are
     persisted in the ``INDEX_META_NAME`` sidecar and validated by
     ``embed_dedup_against_index`` — a probe coded with different
-    parameters would silently match nothing."""
+    parameters would silently match nothing. The rows land as one
+    ``batch=`` partition (``microbatch.replace_index``), so an embed
+    dedup stream can add its batches to a built index."""
+    from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
     coded = _code_rows(corpus, id_col, vec_col, nbits, n_tables, dim, seed)
-    (
-        coded.repartition("tbl")
-        .sortWithinPartitions("code")
-        .write.mode("overwrite")
-        .partitionBy("tbl")
-        .parquet(path)
+    replace_index(
+        coded.repartition("tbl").sortWithinPartitions("code"), path, ["tbl"]
     )
     write_index_meta(
         corpus.sparkSession,
@@ -1434,7 +1397,6 @@ def kmeans_quantized(
     vec_col: str = "embedding",
     scale: int = 10_000,
     shift: int = 20_000,
-    force: str | None = None,
 ) -> tuple[DataFrame, list[list[int]]]:
     """Lloyd's k-means whose every arithmetic step is EXACT integer
     math, so the trained model — not just its cluster sizes — is
@@ -1457,8 +1419,7 @@ def kmeans_quantized(
     centroids travel as literal expressions inside whole-stage
     codegen; above that the same integer argmin runs as ONE
     Arrow-batched numpy matmul against the broadcast int64 centroid
-    matrix, the ``_cell_probes`` two-path rule — ``force``
-    'literal'/'arrow' overrides), the update is ONE groupBy per
+    matrix, the ``_cell_probes`` two-path rule), the update is ONE groupBy per
     iteration bounded by k × dim output rows, and only the centroid
     table (k × dim ints) ever reaches the driver. Integer-overflow
     bound for the Arrow path's exact matmul: dim × (|q|max)² must fit
@@ -1533,13 +1494,8 @@ def kmeans_quantized(
         )
 
     def _assign(frame: DataFrame) -> DataFrame:
-        mode = force or (
-            "literal" if len(centroids) <= LITERAL_CENTROID_MAX else "arrow"
-        )
-        if mode == "literal":
+        if len(centroids) <= LITERAL_CENTROID_MAX:
             return _assign_literal(frame)
-        if mode != "arrow":
-            raise ValueError(f"force must be 'literal' or 'arrow', got {force!r}")
         return _assign_arrow(frame)
 
     for _ in range(iters):

@@ -683,16 +683,18 @@ def build_passage_index(
     everything accepted so far without re-tiling the corpus. One
     narrow column (th), sorted within partitions for row-group
     min/max pruning on probe joins; a parameter sidecar rejects probes
-    tiled with a different width."""
+    tiled with a different width. The digests land as one ``batch=``
+    partition (``microbatch.replace_index``), the layout appends and
+    the passage dedup stream add theirs to."""
+    from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
-    (
+    replace_index(
         _tiled(docs, tile_tokens, text_col, id_col)
         .select("th")
         .distinct()
-        .sortWithinPartitions("th")
-        .write.mode("overwrite")
-        .parquet(index_path)
+        .sortWithinPartitions("th"),
+        index_path,
     )
     write_index_meta(
         docs.sparkSession, index_path, "passage_tiles", {"tile_tokens": tile_tokens}
@@ -761,8 +763,8 @@ def passage_dedup_against_index(
     the batch is tiled; candidates come from ONE index scan against
     the broadcast batch digest set (batch-sized, never corpus-sized),
     exactly the arriving-batch economics of the incremental MinHash
-    path. With ``append``, surviving tile digests join the index so
-    batch N+1 dedups against batch N.
+    path. With ``append``, surviving tile digests join the index as a
+    new ``batch=`` partition so batch N+1 dedups against batch N.
 
     Output: (id, clean_text, n_tiles, n_tiles_removed) per batch doc.
     """
@@ -770,8 +772,10 @@ def passage_dedup_against_index(
         batch, index_path, tile_tokens, text_col, id_col
     )
     if append:
+        from faexport_db_spark.streaming.microbatch import batch_tag, publish_partition
+
         out = out.localCheckpoint(eager=True)  # pin before the index mutates
-        kept_ths.write.mode("append").parquet(index_path)
+        publish_partition(kept_ths, index_path, batch_tag(None, None))
     return out
 
 
@@ -1030,7 +1034,6 @@ def build_line_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     normalize: bool = True,
-    partitioned: bool = False,
 ) -> None:
     """Persist the corpus' per-line FREQUENCY counts — unlike the
     passage index (digest presence), line dedup's drop-all semantics
@@ -1039,29 +1042,19 @@ def build_line_index(
     from 'never seen' (total 1 -> keep). Appends are additive delta
     rows summed on probe; one narrow (lh, cnt) pair per distinct
     line, sorted for row-group pruning; the parameter sidecar rejects
-    probes lined/normalized differently.
-
-    ``partitioned`` writes the counts under a ``src=corpus`` hive
-    partition — REQUIRED when the index will be appended to by a
-    stream (``start_batch_stream`` running
-    ``line_dedup_batch_against_store``), whose per-batch ``src=``
-    partitions make retries idempotent (dynamic partition overwrite);
-    a flat layout cannot be mixed with partitioned appends (Spark
-    rejects conflicting directory structures)."""
+    probes lined/normalized differently. The counts land as one
+    ``batch=`` partition (``microbatch.replace_index``), the layout
+    appends and the line dedup stream add theirs to."""
+    from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
-    counts = (
+    replace_index(
         _lines(docs, line_tokens, text_col, id_col, normalize)
         .groupBy("lh")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .sortWithinPartitions("lh")
+        .sortWithinPartitions("lh"),
+        index_path,
     )
-    if partitioned:
-        counts.withColumn("src", F.lit("corpus")).write.mode(
-            "overwrite"
-        ).partitionBy("src").parquet(index_path)
-    else:
-        counts.write.mode("overwrite").parquet(index_path)
     write_index_meta(
         docs.sparkSession,
         index_path,
@@ -1092,12 +1085,10 @@ def line_dedup_against_index(
     Only the batch is lined; candidate counts come from ONE index
     scan semi-filtered by the broadcast batch digest set
     (batch-sized, never corpus-sized). With ``append``, the batch's
-    line counts land as additive delta rows (summed on the next
-    probe). A stream (``start_batch_stream`` running
-    ``line_dedup_batch_against_store``) must write surviving text to
-    the store BEFORE appending counts (the store-first ordering of
-    streaming/dedup_stream.py; a counts-first crash would over-clean
-    the retry).
+    line counts land as a new ``batch=`` partition of additive delta
+    rows (summed on the next probe). The stream step
+    ``line_dedup_batch_against_store`` probes with ``append=False`` and
+    publishes its counts itself, after its store rows.
 
     Output: (id, clean_text, n_lines, n_lines_removed) per batch doc.
     """
@@ -1134,10 +1125,14 @@ def line_dedup_against_index(
         .withColumnRenamed("n_tiles_removed", "n_lines_removed")
     )
     if append:
+        from faexport_db_spark.streaming.microbatch import batch_tag, publish_partition
+
         out = out.localCheckpoint(eager=True)  # pin before the index mutates
-        batch_counts.select("lh", F.col("__bcnt").alias("cnt")).write.mode(
-            "append"
-        ).parquet(index_path)
+        publish_partition(
+            batch_counts.select("lh", F.col("__bcnt").alias("cnt")),
+            index_path,
+            batch_tag(None, None),
+        )
     return out
 
 
@@ -1488,17 +1483,19 @@ def build_substring_index(
     without re-hashing the corpus. One narrow bigint column (gh),
     sorted within partitions for row-group min/max pruning on probe
     joins; a parameter sidecar rejects probes hashed with a different
-    gram width."""
+    gram width. The grams land as one ``batch=`` partition
+    (``microbatch.replace_index``), the layout appends and the
+    substring dedup stream add theirs to."""
+    from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
     k = int(min_tokens)
     base = _token_arrays(docs, k, text_col, id_col)
-    (
+    replace_index(
         base.select(F.explode(_gram_hashes(k)).alias("gh"))
         .distinct()
-        .sortWithinPartitions("gh")
-        .write.mode("overwrite")
-        .parquet(index_path)
+        .sortWithinPartitions("gh"),
+        index_path,
     )
     write_index_meta(
         docs.sparkSession, index_path, "substring_grams", {"min_tokens": k, "scheme": "xx128"}
@@ -1514,21 +1511,38 @@ def append_substring_index(
 ) -> None:
     """Add a batch's gram fingerprints to the index (probe is
     deliberately read-only — callers order store/index mutations
-    themselves, the passage-probe crash-ordering lesson). Appends only
-    grams NOT already indexed, keeping the index a distinct set."""
+    themselves, the passage-probe crash-ordering lesson). Adds, as a
+    new ``batch=`` partition, only grams NOT already indexed, keeping
+    the index a distinct set."""
+    from faexport_db_spark.streaming.microbatch import batch_tag, publish_partition
     from faexport_db_spark.training.indexmeta import check_index_meta
 
-    spark = batch.sparkSession
     k = int(min_tokens)
-    check_index_meta(spark, index_path, "substring_grams", {"min_tokens": k, "scheme": "xx128"})
-    new = (
+    check_index_meta(
+        batch.sparkSession, index_path, "substring_grams",
+        {"min_tokens": k, "scheme": "xx128"},
+    )
+    publish_partition(
+        _novel_grams(batch, index_path, k, text_col, id_col),
+        index_path,
+        batch_tag(None, None),
+    )
+
+
+def _novel_grams(
+    batch: DataFrame, index_path: str, min_tokens: int, text_col: str, id_col: str
+) -> DataFrame:
+    """The batch's distinct gram fingerprints the index does not hold
+    yet, sorted for row-group pruning. The hidden-dir publish never
+    writes into the listing this frame read, so it needs no pin."""
+    k = int(min_tokens)
+    return (
         _token_arrays(batch, k, text_col, id_col)
         .select(F.explode(_gram_hashes(k)).alias("gh"))
         .distinct()
-        .join(spark.read.parquet(index_path), "gh", "left_anti")
-        .localCheckpoint(eager=True)  # pin before the path mutates
+        .join(batch.sparkSession.read.parquet(index_path), "gh", "left_anti")
+        .sortWithinPartitions("gh")
     )
-    new.sortWithinPartitions("gh").write.mode("append").parquet(index_path)
 
 
 def duplicate_substring_spans_against_index(

@@ -1,4 +1,4 @@
-"""Waits for the streaming tests' ``availableNow`` queries."""
+"""Runs and waits for the streaming tests' ``availableNow`` queries."""
 
 from __future__ import annotations
 
@@ -11,3 +11,27 @@ def drain(query, timeout_s: float = 120) -> int:
     rows = sum(p["numInputRows"] for p in query.recentProgress)
     assert rows > 0, f"query {query.id} read no input rows"
     return rows
+
+
+def collect_stream(df, checkpoint: str, output_mode: str = "append", timeout_s: float = 120):
+    """Drain the streaming DataFrame ``df`` once under ``checkpoint``
+    and return every row its micro-batches emitted."""
+    emitted = []
+    q = (
+        df.writeStream.foreachBatch(lambda batch, _bid: emitted.extend(batch.collect()))
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    drain(q, timeout_s)
+    return emitted
+
+
+def run_batch_stream(spark, step, src: str, checkpoint: str, *args, **kwargs) -> None:
+    """One ``availableNow`` run of the batch ``step`` over the
+    ``(doc_id, text)`` parquet dir ``src``."""
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
+
+    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
+    drain(start_batch_stream(stream, step, checkpoint, *args, trigger={"availableNow": True}, **kwargs))

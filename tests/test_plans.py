@@ -1314,15 +1314,20 @@ def test_ewma_window_partitions_per_user(spark, sf_small):
     assert_plan(q, max_python_evals=0)
 
 
-def test_kmeans_arrow_assignment_is_one_arrow_eval_no_shuffle(spark, sf_small):
+def test_kmeans_arrow_assignment_is_one_arrow_eval_no_shuffle(
+    spark, sf_small, monkeypatch
+):
     """Above LITERAL_CENTROID_MAX the assignment becomes exactly one
-    ArrowEvalPython over the scan — still zero shuffles, no join."""
+    ArrowEvalPython over the scan — still zero shuffles, no join. A
+    gate of 0 puts k=4 above it."""
     from faexport_db_spark.datamodel.testdata import load_table
     from faexport_db_spark.plans.audit import _physical_plan
+    from faexport_db_spark.training import similarity
     from faexport_db_spark.training.similarity import kmeans_quantized
 
+    monkeypatch.setattr(similarity, "LITERAL_CENTROID_MAX", 0)
     emb = load_table(spark, sf_small, "embeddings")
-    out, _ = kmeans_quantized(emb, k=4, iters=0, force="arrow")
+    out, _ = kmeans_quantized(emb, k=4, iters=0)
     plan = _physical_plan(out)
     assert plan.count("ArrowEvalPython") == 1, plan
     assert shuffle_count(out) == 0, out._jdf.queryExecution().toString()

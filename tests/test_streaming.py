@@ -8,7 +8,7 @@ from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
-from streams import drain
+from streams import collect_stream, drain, run_batch_stream
 
 from faexport_db_spark.datamodel.schemas import USER_SNAPSHOTS
 from faexport_db_spark.datamodel.table_format import (
@@ -29,6 +29,20 @@ SCAN_T = "2024-03-01 12:00:00"
 # both, like the storage-equivalence tests — the store seam must hold
 # for transactional manifest stores too (VERDICT r04 item 5).
 STORE_FORMATS = {"parquet": ParquetFormat, "manifest": ManifestParquetFormat}
+
+
+@pytest.fixture
+def stops_when_drained(spark):
+    """The stateful operators arm processing-time idle timeouts, and
+    Spark then runs a no-data batch after every batch, so an
+    ``availableNow`` query over them never stops on its own. With
+    no-data batches off it stops once its input is processed; the
+    timeouts these tests arm are hours long and never fire."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, prev)
 
 
 def _delta_fmt_or_skip(spark, tmp_path):
@@ -152,7 +166,7 @@ def test_incremental_merged_view_converges(spark, tmp_path):
             spark, stream, store, view, checkpoint=f"{ckpt}/b{i}",
             trigger={"availableNow": True},
         )
-        q.awaitTermination(120)
+        drain(q)
 
     got = spark.read.parquet(view)
     expected = merged_users(spark.read.parquet(store))
@@ -186,7 +200,7 @@ def test_windowed_event_counts_streaming_matches_batch(spark, sf_small, tmp_path
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     streamed = spark.table("win_counts")
 
     # append mode emits only windows closed by the final watermark;
@@ -209,7 +223,7 @@ def test_window_counts_oracle_parity(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_first_seen_stateful_across_batches(spark, tmp_path):
+def test_first_seen_stateful_across_batches(spark, tmp_path, stops_when_drained):
     """applyInPandasWithState: a key emitted in batch 1 is suppressed in
     batch 2; new keys still emit (reference analog: fa_indexer's
     seen_usernames set, SURVEY §2.10 stateful ops)."""
@@ -224,23 +238,11 @@ def test_first_seen_stateful_across_batches(spark, tmp_path):
     )
     schema = "key string, value string"
 
-    def drain(qname):
+    def emitted():
         stream = spark.readStream.schema(schema).json(str(src))
-        out = first_seen(stream)
-        emitted = []
+        return {r["key"]: r for r in collect_stream(first_seen(stream), ckpt, "update")}
 
-        def collect(batch, _bid):
-            emitted.extend(batch.collect())
-
-        q = (
-            out.writeStream.foreachBatch(collect)
-            .outputMode("update").option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        return {r["key"]: r for r in emitted}
-
-    got1 = drain("seen1")
+    got1 = emitted()
     assert set(got1) == {"u1", "u2"}
     assert got1["u1"]["first_value"] == "first-u1"
     assert got1["u1"]["batch_rows"] == 2  # both batch-1 rows counted
@@ -248,13 +250,13 @@ def test_first_seen_stateful_across_batches(spark, tmp_path):
     (src / "b2.jsonl").write_text(
         '{"key":"u1","value":"late-dup"}\n{"key":"u3","value":"first-u3"}\n'
     )
-    got2 = drain("seen2")
+    got2 = emitted()
     assert set(got2) == {"u3"}  # u1 suppressed by persisted state
     assert got2["u3"]["first_value"] == "first-u3"
 
 
 @pytest.mark.slow
-def test_asof_enrich_stateful_across_batches(spark, tmp_path):
+def test_asof_enrich_stateful_across_batches(spark, tmp_path, stops_when_drained):
     """Streaming as-of: refs update per-key carried state, events
     enrich from the latest at-or-before ref — in-batch via merge_asof
     (ties inclusive, pre-ref events null) and across batches via the
@@ -266,21 +268,9 @@ def test_asof_enrich_stateful_across_batches(spark, tmp_path):
     ckpt = str(tmp_path / "asof_ckpt")
     schema = "key string, ts timestamp, side string, value double"
 
-    def drain():
+    def emitted():
         stream = spark.readStream.schema(schema).json(str(src))
-        out = asof_enrich(stream)
-        emitted = []
-
-        def collect(batch, _bid):
-            emitted.extend(batch.collect())
-
-        q = (
-            out.writeStream.foreachBatch(collect)
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        return {(r["key"], r["value"]): r for r in emitted}
+        return {(r["key"], r["value"]): r for r in collect_stream(asof_enrich(stream), ckpt)}
 
     (src / "b1.jsonl").write_text(
         '{"key":"u1","ts":"2024-01-01T00:00:05","side":"evt","value":1.0}\n'
@@ -289,7 +279,7 @@ def test_asof_enrich_stateful_across_batches(spark, tmp_path):
         '{"key":"u1","ts":"2024-01-01T00:00:20","side":"ref","value":200.0}\n'
         '{"key":"u2","ts":"2024-01-01T00:00:01","side":"evt","value":3.0}\n'
     )
-    got1 = drain()
+    got1 = emitted()
     assert got1[("u1", 1.0)]["ref_value"] is None  # before any ref
     assert got1[("u1", 2.0)]["ref_value"] == 100.0  # tie is inclusive
     assert got1[("u2", 3.0)]["ref_value"] is None  # other key isolated
@@ -299,7 +289,7 @@ def test_asof_enrich_stateful_across_batches(spark, tmp_path):
         '{"key":"u1","ts":"2024-01-01T00:01:00","side":"evt","value":4.0}\n'
         '{"key":"u2","ts":"2024-01-01T00:01:00","side":"evt","value":5.0}\n'
     )
-    got2 = drain()
+    got2 = emitted()
     # u1 enriches from batch-1's last ref via persisted state; u2 has
     # still never seen a ref
     assert got2[("u1", 4.0)]["ref_value"] == 200.0
@@ -309,7 +299,7 @@ def test_asof_enrich_stateful_across_batches(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_asof_enrich_stream_matches_batch_operator(spark, sf_small, tmp_path):
+def test_asof_enrich_stream_matches_batch_operator(spark, sf_small, tmp_path, stops_when_drained):
     """The stateful streaming as-of and the batch asof_join agree on
     the fixture: views enriched with the latest at-or-before click.
     Single micro-batch, so cross-batch staleness can't differ."""
@@ -330,16 +320,9 @@ def test_asof_enrich_stream_matches_batch_operator(spark, sf_small, tmp_path):
     stream = spark.readStream.schema(
         "key string, ts timestamp, side string, value double"
     ).parquet(src)
-    emitted = []
-    q = (
-        asof_enrich(stream)
-        .writeStream.foreachBatch(lambda b, _i: emitted.extend(b.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "asof_parity_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    emitted = collect_stream(
+        asof_enrich(stream), str(tmp_path / "asof_parity_ckpt"), timeout_s=180
     )
-    q.awaitTermination(180)
 
     batch = QUERIES["st_asof_enrich"](spark, sf_small).collect()
     # clicks can tie with multiple view values per (key, ts): compare as
@@ -540,7 +523,7 @@ def test_streaming_dedup_filters_within_and_across_batches(
             stream, dedup_batch_against_store, f"{ckpt}/b{i}", store, index,
             trigger={"availableNow": True}, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     kept = sorted(r["doc_id"] for r in fmt.read(spark, store).collect())
     assert kept == [1, 2, 12]
@@ -607,7 +590,7 @@ def test_streaming_embed_dedup_filters_within_and_across_batches(
             stream, embed_dedup_batch_against_store, f"{ckpt}/b{i}", store, index,
             trigger={"availableNow": True}, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     kept = sorted(r["vec_id"] for r in fmt.read(spark, store).collect())
     assert kept == [1, 2, 12]
@@ -636,7 +619,7 @@ def test_streaming_semantic_dedup_filters_within_and_across_batches(
     twin of a batch-1 vector is caught by the pruned-cell probe under
     the FROZEN model (scale-invariant assignment → same cell,
     structurally), its fresh vector survives, and redelivery of batch 2
-    is a marker no-op."""
+    finds its index partition and is a no-op."""
     from faexport_db_spark.streaming.dedup_stream import (
         semantic_dedup_batch_against_store,
     )
@@ -666,7 +649,7 @@ def test_streaming_semantic_dedup_filters_within_and_across_batches(
             stream, semantic_dedup_batch_against_store, f"{ckpt}/b{i}",
             store, index, trigger={"availableNow": True}, n_centroids=2,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     kept = sorted(r["vec_id"] for r in spark.read.parquet(store).collect())
     assert kept == [1, 2, 12]
@@ -679,7 +662,7 @@ def test_streaming_semantic_dedup_filters_within_and_across_batches(
 
     cents = read_model_sidecar(spark, index, "_centroids.json")
     assert 1 <= len(cents) <= 2
-    # direct redelivery of batch 2 (marker present) is a no-op
+    # direct redelivery of batch 2 (index partition present) is a no-op
     sid = (tmp_path / "ckpt" / "b2" / "_dedup_stream_token").read_text().strip()
     redelivered = semantic_dedup_batch_against_store(
         spark.createDataFrame(batches[1], schema), store, index,
@@ -691,10 +674,9 @@ def test_streaming_semantic_dedup_filters_within_and_across_batches(
 
 @pytest.mark.slow
 def test_batch_commit_marker_skips_redelivered_batch(spark, tmp_path):
-    """A batch re-delivered AFTER its commit marker was written must be
-    skipped entirely — no duplicate store rows, no duplicate index
-    rows (ADVICE r03: the two appends are not atomic; the marker makes
-    the common foreachBatch retry a no-op)."""
+    """A batch re-delivered AFTER its commit record — the index
+    partition ``batch=<tag>`` — was published must be skipped entirely:
+    no store or index file is written again."""
     from faexport_db_spark.streaming.dedup_stream import dedup_batch_against_store
 
     store = str(tmp_path / "store")
@@ -705,13 +687,13 @@ def test_batch_commit_marker_skips_redelivered_batch(spark, tmp_path):
     )
     out1 = dedup_batch_against_store(batch, store, index, batch_id=7)
     assert out1 is not None and out1.count() == 2
+    assert (tmp_path / "index" / "batch=direct-7").is_dir()
     n_store = spark.read.parquet(store).count()
-    n_index = spark.read.parquet(index).count()
+    listing = (_files(store), _files(index))
     # re-delivery of the SAME committed batch: skipped
     out2 = dedup_batch_against_store(batch, store, index, batch_id=7)
     assert out2 is None
-    assert spark.read.parquet(store).count() == n_store
-    assert spark.read.parquet(index).count() == n_index
+    assert (_files(store), _files(index)) == listing
     # a NEW batch id still processes
     batch2 = spark.createDataFrame(
         [(3, "lambda mu nu xi omicron pi rho")], "doc_id bigint, text string"
@@ -719,18 +701,6 @@ def test_batch_commit_marker_skips_redelivered_batch(spark, tmp_path):
     out3 = dedup_batch_against_store(batch2, store, index, batch_id=8)
     assert out3 is not None and out3.count() == 1
     assert spark.read.parquet(store).count() == n_store + 1
-
-
-def _drain(spark, step, src, ckpt, *args, **kwargs):
-    """One ``availableNow`` run of ``step`` over the parquet dir ``src``."""
-    from faexport_db_spark.streaming.microbatch import start_batch_stream
-
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-    q = start_batch_stream(
-        stream, step, ckpt, *args, trigger={"availableNow": True}, **kwargs
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
 
 
 def test_batch_stream_token_contract(spark, tmp_path):
@@ -748,34 +718,34 @@ def test_batch_stream_token_contract(spark, tmp_path):
     src = tmp_path / "src"
     ckpt = tmp_path / "ckpt"
     spark.createDataFrame([(1, "a")], schema).write.mode("append").parquet(str(src))
-    _drain(spark, record, str(src), str(ckpt), tag="t")
+    run_batch_stream(spark, record, str(src), str(ckpt), tag="t")
     spark.createDataFrame([(2, "b")], schema).write.mode("append").parquet(str(src))
-    _drain(spark, record, str(src), str(ckpt), tag="t")
+    run_batch_stream(spark, record, str(src), str(ckpt), tag="t")
     assert [(t, b, n) for t, b, _, n in seen] == [("t", 0, 1), ("t", 1, 1)]
     sid = seen[0][2]
     assert sid and seen[1][2] == sid
     assert (ckpt / "_dedup_stream_token").read_text().strip() == sid
 
     shutil.rmtree(ckpt)
-    _drain(spark, record, str(src), str(ckpt))
+    run_batch_stream(spark, record, str(src), str(ckpt))
     assert seen[2][1] == 0 and seen[2][2] not in (None, "", sid)
 
     for i, junk in enumerate(["", "  \n"]):
         fresh = tmp_path / f"ckpt_junk{i}"
         fresh.mkdir()
         (fresh / "_dedup_stream_token").write_text(junk)
-        _drain(spark, record, str(src), str(fresh))
+        run_batch_stream(spark, record, str(src), str(fresh))
         minted = seen[-1][2]
         assert minted.strip() and minted not in (sid, seen[2][2])
         assert (fresh / "_dedup_stream_token").read_text().strip() == minted
 
 
 def test_batch_stream_resumes_existing_token_and_markers(spark, tmp_path):
-    """Commit-protocol compatibility: a checkpoint that already holds a
-    ``_dedup_stream_token`` keeps it (no re-mint), markers land at
-    ``<root>/_batch_committed/<token>/<batch_id>``, and a batch Spark
-    re-delivers after a crash before its checkpoint commit is skipped
-    by that marker instead of appending twice."""
+    """A checkpoint that already holds a ``_dedup_stream_token`` keeps
+    it (no re-mint), each batch's store rows land in the partition
+    ``batch=<token>-<batch_id>``, and a batch Spark re-delivers after a
+    crash before its checkpoint commit replaces that partition instead
+    of adding its rows twice."""
     from faexport_db_spark.streaming.dedup_stream import bloom_decontaminate_batch
     from faexport_db_spark.training.text import build_bloom_filter
 
@@ -794,12 +764,12 @@ def test_batch_stream_resumes_existing_token_and_markers(spark, tmp_path):
         [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta iota kappa")],
         schema,
     ).write.mode("append").parquet(str(src))
-    run = lambda: _drain(  # noqa: E731
+    run = lambda: run_batch_stream(  # noqa: E731
         spark, bloom_decontaminate_batch, str(src), str(ckpt),
         words, str(store), m_bits=m_bits,
     )
     run()
-    assert (store / "_batch_committed" / "0123456789ab" / "0").exists()
+    assert (store / "batch=0123456789ab-0").is_dir()
     assert spark.read.parquet(str(store)).count() == 2
 
     # crash after the step, before Spark's commit: batch 0 is re-delivered
@@ -813,7 +783,7 @@ def test_batch_stream_resumes_existing_token_and_markers(spark, tmp_path):
         "append"
     ).parquet(str(src))
     run()
-    assert (store / "_batch_committed" / "0123456789ab" / "1").exists()
+    assert (store / "batch=0123456789ab-1").is_dir()
     assert spark.read.parquet(str(store)).count() == 3
 
 
@@ -871,7 +841,7 @@ def test_streaming_passage_dedup_cleans_across_batches(spark, tmp_path, fmt_name
             stream, passage_dedup_batch_against_store, f"{ckpt}/b{i}",
             store, index, trigger={"availableNow": True}, tile_tokens=5, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     rows = {r["doc_id"]: r["text"] for r in fmt.read(spark, store).collect()}
     assert set(rows) == {1, 2, 10}
@@ -909,7 +879,7 @@ def test_streaming_line_dedup_cleans_across_batches(spark, tmp_path, fmt_name):
             stream, line_dedup_batch_against_store, f"{ckpt}/b{i}",
             store, index, trigger={"availableNow": True}, line_tokens=5, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     rows = {r["doc_id"]: r["text"] for r in fmt.read(spark, store).collect()}
     assert rows == {
@@ -919,19 +889,16 @@ def test_streaming_line_dedup_cleans_across_batches(spark, tmp_path, fmt_name):
 
 
 @pytest.mark.slow
-def test_passage_dedup_retry_windows_never_lose_text(spark, tmp_path):
-    """ADVICE r04 (high): the passage stream must append survivors to
-    the STORE before their tile digests hit the index — the digest
-    index has no doc ids to self-exclude, so a digest-first crash
-    window would make the retry re-clean the whole batch to empty and
-    silently lose its text. Simulate both crash windows and assert the
-    store converges to exactly one surviving copy."""
+def test_passage_dedup_retry_windows_never_lose_text(spark, tmp_path, monkeypatch):
+    """The passage stream must write survivors to the STORE before
+    their tile digests reach the index — the digest index has no doc
+    ids to self-exclude, so a batch that probed its own digests would
+    clean itself to empty and silently lose its text. A batch that
+    crashes before its digest publish is re-delivered into exactly one
+    stored copy; the same text arriving later as a new batch is cleaned
+    to empty against those digests, and the stored text stays."""
     from faexport_db_spark.streaming.dedup_stream import (
         passage_dedup_batch_against_store,
-    )
-    from faexport_db_spark.training.text import (
-        build_passage_index,
-        passage_dedup_probe,
     )
 
     store = str(tmp_path / "store")
@@ -941,41 +908,32 @@ def test_passage_dedup_retry_windows_never_lose_text(spark, tmp_path):
         [(1, "p1 p2 p3 p4 p5 q1 q2 q3 q4 q5")], schema
     )
 
-    # --- window A: crash AFTER the store append, BEFORE the digest
-    # append (first attempt done manually up to the crash point).
-    build_passage_index(batch.filter(F.lit(False)), index, 5)
-    cleaned, _kept = passage_dedup_probe(batch, index, 5)
-    survived = cleaned.filter(F.length("clean_text") > 0).select(
-        "doc_id", F.col("clean_text").alias("text")
-    )
-    survived.write.mode("append").parquet(store)  # ...then "crash"
-
-    # Retry runs the full step: survivors recompute identically (index
-    # unchanged), the store re-append is an exact duplicate the
-    # maintenance dedup collapses, digests land, batch marks.
+    _crash_publish_once(monkeypatch, "w-3")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        passage_dedup_batch_against_store(
+            batch, store, index, tile_tokens=5, batch_id=3, stream_id="w"
+        )
+    # Retry: survivors recompute identically (index unchanged) and
+    # replace the batch's store partition; the digests land.
     out = passage_dedup_batch_against_store(
         batch, store, index, tile_tokens=5, batch_id=3, stream_id="w"
     )
     assert out.count() == 1
     stored = spark.read.parquet(store)
-    assert stored.count() == 2  # exact-duplicate re-append, by contract
-    assert stored.distinct().count() == 1
-    assert stored.distinct().collect()[0]["text"].startswith("p1")
+    assert stored.count() == 1  # replaced, not appended a second time
+    assert stored.first()["text"].startswith("p1")
 
-    # --- window B: crash AFTER both appends, BEFORE the marker. The
-    # retry re-cleans against the batch's own digests -> everything
-    # empties -> nothing appended; the marker completes. The store must
-    # NOT lose the text that is already there (the old digest-first
-    # ordering lost it on window A instead).
+    # The same text as a new batch: every tile is indexed -> cleaned
+    # to empty, nothing stored, and the stored text is not lost.
     out2 = passage_dedup_batch_against_store(
         batch, store, index, tile_tokens=5, batch_id=3, stream_id="w2"
     )
     assert out2.count() == 0  # all tiles already indexed
-    assert spark.read.parquet(store).distinct().count() == 1
+    assert spark.read.parquet(store).count() == 1
 
 
 @pytest.mark.slow
-def test_funnel_track_advances_across_batches(spark, tmp_path):
+def test_funnel_track_advances_across_batches(spark, tmp_path, stops_when_drained):
     """Streaming funnel: stage state persists across micro-batches —
     a purchase in batch 2 completes a click from batch 1; pre-signup
     events never advance; each advance emits one changelog row."""
@@ -986,21 +944,9 @@ def test_funnel_track_advances_across_batches(spark, tmp_path):
     ckpt = str(tmp_path / "funnel_ckpt")
     schema = "user_id bigint, ts timestamp, event_type string"
 
-    def drain():
+    def emitted():
         stream = spark.readStream.schema(schema).json(str(src))
-        out = funnel_track(stream)
-        emitted = []
-
-        def collect(batch, _bid):
-            emitted.extend(batch.collect())
-
-        q = (
-            out.writeStream.foreachBatch(collect)
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        return emitted
+        return collect_stream(funnel_track(stream), ckpt)
 
     (src / "b1.jsonl").write_text(
         '{"user_id":1,"ts":"2024-01-01T00:00:01","event_type":"click"}\n'
@@ -1008,7 +954,7 @@ def test_funnel_track_advances_across_batches(spark, tmp_path):
         '{"user_id":1,"ts":"2024-01-01T00:00:03","event_type":"click"}\n'
         '{"user_id":2,"ts":"2024-01-01T00:00:01","event_type":"purchase"}\n'
     )
-    got1 = {(r["user_id"], r["funnel_stage"]) for r in drain()}
+    got1 = {(r["user_id"], r["funnel_stage"]) for r in emitted()}
     # u1: pre-signup click ignored, then signup(1) + click(2); u2: nothing
     assert got1 == {(1, 1), (1, 2)}
 
@@ -1016,12 +962,12 @@ def test_funnel_track_advances_across_batches(spark, tmp_path):
         '{"user_id":1,"ts":"2024-01-01T00:01:00","event_type":"purchase"}\n'
         '{"user_id":2,"ts":"2024-01-01T00:01:00","event_type":"signup"}\n'
     )
-    got2 = {(r["user_id"], r["funnel_stage"]) for r in drain()}
+    got2 = {(r["user_id"], r["funnel_stage"]) for r in emitted()}
     assert got2 == {(1, 3), (2, 1)}  # cross-batch completion
 
 
 @pytest.mark.slow
-def test_funnel_track_matches_batch_fold(spark, sf_small, tmp_path):
+def test_funnel_track_matches_batch_fold(spark, sf_small, tmp_path, stops_when_drained):
     """Single-batch parity: max emitted stage per user == the batch
     ts3 funnel answer on the fixture events (users with stage 0 emit
     nothing in the stream and must be stage 0 in batch)."""
@@ -1036,20 +982,9 @@ def test_funnel_track_matches_batch_fold(spark, sf_small, tmp_path):
     stream = spark.readStream.schema(
         "user_id bigint, ts timestamp, event_type string"
     ).parquet(src)
-    emitted = []
-
-    def collect(batch, _bid):
-        emitted.extend(batch.collect())
-
-    q = (
-        funnel_track(stream)
-        .writeStream.foreachBatch(collect)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "fixture_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    emitted = collect_stream(
+        funnel_track(stream), str(tmp_path / "fixture_ckpt"), timeout_s=180
     )
-    q.awaitTermination(180)
     stream_max: dict[int, int] = {}
     for r in emitted:
         stream_max[r["user_id"]] = max(stream_max.get(r["user_id"], 0), r["funnel_stage"])
@@ -1061,13 +996,15 @@ def test_funnel_track_matches_batch_fold(spark, sf_small, tmp_path):
 
 
 @pytest.mark.slow
-def test_line_dedup_stream_accumulates_and_retries_idempotently(spark, tmp_path):
+def test_line_dedup_stream_accumulates_and_retries_idempotently(
+    spark, tmp_path, monkeypatch
+):
     """Streaming line dedup: batch 2's repeat of batch 1's surviving
-    line is cut (counts accumulate across batches); re-delivering a
-    batch (same ids, marker present) is a no-op; and a simulated
-    retry AFTER the count append but BEFORE the marker does not
-    double-count (dynamic partition overwrite replaces the batch's
-    own src= partition)."""
+    line is cut (counts accumulate across batches); a batch 2 that
+    crashed before its count publish and was re-delivered publishes
+    its counts once, so no line's count exceeds its true occurrences;
+    and re-delivering a committed batch (its index partition present)
+    is a no-op."""
     from faexport_db_spark.streaming.dedup_stream import (
         line_dedup_batch_against_store,
     )
@@ -1087,50 +1024,43 @@ def test_line_dedup_stream_accumulates_and_retries_idempotently(spark, tmp_path)
         [(2, "alpha beta gamma delta eps fresh words made here today")],
         "doc_id bigint, text string",
     )
+    _crash_publish_once(monkeypatch, "s1-1")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        line_dedup_batch_against_store(
+            b2, store, index, line_tokens=5, batch_id=1, stream_id="s1"
+        )
     out2 = line_dedup_batch_against_store(
         b2, store, index, line_tokens=5, batch_id=1, stream_id="s1"
     )
     rows2 = out2.collect()
     assert len(rows2) == 1
     assert rows2[0]["text"] == "fresh words made here today"
-    # marker replay: same batch id again -> None, store unchanged
+    # replay of the committed batch -> None, store unchanged
     assert (
         line_dedup_batch_against_store(
             b2, store, index, line_tokens=5, batch_id=1, stream_id="s1"
         )
         is None
     )
-    n_store = spark.read.parquet(store).count()
-    assert n_store == 2
-    # crash-window retry: wipe ONLY the marker (counts + store already
-    # written) and re-deliver -> the src= partition is overwritten,
-    # not duplicated, so a THIRD batch repeating b2's fresh line sees
-    # count exactly 2 (1 index + 1 in-batch), not 3
-    import shutil
-
-    shutil.rmtree(f"{index}/_batch_committed")
-    line_dedup_batch_against_store(
-        b2, store, index, line_tokens=5, batch_id=1, stream_id="s1"
-    )
-    idx = spark.read.parquet(index)
+    assert spark.read.parquet(store).count() == 2
     from pyspark.sql import functions as SF
 
-    total_fresh = (
-        idx.filter(SF.col("lh") != "__bootstrap__")
+    total = (
+        spark.read.parquet(index)
         .groupBy("lh")
         .agg(SF.sum("cnt").alias("c"))
         .agg(SF.max("c"))
         .first()[0]
     )
-    assert total_fresh <= 2  # no digest's count exceeds its true occurrences
+    assert total == 2  # the shared line, once per batch; nothing counted twice
 
 
 @pytest.mark.slow
 def test_line_dedup_direct_calls_accumulate_counts(spark, tmp_path):
     """Direct (non-streaming, batch_id=None) calls must ACCUMULATE
-    count deltas: a fixed src= partition name would make the second
-    call's dynamic overwrite clobber the first call's counts and the
-    index under-clean (ADVICE r05). Two direct batches sharing a line
+    count deltas: a fixed partition name would make the second call
+    replace the first call's counts and the index under-clean
+    (ADVICE r05). Two direct batches sharing a line
     must drive its total count to 2 so a third batch's repeat is cut."""
     from faexport_db_spark.streaming.dedup_stream import (
         line_dedup_batch_against_store,
@@ -1153,8 +1083,7 @@ def test_line_dedup_direct_calls_accumulate_counts(spark, tmp_path):
 
     idx = spark.read.parquet(index)
     top = (
-        idx.filter(SF.col("lh") != "__bootstrap__")
-        .groupBy("lh")
+        idx.groupBy("lh")
         .agg(SF.sum("cnt").alias("c"))
         .agg(SF.max("c"))
         .first()[0]
@@ -1199,15 +1128,7 @@ def test_stream_stream_join_matches_batch(spark, sf_small, tmp_path):
         gap_minutes=60,
         watermark="2 hours",
     )
-    emitted = []
-    q = (
-        joined.writeStream.foreachBatch(lambda b, _i: emitted.extend(b.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ssj_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    emitted = collect_stream(joined, str(tmp_path / "ssj_ckpt"), timeout_s=300)
 
     batch = QUERIES["st_stream_join"](spark, sf_small).collect()
 
@@ -1253,7 +1174,7 @@ def test_cdc_stream_materializes_across_batches(spark, tmp_path):
         store, key_cols=["k"], seq_col="seq",
         trigger={"availableNow": True},
     )
-    q.awaitTermination(300)
+    drain(q, 300)
 
     from faexport_db_spark.streaming.cdc_stream import read_cdc_state
 
@@ -1282,11 +1203,10 @@ def test_cdc_batch_redelivery_is_exactly_once(spark, tmp_path):
     b = spark.createDataFrame([(1, 10, "x", "U"), (2, 10, "y", "U")], schema)
     cdc_apply_batch_against_store(b, store, ["k"], "seq", batch_id=0, stream_id="s")
     first = sorted(map(tuple, read_cdc_state(spark, store).collect()))
-    # redelivery of the same batch id: marker short-circuits, store unchanged
+    # redelivery of the same batch id: the seq gate makes it a no-op
     cdc_apply_batch_against_store(b, store, ["k"], "seq", batch_id=0, stream_id="s")
     assert sorted(map(tuple, read_cdc_state(spark, store).collect())) == first
-    # and even WITHOUT the marker (direct call), the seq gate makes
-    # re-application a no-op
+    # and so does a direct call without a batch id
     cdc_apply_batch_against_store(b, store, ["k"], "seq")
     assert sorted(map(tuple, read_cdc_state(spark, store).collect())) == first
 
@@ -1393,7 +1313,7 @@ def test_streaming_substring_dedup_cleans_across_batches(spark, tmp_path, fmt_na
             stream, substring_dedup_batch_against_store, f"{ckpt}/b{i}",
             store, index, trigger={"availableNow": True}, min_tokens=8, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     rows = {r["doc_id"]: r["text"] for r in fmt.read(spark, store).collect()}
     assert set(rows) == {1, 2, 10}
@@ -1403,51 +1323,36 @@ def test_streaming_substring_dedup_cleans_across_batches(spark, tmp_path, fmt_na
 
 
 @pytest.mark.slow
-def test_substring_stream_retry_windows_converge(spark, tmp_path):
-    """Both crash windows of the substring stream converge: a retry
-    after the store append (index unchanged) re-appends duplicates the
-    maintenance dedup collapses — never loses text; a retry after BOTH
-    appends cleans the batch to empty against its own grams and only
-    completes the marker."""
+def test_substring_stream_retry_windows_converge(spark, tmp_path, monkeypatch):
+    """A substring batch that crashes before its gram publish is
+    re-delivered into exactly one stored copy — its text is never
+    lost; the same text arriving later as a new batch cleans to empty
+    against its own grams and stores nothing."""
     from faexport_db_spark.streaming.dedup_stream import (
         substring_dedup_batch_against_store,
-    )
-    from faexport_db_spark.training.text import (
-        append_substring_index,
-        build_substring_index,
-        substring_dedup_against_index,
     )
 
     store = str(tmp_path / "store")
     index = str(tmp_path / "index")
     schema = "doc_id bigint, text string"
-    batch = spark.createDataFrame(
-        [(1, "p1 p2 p3 p4 p5 p6 p7 p8 p9")], schema
+    text = "p1 p2 p3 p4 p5 p6 p7 p8 p9"
+    batch = spark.createDataFrame([(1, text)], schema)
+
+    _crash_publish_once(monkeypatch, "w-0")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        substring_dedup_batch_against_store(
+            batch, store, index, min_tokens=8, batch_id=0, stream_id="w"
+        )
+    out = substring_dedup_batch_against_store(
+        batch, store, index, min_tokens=8, batch_id=0, stream_id="w"
     )
-
-    # window A: crash AFTER the store append, BEFORE the gram append —
-    # first attempt replayed manually up to the crash point.
-    build_substring_index(batch.filter(F.lit(False)), index, 8)
-    cleaned = substring_dedup_against_index(batch, index, 8)
-    survivors = cleaned.select(
-        F.col("doc_id"), F.col("clean_text").alias("text")
-    ).localCheckpoint(eager=True)
-    survivors.write.mode("append").parquet(store)  # store landed, grams did NOT
-    # retry (no marker was written): full batch apply
-    out = substring_dedup_batch_against_store(batch, store, index, min_tokens=8)
     assert out is not None
-    stored = [r["text"] for r in spark.read.parquet(store).collect()]
-    assert stored and all(t == "p1 p2 p3 p4 p5 p6 p7 p8 p9" for t in stored)
-    # duplicates collapse under exact dedup; text never lost
-    assert len(set(stored)) == 1
+    assert [r["text"] for r in spark.read.parquet(store).collect()] == [text]
 
-    # window B: crash AFTER both appends, BEFORE the marker — simulate
-    # by re-applying the same batch (still no marker): it must clean to
-    # empty against its own grams and append nothing new.
-    n_before = spark.read.parquet(store).count()
+    # a direct call with the same text: cleaned to empty, stores nothing
     out2 = substring_dedup_batch_against_store(batch, store, index, min_tokens=8)
     assert out2 is not None and out2.count() == 0
-    assert spark.read.parquet(store).count() == n_before
+    assert spark.read.parquet(store).count() == 1
 
 
 @pytest.mark.parametrize("fmt_name", sorted(STORE_FORMATS))
@@ -1485,7 +1390,7 @@ def test_streaming_media_dedup_across_batches(spark, tmp_path, fmt_name):
             store, index, trigger={"availableNow": True},
             threshold=0.8, chunk_bytes=256, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     ids = sorted(r["media_id"] for r in fmt.read(spark, store).collect())
     assert ids == [1, 11]  # 2 = exact in-batch copy, 10 = cross-batch near-dup
@@ -1506,7 +1411,7 @@ def test_media_dedup_redelivery_is_noop(spark, tmp_path):
     )
     assert out is not None and out.count() == 1
     n = spark.read.parquet(store).count()
-    # marker short-circuits the redelivered batch wholesale
+    # the index partition short-circuits the redelivered batch
     assert (
         media_dedup_batch_against_store(
             b, store, index, chunk_bytes=64, batch_id=0, stream_id="m"
@@ -1555,7 +1460,7 @@ def test_streaming_media_cdc_dedup_insertion_across_batches(spark, tmp_path, fmt
             store, index, trigger={"availableNow": True},
             threshold=0.5, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     ids = sorted(r["media_id"] for r in fmt.read(spark, store).collect())
     assert ids == [1, 11]
@@ -1563,7 +1468,7 @@ def test_streaming_media_cdc_dedup_insertion_across_batches(spark, tmp_path, fmt
 
 @pytest.mark.slow
 def test_media_cdc_dedup_redelivery_and_incremental_parity(spark, tmp_path):
-    """Marker short-circuits a redelivered batch; and the incremental
+    """The index partition short-circuits a redelivered batch; and the incremental
     probe form finds exactly the pairs the self-join form finds when
     the corpus is indexed up front (batch-parity for the CDC family)."""
     import random
@@ -1624,7 +1529,7 @@ def test_media_cdc_dedup_redelivery_and_incremental_parity(spark, tmp_path):
 def test_streaming_fuzzy_decontaminate(spark, tmp_path, fmt_name):
     """Each batch drops paraphrased benchmark leaks (first word swapped
     — exact 13-grams all broken) and verbatim leaks, keeps novel docs;
-    redelivery of a committed batch is a no-op."""
+    redelivery of a committed batch replaces its store partition."""
     from faexport_db_spark.streaming.dedup_stream import (
         fuzzy_decontaminate_batch_against_benchmark,
     )
@@ -1656,23 +1561,20 @@ def test_streaming_fuzzy_decontaminate(spark, tmp_path, fmt_name):
             stream, fuzzy_decontaminate_batch_against_benchmark, f"{ckpt}/b{i}",
             benchmark, store, trigger={"availableNow": True}, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
     ids = sorted(r["doc_id"] for r in fmt.read(spark, store).collect())
     assert ids == [2, 11]
 
-    # direct-API redelivery no-op via the marker
+    # direct-API redelivery replaces the batch's partition
     b = spark.createDataFrame(batches[0], schema)
     n = fmt.read(spark, store).count()
     out = fuzzy_decontaminate_batch_against_benchmark(
         b, benchmark, store, batch_id=0, stream_id="d", fmt=fmt
     )
-    assert out is not None  # first delivery under this namespace appends
+    assert out is not None  # first delivery under this namespace adds rows
     n2 = fmt.read(spark, store).count()
-    assert (
-        fuzzy_decontaminate_batch_against_benchmark(
-            b, benchmark, store, batch_id=0, stream_id="d", fmt=fmt
-        )
-        is None
+    fuzzy_decontaminate_batch_against_benchmark(
+        b, benchmark, store, batch_id=0, stream_id="d", fmt=fmt
     )
     assert fmt.read(spark, store).count() == n2 and n2 == n + 1
 
@@ -1683,7 +1585,8 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
     """The Bloom filter is built ONCE from the static benchmark; each
     batch's map-only probe drops every doc sharing a 5-gram with it
     (no false negatives) and keeps novel docs; redelivery of a
-    committed batch is a no-op; batch parity with the batch API."""
+    committed batch replaces its store partition; batch parity with
+    the batch API."""
     from faexport_db_spark.streaming.dedup_stream import (
         bloom_decontaminate_batch,
     )
@@ -1721,7 +1624,7 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
             build_bloom_filter(benchmark, m_bits=m_bits), store,
             m_bits=m_bits, trigger={"availableNow": True}, fmt=fmt,
         )
-        q.awaitTermination(120)
+        drain(q)
     ids = sorted(r["doc_id"] for r in fmt.read(spark, store).collect())
     assert ids == [2, 11]
 
@@ -1733,7 +1636,7 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
     )
     assert batch_kept == ids
 
-    # direct-API redelivery no-op via the marker
+    # direct-API redelivery replaces the batch's partition
     words = build_bloom_filter(benchmark, m_bits=m_bits)
     b = spark.createDataFrame(batches[0], schema)
     out = bloom_decontaminate_batch(
@@ -1741,11 +1644,8 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
     )
     assert out is not None
     n2 = fmt.read(spark, store).count()
-    assert (
-        bloom_decontaminate_batch(
-            b, words, store, m_bits=m_bits, batch_id=0, stream_id="d", fmt=fmt
-        )
-        is None
+    bloom_decontaminate_batch(
+        b, words, store, m_bits=m_bits, batch_id=0, stream_id="d", fmt=fmt
     )
     assert fmt.read(spark, store).count() == n2
 
@@ -1780,7 +1680,7 @@ def test_streaming_hll_register_store(spark, tmp_path):
             stream, hll_batch_into_store, f"{ckpt}/b{i}", store, "v",
             trigger={"availableNow": True},
         )
-        q.awaitTermination(120)
+        drain(q)
     merged = {
         r["bucket"]: r["register"] for r in read_hll_store(spark, store).collect()
     }
@@ -1830,7 +1730,7 @@ def test_streaming_kmv_store(spark, tmp_path):
             stream, kmv_batch_into_store, f"{ckpt}/b{i}", store, "v",
             trigger={"availableNow": True},
         )
-        q.awaitTermination(120)
+        drain(q)
     merged = [r["hval"] for r in read_kmv_store(spark, store).collect()]
     full = spark.createDataFrame(batches[0] + batches[1], schema)
     direct = [r["hval"] for r in kmv_sketch(full, "v").collect()]
@@ -1881,7 +1781,7 @@ def test_streaming_qsketch_store(spark, tmp_path):
             stream, qsketch_batch_into_store, f"{ckpt}/b{i}", store, "v",
             trigger={"availableNow": True},
         )
-        q.awaitTermination(120)
+        drain(q)
     merged = {r["bucket"]: r["cnt"] for r in read_qsketch_store(spark, store).collect()}
     full = spark.createDataFrame(batches[0] + batches[1], schema)
     direct = {r["bucket"]: r["cnt"]
@@ -1899,3 +1799,304 @@ def test_streaming_qsketch_store(spark, tmp_path):
     bk = {r["q_pct"]: r for r in qsketch_quantile_brackets(
         read_qsketch_store(spark, store), [50]).collect()}
     assert bk[50]["lo"] <= bk[50]["hi"]
+
+
+# --- Commit protocol under injected crashes --------------------------
+#
+# Each case calls a step directly as batches 0 and 1 of stream "s",
+# makes batch 1 crash once (before its index publish, or after its
+# store write where a step has no index), re-delivers it, and checks:
+# the store equals a run without the crash and holds no row twice; the
+# index covers every stored row; and a re-delivery after the full
+# commit changes nothing on disk.
+
+_TEXT = "doc_id bigint, text string"
+_VECS = "vec_id bigint, embedding array<float>"
+_MEDIA = "media_id bigint, media_bytes binary"
+
+
+def _files(path) -> list[str]:
+    """Every file under ``path``, relative, without checksums and
+    hidden staging dirs."""
+    import os
+
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(".")]
+        rel = os.path.relpath(root, path)
+        out += [os.path.join(rel, n) for n in names if not n.startswith(".")]
+    return sorted(out)
+
+
+def _crash_publish_once(monkeypatch, tag, *importers) -> None:
+    """Make the next publish of the batch ``tag`` raise before it
+    writes anything — a crash before the commit record. ``importers``
+    are modules that imported ``publish_partition`` by name."""
+    from faexport_db_spark.streaming import microbatch
+
+    publish = microbatch.publish_partition
+    armed = {tag: True}
+
+    def crash_once(table, root, t, partition_by=None):
+        if armed.pop(t, False):
+            raise RuntimeError("injected crash before the publish")
+        publish(table, root, t, partition_by)
+
+    for module in (microbatch, *importers):
+        monkeypatch.setattr(module, "publish_partition", crash_once)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _index_case(spark, sf_small, name):
+    """(step, schema, batch 0 rows, batch 1 rows, step kwargs,
+    rebuild(stored, path), key columns): ``rebuild`` indexes the
+    stored rows from scratch, and every key it yields must be in the
+    stream's index."""
+    from faexport_db_spark.streaming import dedup_stream as ds
+    from faexport_db_spark.training import dedup, multimodal, similarity, text
+
+    emb = load_table(spark, sf_small, "embeddings").orderBy("vec_id").limit(3)
+    va, vb, vc = (list(r["embedding"]) for r in emb.collect())
+    vecs = ([(1, va), (2, vb)], [(11, [x * 2.0 for x in va]), (12, vc)])
+    base = bytes(range(256)) * 8
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    cases = {
+        "minhash": (
+            ds.dedup_batch_against_store, _TEXT,
+            [(1, words), (2, "one two three four five six seven eight nine ten")],
+            [(11, "zzz " + words.split(" ", 1)[1]),
+             (12, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do")],
+            {},
+            lambda d, p: dedup.minhash_build_index(d, p), ["band_idx", "band_hash", "doc_id"],
+        ),
+        "embed": (
+            ds.embed_dedup_batch_against_store, _VECS, *vecs, {},
+            lambda d, p: similarity.embed_lsh_build_index(d, p), ["tbl", "code", "vid"],
+        ),
+        "semantic": (
+            ds.semantic_dedup_batch_against_store, _VECS, *vecs, {"n_centroids": 2},
+            lambda d, p: similarity.ivf_build(d, p, n_centroids=2), ["neighbor_id"],
+        ),
+        "passage": (
+            ds.passage_dedup_batch_against_store, _TEXT,
+            [(1, "s1 s2 s3 s4 s5 a1 a2 a3 a4 a5"), (2, "b1 b2 b3 b4 b5")],
+            [(10, "s1 s2 s3 s4 s5 c1 c2 c3 c4 c5"), (11, "d1 d2 d3 d4 d5")],
+            {"tile_tokens": 5},
+            lambda d, p: text.build_passage_index(d, p, 5), ["th"],
+        ),
+        "substring": (
+            ds.substring_dedup_batch_against_store, _TEXT,
+            [(1, "s1 s2 s3 s4 s5 s6 s7 s8 a1 a2"), (2, "b1 b2 b3 b4 b5 b6 b7 b8 b9")],
+            [(10, "c1 s1 s2 s3 s4 s5 s6 s7 s8 c2"), (11, "d1 d2 d3 d4 d5 d6 d7 d8 d9")],
+            {"min_tokens": 8},
+            lambda d, p: text.build_substring_index(d, p, 8), ["gh"],
+        ),
+        "line": (
+            ds.line_dedup_batch_against_store, _TEXT,
+            [(1, "subscribe to our newsletter today alpha beta gamma delta eps")],
+            [(2, "subscribe to our newsletter today fresh words made here now")],
+            {"line_tokens": 5},
+            lambda d, p: text.build_line_index(d, p, 5), ["lh"],
+        ),
+        "media": (
+            ds.media_dedup_batch_against_store, _MEDIA,
+            [(1, base)],
+            [(10, base[:1024] + b"\xee" * 256 + base[1280:]), (11, bytes(reversed(base)))],
+            {"chunk_bytes": 256},
+            lambda d, p: multimodal.build_media_chunk_index(d, p, 256),
+            ["media_id", "chunk_idx", "chunk_hash"],
+        ),
+        "media_cdc": (
+            ds.media_cdc_dedup_batch_against_store, _MEDIA,
+            [(1, base)],
+            [(10, base[:5] + b"\x01\x02\x03" + base[5:]), (11, bytes(reversed(base)))],
+            {},
+            lambda d, p: multimodal.build_cdc_chunk_index(d, p),
+            ["media_id", "chunk_md5"],
+        ),
+    }
+    return cases[name]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["minhash", "embed", "semantic", "passage", "substring", "line", "media", "media_cdc"],
+)
+def test_crash_before_index_publish_is_exactly_once(
+    spark, sf_small, tmp_path, monkeypatch, name
+):
+    """A batch that crashes after its store write but before its index
+    publish leaves the index as it was, so its re-delivery recomputes
+    the same survivors and replaces its store partition: the store
+    equals a run without the crash, with no row twice, and the index
+    covers every stored row. Once committed, a re-delivery returns
+    ``None`` and writes nothing."""
+    step, schema, rows0, rows1, kwargs, rebuild, keys = _index_case(
+        spark, sf_small, name
+    )
+    b0, b1 = (spark.createDataFrame(r, schema) for r in (rows0, rows1))
+
+    def run(store, index, batch, batch_id):
+        return step(batch, store, index, batch_id=batch_id, stream_id="s", **kwargs)
+
+    ref_store, ref_index = str(tmp_path / "ref_store"), str(tmp_path / "ref_index")
+    run(ref_store, ref_index, b0, 0)
+    run(ref_store, ref_index, b1, 1)
+
+    store, index = str(tmp_path / "store"), str(tmp_path / "index")
+    run(store, index, b0, 0)
+    _crash_publish_once(monkeypatch, "s-1")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(store, index, b1, 1)
+    assert not (tmp_path / "index" / "batch=s-1").exists()
+    assert run(store, index, b1, 1) is not None
+
+    stored = spark.read.parquet(store)
+    assert stored.count() == stored.distinct().count()
+    assert _rows(stored) == _rows(spark.read.parquet(ref_store))
+    covered = str(tmp_path / "covered")
+    rebuild(stored.drop("batch"), covered)
+    missing = spark.read.parquet(covered).select(*keys).subtract(
+        spark.read.parquet(index).select(*keys)
+    )
+    assert missing.isEmpty()
+
+    listing = (_files(store), _files(index))
+    assert run(store, index, b1, 1) is None
+    assert (_files(store), _files(index)) == listing
+
+
+@pytest.mark.parametrize("name", ["fuzzy", "bloom"])
+def test_index_free_step_redelivery_replaces_its_partition(
+    spark, tmp_path, monkeypatch, name
+):
+    """The decontamination steps have no index: a batch that crashes
+    after its store write, and a batch re-delivered after it
+    committed, recompute the same survivors and replace their store
+    partition, so the store equals a run without the crash."""
+    from faexport_db_spark.streaming import dedup_stream as ds
+    from faexport_db_spark.training.text import build_bloom_filter
+
+    leak = "the quick brown fox jumps over the lazy dog near the old river bank"
+    benchmark = spark.createDataFrame([(1000, leak)], _TEXT)
+    if name == "fuzzy":
+        step, args = ds.fuzzy_decontaminate_batch_against_benchmark, (benchmark,)
+        kwargs = {}
+    else:
+        m_bits = 1 << 16
+        step = ds.bloom_decontaminate_batch
+        args, kwargs = (build_bloom_filter(benchmark, m_bits=m_bits),), {"m_bits": m_bits}
+    b0 = spark.createDataFrame(
+        [(1, leak), (2, "novel doc one about catalyst plans and adaptive execution")], _TEXT
+    )
+    b1 = spark.createDataFrame(
+        [(10, leak), (11, "novel doc two about shuffle partitions and broadcasts")], _TEXT
+    )
+
+    def run(store, batch, batch_id):
+        return step(batch, *args, store, batch_id=batch_id, stream_id="s", **kwargs)
+
+    ref_store, store = str(tmp_path / "ref_store"), str(tmp_path / "store")
+    run(ref_store, b0, 0)
+    run(ref_store, b1, 1)
+    run(store, b0, 0)
+    write = ds.overwrite_batch_rows
+    armed = {"s-1": True}
+
+    def crash_after(fmt, rows, path, tag):
+        write(fmt, rows, path, tag)
+        if armed.pop(tag, False):
+            raise RuntimeError("injected crash after the store write")
+
+    monkeypatch.setattr(ds, "overwrite_batch_rows", crash_after)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(store, b1, 1)
+    run(store, b1, 1)
+    stored = spark.read.parquet(store)
+    assert stored.count() == stored.distinct().count()
+    assert _rows(stored) == _rows(spark.read.parquet(ref_store))
+    assert sorted(r["doc_id"] for r in stored.collect()) == [2, 11]
+
+    # a committed batch re-delivered: same partitions, same rows
+    parts = sorted(p.name for p in (tmp_path / "store").glob("batch=*"))
+    run(store, b1, 1)
+    assert sorted(p.name for p in (tmp_path / "store").glob("batch=*")) == parts
+    assert _rows(spark.read.parquet(store)) == _rows(spark.read.parquet(ref_store))
+
+
+def test_cdc_crash_after_upsert_then_redelivery_is_a_no_op(spark, tmp_path, monkeypatch):
+    """CDC has no commit record: a batch that crashes after its upsert
+    is re-applied on re-delivery, and the sequence gate makes that a
+    no-op — the state equals a run without the crash, and a re-delivery
+    after the commit writes no file."""
+    from faexport_db_spark.streaming.cdc_stream import (
+        cdc_apply_batch_against_store,
+        read_cdc_state,
+    )
+
+    schema = "k bigint, seq bigint, v string, op string"
+    b0 = spark.createDataFrame([(1, 10, "a", "U"), (2, 10, "b", "U")], schema)
+    b1 = spark.createDataFrame([(1, 20, "a2", "U"), (2, 20, None, "D"), (3, 5, "c", "U")], schema)
+
+    def run(store, batch, batch_id, fmt):
+        cdc_apply_batch_against_store(
+            batch, store, ["k"], "seq", fmt=fmt, batch_id=batch_id, stream_id="s"
+        )
+
+    ref_store, store = str(tmp_path / "ref"), str(tmp_path / "store")
+    run(ref_store, b0, 0, ParquetFormat())
+    run(ref_store, b1, 1, ParquetFormat())
+    fmt = ParquetFormat()
+    run(store, b0, 0, fmt)
+    upsert = fmt.upsert_keys
+
+    def crash_after(*a, **kw):
+        upsert(*a, **kw)
+        raise RuntimeError("injected crash after the upsert")
+
+    monkeypatch.setattr(fmt, "upsert_keys", crash_after)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(store, b1, 1, fmt)
+    monkeypatch.setattr(fmt, "upsert_keys", upsert)
+    run(store, b1, 1, fmt)
+    state = read_cdc_state(spark, store)
+    assert state.count() == state.distinct().count()
+    assert _rows(state) == _rows(read_cdc_state(spark, ref_store))
+    assert {r["k"]: r["v"] for r in state.collect()} == {1: "a2", 3: "c"}
+
+    listing = _files(store)
+    run(store, b1, 1, fmt)
+    assert _files(store) == listing
+
+
+def test_sketch_crash_before_publish_then_redelivery_counts_once(
+    spark, tmp_path, monkeypatch
+):
+    """The quantile sketch merges by SUM, so each batch must count once:
+    a batch whose publish crashed, then was re-delivered, and then
+    re-delivered again after it committed, reads back as the register
+    table of the two batches."""
+    from faexport_db_spark.streaming import sketch_stream
+    from faexport_db_spark.streaming.sketch_stream import (
+        qsketch_batch_into_store,
+        read_qsketch_store,
+    )
+    from faexport_db_spark.training.pipeline import qsketch_register_table
+
+    rows0, rows1 = [(i,) for i in range(1, 300)], [(i * 7,) for i in range(1, 300)]
+    b0, b1 = (spark.createDataFrame(r, "v bigint") for r in (rows0, rows1))
+    store = str(tmp_path / "store")
+    qsketch_batch_into_store(b0, store, "v", batch_id=0, stream_id="s")
+    _crash_publish_once(monkeypatch, "s-1", sketch_stream)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        qsketch_batch_into_store(b1, store, "v", batch_id=1, stream_id="s")
+    for _ in range(2):  # the retry, then a re-delivery after the commit
+        qsketch_batch_into_store(b1, store, "v", batch_id=1, stream_id="s")
+    want = qsketch_register_table(spark.createDataFrame(rows0 + rows1, "v bigint"), "v")
+    assert _rows(read_qsketch_store(spark, store)) == _rows(want)
+    assert sorted(p.name for p in (tmp_path / "store").glob("batch=*")) == [
+        "batch=s-0", "batch=s-1"
+    ]

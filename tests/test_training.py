@@ -211,13 +211,14 @@ def test_pii_scrub_order_and_counts(spark):
 
 
 @pytest.mark.slow
-def test_centroid_assignment_literal_equals_arrow(spark, sf_small):
+def test_centroid_assignment_literal_equals_arrow(spark, sf_small, monkeypatch):
     """The size-gated assignment paths are interchangeable: literal
     expression and broadcast-matrix Arrow coder produce identical
     cell ids (and identical nprobe probe lists) on the same corpus
     and centroids — the contract that lets the gate flip at
     LITERAL_CENTROID_MAX without changing any result (VERDICT r05
-    #5)."""
+    #5). A gate of 0 selects the Arrow coder."""
+    from faexport_db_spark.training import similarity
     from faexport_db_spark.training.similarity import (
         _cell_probes,
         ivf_centroids,
@@ -225,18 +226,17 @@ def test_centroid_assignment_literal_equals_arrow(spark, sf_small):
 
     corpus = load_table(spark, sf_small, "embeddings")
     cents = ivf_centroids(corpus, n_centroids=32, iters=2)
+
+    def probes(nprobe):
+        out = corpus.select(
+            "vec_id", _cell_probes(F.col("embedding"), cents, nprobe).alias("p")
+        )
+        return {r["vec_id"]: list(r["p"]) for r in out.collect()}
+
+    literal = {nprobe: probes(nprobe) for nprobe in (1, 3)}
+    monkeypatch.setattr(similarity, "LITERAL_CENTROID_MAX", 0)
     for nprobe in (1, 3):
-        lit = corpus.select(
-            "vec_id",
-            _cell_probes(F.col("embedding"), cents, nprobe, force="literal").alias("p"),
-        )
-        arr = corpus.select(
-            "vec_id",
-            _cell_probes(F.col("embedding"), cents, nprobe, force="arrow").alias("p"),
-        )
-        a = {r["vec_id"]: list(r["p"]) for r in lit.collect()}
-        b = {r["vec_id"]: list(r["p"]) for r in arr.collect()}
-        assert a == b
+        assert probes(nprobe) == literal[nprobe]
 
 
 def test_semantic_dedup_at_5k_centroids_arrow_path(spark):
@@ -1136,6 +1136,7 @@ def test_streaming_bm25_index_maintenance(spark, sf_small, tmp_path):
         bm25_topk_persisted,
     )
     from faexport_db_spark.streaming.microbatch import start_batch_stream
+    from streams import drain
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
     half = [
@@ -1154,7 +1155,7 @@ def test_streaming_bm25_index_maintenance(spark, sf_small, tmp_path):
             stream, bm25_index_batch, f"{ckpt}/b{i}", idx,
             trigger={"availableNow": True},
         )
-        q.awaitTermination(120)
+        drain(q)
 
     queries = _bm25_queries(docs)
     ref_idx = str(tmp_path / "ref")
@@ -2954,24 +2955,23 @@ def test_hits_hand_computed(spark):
         hits(edges, iters=0)
 
 
-def test_kmeans_arrow_path_equals_literal(spark, sf_small):
+def test_kmeans_arrow_path_equals_literal(spark, sf_small, monkeypatch):
     """The large-k Arrow argmin (exact int64 matmul) must produce the
     identical trained model and assignments as the literal-expression
-    path — the _cell_probes two-path rule applied to the trainer."""
-    import pytest as _pytest
-
+    path — the _cell_probes two-path rule applied to the trainer. A
+    gate of 0 selects the Arrow argmin."""
     from faexport_db_spark.datamodel.testdata import load_table
+    from faexport_db_spark.training import similarity
     from faexport_db_spark.training.similarity import kmeans_quantized
 
     emb = load_table(spark, sf_small, "embeddings")
-    out_l, cents_l = kmeans_quantized(emb, k=6, iters=2, force="literal")
-    out_a, cents_a = kmeans_quantized(emb, k=6, iters=2, force="arrow")
-    assert cents_a == cents_l
+    out_l, cents_l = kmeans_quantized(emb, k=6, iters=2)
     lit = {r["vec_id"]: (r["cid"], r["dist"]) for r in out_l.collect()}
+    monkeypatch.setattr(similarity, "LITERAL_CENTROID_MAX", 0)
+    out_a, cents_a = kmeans_quantized(emb, k=6, iters=2)
+    assert cents_a == cents_l
     arw = {r["vec_id"]: (r["cid"], r["dist"]) for r in out_a.collect()}
     assert arw == lit
-    with _pytest.raises(ValueError):
-        kmeans_quantized(emb, k=2, iters=0, force="nope")
 
 
 def test_bfs_hops_hand_computed(spark):
