@@ -1549,8 +1549,8 @@ def t_passage_incremental_checked(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("text"),
     )
     return passage_dedup_against_index(
-        copies.unionByName(novel), path, tile_tokens=10, append=False
-    )
+        copies.unionByName(novel), path, tile_tokens=10
+    )[0]
 
 
 @register(
@@ -1998,8 +1998,8 @@ def t_line_incremental_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     return line_dedup_against_index(
-        copies.unionByName(novel), path, line_tokens=5, max_freq=1, append=False
-    )
+        copies.unionByName(novel), path, line_tokens=5, max_freq=1
+    )[0]
 
 
 @register(

@@ -18,7 +18,9 @@ Each function here is one micro-batch step. Stream it with the shared
 runner, e.g. ``start_batch_stream(source, dedup_batch_against_store,
 checkpoint, store_path, index_path, fmt=fmt)``
 (streaming/microbatch.py), or call it directly without a ``batch_id``
-for the batch API.
+for the batch API. A step is the one writer that adds a batch to its
+index: the ``*_against_index`` probes in ``training/`` are read-only,
+so a batch joins an index outside a stream by a direct step call.
 
 The same batch-against-store shape carries the exact granularities
 (line/passage/substring), embedding/semantic vectors, byte-level
@@ -48,6 +50,7 @@ from pyspark.sql import functions as F
 
 from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT, TableFormat
 from faexport_db_spark.operators.partitioning import fan_out
+from faexport_db_spark.operators.pins import unpin
 from faexport_db_spark.streaming.microbatch import (
     _read_store_or_none,
     batch_tag,
@@ -140,6 +143,7 @@ def dedup_batch_against_store(
         banded.join(F.broadcast(survivors.select(id_col)), id_col, "left_semi"),
         index_path, tag, ["band_idx"],
     )
+    unpin(banded)
     return survivors
 
 
@@ -226,6 +230,7 @@ def embed_dedup_batch_against_store(
         ),
         index_path, tag, ["tbl"],
     )
+    unpin(coded)
     return survivors
 
 
@@ -341,7 +346,7 @@ def passage_dedup_batch_against_store(
     strategy; the digest index stays raw parquet."""
     from faexport_db_spark.training.text import (
         build_passage_index,
-        passage_dedup_probe,
+        passage_dedup_against_index,
     )
 
     spark = batch.sparkSession
@@ -354,7 +359,7 @@ def passage_dedup_batch_against_store(
         build_passage_index(
             batch.filter(F.lit(False)), index_path, tile_tokens, text_col, id_col
         )
-    cleaned, kept_ths = passage_dedup_probe(
+    cleaned, kept_ths = passage_dedup_against_index(
         batch, index_path, tile_tokens, text_col, id_col
     )
     survivors = (
@@ -407,7 +412,7 @@ def substring_dedup_batch_against_store(
             batch.filter(F.lit(False)), index_path, min_tokens, text_col, id_col
         )
     cleaned = substring_dedup_against_index(
-        batch, index_path, min_tokens, text_col, id_col, append=False
+        batch, index_path, min_tokens, text_col, id_col
     )
     survivors = (
         cleaned.filter(F.length("clean_text") > 0)
@@ -485,6 +490,7 @@ def media_dedup_batch_against_store(
         .sortWithinPartitions("chunk_hash"),
         index_path, tag,
     )
+    unpin(sigs)
     return survivors
 
 
@@ -515,7 +521,6 @@ def line_dedup_batch_against_store(
     streams.
     """
     from faexport_db_spark.training.text import (
-        _lines,
         build_line_index,
         line_dedup_against_index,
     )
@@ -531,23 +536,13 @@ def line_dedup_batch_against_store(
             batch.filter(F.lit(False)), index_path, line_tokens, text_col,
             id_col, normalize,
         )
-    cleaned = line_dedup_against_index(
-        batch,
-        index_path,
-        line_tokens=line_tokens,
-        max_freq=max_freq,
-        text_col=text_col,
-        id_col=id_col,
-        normalize=normalize,
-        append=False,
-    ).localCheckpoint(eager=True)
-    survivors = cleaned.filter(F.length("clean_text") > 0).select(
-        F.col(id_col), F.col("clean_text").alias(text_col)
+    cleaned, counts = line_dedup_against_index(
+        batch, index_path, line_tokens, max_freq, text_col, id_col, normalize
     )
-    counts = (
-        _lines(batch, line_tokens, text_col, id_col, normalize)
-        .groupBy("lh")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    survivors = (
+        cleaned.filter(F.length("clean_text") > 0)
+        .select(F.col(id_col), F.col("clean_text").alias(text_col))
+        .localCheckpoint(eager=True)
     )
     commit_batch(fmt, survivors, store_path, counts, index_path, tag)
     return survivors
@@ -623,6 +618,7 @@ def media_cdc_dedup_batch_against_store(
         .sortWithinPartitions("chunk_md5"),
         index_path, tag,
     )
+    unpin(sigs)
     return survivors
 
 

@@ -59,7 +59,6 @@ ASOF_OUTPUT_SCHEMA = (
     "key string, ts timestamp, value double, asof_ts timestamp, ref_value double"
 )
 ASOF_STATE_SCHEMA = "asof_ns long, ref_value double"
-_ASOF_IDLE_TIMEOUT_MS = 24 * 3600 * 1000
 
 
 def _asof_enrich_fn(
@@ -96,9 +95,9 @@ def _asof_enrich_fn(
         last_ns = int(pd.Timestamp(last["ts"]).value)
         if carried_ns is None or last_ns >= carried_ns:
             state.update((last_ns, float(last["value"])))
-        state.setTimeoutDuration(_ASOF_IDLE_TIMEOUT_MS)
+        state.setTimeoutDuration(_IDLE_TIMEOUT_MS)
     elif state.exists:
-        state.setTimeoutDuration(_ASOF_IDLE_TIMEOUT_MS)  # re-arm idle eviction
+        state.setTimeoutDuration(_IDLE_TIMEOUT_MS)  # re-arm idle eviction
 
     if not len(evts):
         return
@@ -139,7 +138,13 @@ def asof_enrich(
     caveat for stateful streams: a ref row arriving batches late is
     not retroactively applied. Feed by ts-ordered sources (or accept
     boundary staleness), exactly like Spark's own streaming
-    dropDuplicates."""
+    dropDuplicates.
+
+    The idle timeout is a processing-time timeout, so Spark runs a
+    no-data batch after every batch: a query over this started with
+    ``trigger(availableNow=True)`` does not stop by itself while
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` is on (the
+    default). Turn it off for such a run."""
     from pyspark.sql import functions as F
 
     keyed = stream.select(
@@ -162,6 +167,12 @@ def first_seen(stream: DataFrame, key_col: str = "key", value_col: str = "value"
 
     ``stream`` must be a streaming DataFrame with ``key``/``value``
     string columns (rename upstream). Use with ``outputMode("update")``.
+
+    The idle timeout is a processing-time timeout, so Spark runs a
+    no-data batch after every batch: a query over this started with
+    ``trigger(availableNow=True)`` does not stop by itself while
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` is on (the
+    default). Turn it off for such a run.
     """
     from pyspark.sql import functions as F
 
@@ -179,7 +190,6 @@ def first_seen(stream: DataFrame, key_col: str = "key", value_col: str = "value"
 
 FUNNEL_OUTPUT_SCHEMA = "user_id bigint, funnel_stage int, stage_ts timestamp"
 FUNNEL_STATE_SCHEMA = "stage int, t_ns long"
-_FUNNEL_IDLE_TIMEOUT_MS = 24 * 3600 * 1000
 FUNNEL_STAGES = ("signup", "click", "purchase")
 
 
@@ -207,7 +217,7 @@ def _funnel_fn(
             out_ts.append(ts)
     if out_stage:
         state.update((stage, t_ns))
-    state.setTimeoutDuration(_FUNNEL_IDLE_TIMEOUT_MS)
+    state.setTimeoutDuration(_IDLE_TIMEOUT_MS)
     if out_stage:
         yield pd.DataFrame(
             {
@@ -232,6 +242,12 @@ def funnel_track(stream: DataFrame) -> DataFrame:
     Python loop runs inside Arrow-batched per-key groups (rows per
     user per micro-batch — small by construction), the accepted cost
     of an operator Structured Streaming has no built-in for.
+
+    The idle timeout is a processing-time timeout, so Spark runs a
+    no-data batch after every batch: a query over this started with
+    ``trigger(availableNow=True)`` does not stop by itself while
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` is on (the
+    default). Turn it off for such a run.
     """
     return stream.groupBy("user_id").applyInPandasWithState(
         _funnel_fn,

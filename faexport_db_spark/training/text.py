@@ -684,8 +684,8 @@ def build_passage_index(
     narrow column (th), sorted within partitions for row-group
     min/max pruning on probe joins; a parameter sidecar rejects probes
     tiled with a different width. The digests land as one ``batch=``
-    partition (``microbatch.replace_index``), the layout appends and
-    the passage dedup stream add theirs to."""
+    partition (``microbatch.replace_index``), the layout the passage
+    dedup step adds its batches to."""
     from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
@@ -701,20 +701,34 @@ def build_passage_index(
     )
 
 
-def passage_dedup_probe(
+def passage_dedup_against_index(
     batch: DataFrame,
     index_path: str,
     tile_tokens: int = 50,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> tuple[DataFrame, DataFrame]:
-    """Probe-only core of :func:`passage_dedup_against_index`:
-    ``(cleaned_docs, kept_digests)`` with NO index mutation, so
-    callers control the append ordering themselves — the streaming
-    path must write survivors to the store BEFORE indexing their
-    digests (a digest-first crash window would make the retry re-clean
-    every doc to empty against its own digests and silently drop the
-    batch's text; ADVICE r04 high)."""
+    """Incremental duplicated-passage removal: a NEW batch's tiles are
+    cut when their digest already exists in the persisted index (the
+    corpus always wins — it holds the first occurrence) or repeats an
+    earlier tile within the batch (lowest (id, tile_idx) keeps). Only
+    the batch is tiled; candidates come from ONE index scan against
+    the broadcast batch digest set (batch-sized, never corpus-sized),
+    exactly the arriving-batch economics of the incremental MinHash
+    path.
+
+    Read-only: returns ``(cleaned_docs, kept_digests)``.
+    ``kept_digests`` (one ``th`` column) are the index rows of the
+    tiles the batch keeps; their one writer is
+    ``streaming.dedup_stream.passage_dedup_batch_against_store``, which
+    publishes them after the cleaned docs are stored (digests first
+    would make a retry re-clean every doc to empty against its own
+    digests). Call that step without a ``batch_id`` to add a batch
+    directly.
+
+    ``cleaned_docs``: (id, clean_text, n_tiles, n_tiles_removed) per
+    batch doc.
+    """
     from faexport_db_spark.training.indexmeta import check_index_meta
 
     spark = batch.sparkSession
@@ -746,37 +760,6 @@ def passage_dedup_probe(
     )
     kept_ths = flagged.filter(F.col("__kept")).select("th").distinct()
     return _rebuild_docs(flagged, id_col), kept_ths
-
-
-def passage_dedup_against_index(
-    batch: DataFrame,
-    index_path: str,
-    tile_tokens: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    append: bool = True,
-) -> DataFrame:
-    """Incremental duplicated-passage removal: a NEW batch's tiles are
-    cut when their digest already exists in the persisted index (the
-    corpus always wins — it holds the first occurrence) or repeats an
-    earlier tile within the batch (lowest (id, tile_idx) keeps). Only
-    the batch is tiled; candidates come from ONE index scan against
-    the broadcast batch digest set (batch-sized, never corpus-sized),
-    exactly the arriving-batch economics of the incremental MinHash
-    path. With ``append``, surviving tile digests join the index as a
-    new ``batch=`` partition so batch N+1 dedups against batch N.
-
-    Output: (id, clean_text, n_tiles, n_tiles_removed) per batch doc.
-    """
-    out, kept_ths = passage_dedup_probe(
-        batch, index_path, tile_tokens, text_col, id_col
-    )
-    if append:
-        from faexport_db_spark.streaming.microbatch import batch_tag, publish_partition
-
-        out = out.localCheckpoint(eager=True)  # pin before the index mutates
-        publish_partition(kept_ths, index_path, batch_tag(None, None))
-    return out
 
 
 def line_dedup(
@@ -1044,7 +1027,7 @@ def build_line_index(
     line, sorted for row-group pruning; the parameter sidecar rejects
     probes lined/normalized differently. The counts land as one
     ``batch=`` partition (``microbatch.replace_index``), the layout
-    appends and the line dedup stream add theirs to."""
+    the line dedup step adds its batches to."""
     from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
@@ -1071,8 +1054,7 @@ def line_dedup_against_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     normalize: bool = True,
-    append: bool = True,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Incremental line-level boilerplate removal: a NEW batch's line
     is cut when its corpus-so-far count plus its in-batch count
     exceeds ``max_freq`` — the drop-all semantics of
@@ -1084,13 +1066,17 @@ def line_dedup_against_index(
 
     Only the batch is lined; candidate counts come from ONE index
     scan semi-filtered by the broadcast batch digest set
-    (batch-sized, never corpus-sized). With ``append``, the batch's
-    line counts land as a new ``batch=`` partition of additive delta
-    rows (summed on the next probe). The stream step
-    ``line_dedup_batch_against_store`` probes with ``append=False`` and
-    publishes its counts itself, after its store rows.
+    (batch-sized, never corpus-sized).
 
-    Output: (id, clean_text, n_lines, n_lines_removed) per batch doc.
+    Read-only: returns ``(cleaned_docs, batch_counts)``.
+    ``batch_counts`` (``lh``, ``cnt``) are the batch's additive delta
+    rows, summed with the index's on the next probe; their one writer
+    is ``streaming.dedup_stream.line_dedup_batch_against_store``, which
+    publishes them once per batch, after its store rows. Call that step
+    without a ``batch_id`` to add a batch directly.
+
+    ``cleaned_docs``: (id, clean_text, n_lines, n_lines_removed) per
+    batch doc.
     """
     from faexport_db_spark.training.indexmeta import check_index_meta
 
@@ -1104,7 +1090,7 @@ def line_dedup_against_index(
     lines = _lines(batch, line_tokens, text_col, id_col, normalize).localCheckpoint(
         eager=True
     )
-    batch_counts = lines.groupBy("lh").agg(F.count(F.lit(1)).alias("__bcnt"))
+    batch_counts = lines.groupBy("lh").agg(F.count(F.lit(1)).alias("cnt"))
     index = spark.read.parquet(index_path)
     hit_counts = (
         index.join(F.broadcast(batch_counts.select("lh")), "lh", "left_semi")
@@ -1113,27 +1099,17 @@ def line_dedup_against_index(
     )
     totals = batch_counts.join(F.broadcast(hit_counts), "lh", "left").select(
         "lh",
-        "__bcnt",
-        (F.col("__bcnt") + F.coalesce(F.col("__icnt"), F.lit(0))).alias("__total"),
+        (F.col("cnt") + F.coalesce(F.col("__icnt"), F.lit(0))).alias("__total"),
     )
     flagged = lines.join(F.broadcast(totals), "lh").withColumn(
         "__kept", F.col("__total") <= F.lit(max_freq)
     )
-    out = (
+    cleaned = (
         _rebuild_docs(flagged, id_col)
         .withColumnRenamed("n_tiles", "n_lines")
         .withColumnRenamed("n_tiles_removed", "n_lines_removed")
     )
-    if append:
-        from faexport_db_spark.streaming.microbatch import batch_tag, publish_partition
-
-        out = out.localCheckpoint(eager=True)  # pin before the index mutates
-        publish_partition(
-            batch_counts.select("lh", F.col("__bcnt").alias("cnt")),
-            index_path,
-            batch_tag(None, None),
-        )
-    return out
+    return cleaned, batch_counts
 
 
 def duplicate_substring_spans(
@@ -1283,7 +1259,6 @@ def substring_dedup_against_index(
     min_tokens: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    append: bool = False,
 ) -> DataFrame:
     """Incremental substring REMOVAL: cut every batch token covered by
     a gram the corpus index already holds (the corpus' occurrence is
@@ -1292,10 +1267,13 @@ def substring_dedup_against_index(
     doc from its survivors. The removal twin of
     :func:`duplicate_substring_spans_against_index`, completing the
     build/probe/remove symmetry the line and passage granularities
-    already have. With ``append``, the batch's NOVEL grams join the
-    index afterwards (probe-then-append ordering, the passage-probe
-    crash-ordering lesson — callers streaming through a store should
-    append only after the cleaned output is durably written).
+    already have.
+
+    Read-only. The grams to index are those of the SURVIVOR text, so
+    they come after the cut, not from the probe: their one writer is
+    ``streaming.dedup_stream.substring_dedup_batch_against_store``,
+    which stores the cleaned docs and then publishes their novel grams.
+    Call that step without a ``batch_id`` to add a batch directly.
 
     Output: (id, clean_text, n_tokens, n_tokens_removed), one row per
     batch doc with text."""
@@ -1340,11 +1318,7 @@ def substring_dedup_against_index(
         )
         .select(id_col, "pos")
     )
-    out = _remove_cut_positions(allb, cut, k, id_col)
-    if append:
-        out = out.localCheckpoint(eager=True)  # pin before the index mutates
-        append_substring_index(batch, index_path, k, text_col, id_col)
-    return out
+    return _remove_cut_positions(allb, cut, k, id_col)
 
 
 def _remove_cut_positions(
@@ -1484,8 +1458,8 @@ def build_substring_index(
     sorted within partitions for row-group min/max pruning on probe
     joins; a parameter sidecar rejects probes hashed with a different
     gram width. The grams land as one ``batch=`` partition
-    (``microbatch.replace_index``), the layout appends and the
-    substring dedup stream add theirs to."""
+    (``microbatch.replace_index``), the layout the substring dedup
+    step adds its batches to."""
     from faexport_db_spark.streaming.microbatch import replace_index
     from faexport_db_spark.training.indexmeta import write_index_meta
 
@@ -1499,33 +1473,6 @@ def build_substring_index(
     )
     write_index_meta(
         docs.sparkSession, index_path, "substring_grams", {"min_tokens": k, "scheme": "xx128"}
-    )
-
-
-def append_substring_index(
-    batch: DataFrame,
-    index_path: str,
-    min_tokens: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Add a batch's gram fingerprints to the index (probe is
-    deliberately read-only — callers order store/index mutations
-    themselves, the passage-probe crash-ordering lesson). Adds, as a
-    new ``batch=`` partition, only grams NOT already indexed, keeping
-    the index a distinct set."""
-    from faexport_db_spark.streaming.microbatch import batch_tag, publish_partition
-    from faexport_db_spark.training.indexmeta import check_index_meta
-
-    k = int(min_tokens)
-    check_index_meta(
-        batch.sparkSession, index_path, "substring_grams",
-        {"min_tokens": k, "scheme": "xx128"},
-    )
-    publish_partition(
-        _novel_grams(batch, index_path, k, text_col, id_col),
-        index_path,
-        batch_tag(None, None),
     )
 
 

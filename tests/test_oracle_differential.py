@@ -46,6 +46,17 @@ def test_query_core(spark, sf_small, name):
     _check_one(spark, sf_small, name)
 
 
+# the registry callers of the read-only incremental dedup probes; not
+# headline queries, so kept out of _CORE
+_INCREMENTAL = ["t_passage_incremental_checked", "t_line_incremental_checked"]
+assert set(_INCREMENTAL) <= set(QUERIES), sorted(set(_INCREMENTAL) - set(QUERIES))
+
+
+@pytest.mark.parametrize("name", _INCREMENTAL)
+def test_query_incremental_probe(spark, sf_small, name):
+    _check_one(spark, sf_small, name)
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(_CORE)))
 def test_query(spark, sf_small, name):

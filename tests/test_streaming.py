@@ -1055,16 +1055,20 @@ def test_line_dedup_stream_accumulates_and_retries_idempotently(
     assert total == 2  # the shared line, once per batch; nothing counted twice
 
 
-@pytest.mark.slow
 def test_line_dedup_direct_calls_accumulate_counts(spark, tmp_path):
     """Direct (non-streaming, batch_id=None) calls must ACCUMULATE
     count deltas: a fixed partition name would make the second call
     replace the first call's counts and the index under-clean
     (ADVICE r05). Two direct batches sharing a line
-    must drive its total count to 2 so a third batch's repeat is cut."""
+    must drive its total count to 2 so a third batch's repeat is cut,
+    by the read-only probe and by the step alike; a probe lined with
+    another width fails loud."""
+    from pyspark.sql import functions as SF
+
     from faexport_db_spark.streaming.dedup_stream import (
         line_dedup_batch_against_store,
     )
+    from faexport_db_spark.training.text import line_dedup_against_index
 
     store = str(tmp_path / "store")
     index = str(tmp_path / "lidx")
@@ -1079,7 +1083,6 @@ def test_line_dedup_direct_calls_accumulate_counts(spark, tmp_path):
     )
     line_dedup_batch_against_store(b1, store, index, line_tokens=7)
     line_dedup_batch_against_store(b2, store, index, line_tokens=7)
-    from pyspark.sql import functions as SF
 
     idx = spark.read.parquet(index)
     top = (
@@ -1094,8 +1097,40 @@ def test_line_dedup_direct_calls_accumulate_counts(spark, tmp_path):
         [(3, f"{shared} fresh words appear only here now")],
         "doc_id bigint, text string",
     )
+    probed = line_dedup_against_index(b3, index, line_tokens=7)[0].first()
+    assert probed["clean_text"] == "fresh words appear only here now"
+    assert probed["n_lines_removed"] == 1
     out3 = line_dedup_batch_against_store(b3, store, index, line_tokens=7)
     assert out3.collect()[0]["text"] == "fresh words appear only here now"
+    with pytest.raises(ValueError):
+        line_dedup_against_index(b3, index, line_tokens=5)
+
+
+def test_minhash_step_releases_its_signing_pin(spark, tmp_path):
+    """Two direct MinHash step calls leave in block storage only the
+    survivors each returns: the band-row pin each signs its batch into
+    is released once the batch is committed."""
+    from block_storage import gained_rdds, stored_rdds
+
+    from faexport_db_spark.operators.pins import pinned_rdd
+    from faexport_db_spark.streaming.dedup_stream import dedup_batch_against_store
+
+    store, index = str(tmp_path / "store"), str(tmp_path / "index")
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    b1 = spark.createDataFrame(
+        [(1, words), (2, "one two three four five six seven eight nine ten")], _TEXT
+    )
+    b2 = spark.createDataFrame(
+        [(11, "zzz " + words.split(" ", 1)[1]),
+         (12, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do")],
+        _TEXT,
+    )
+    before = stored_rdds(spark)
+    s1 = dedup_batch_against_store(b1, store, index)
+    s2 = dedup_batch_against_store(b2, store, index)
+    assert {r["doc_id"] for r in s2.collect()} == {12}
+    returned = {pinned_rdd(s1).id(), pinned_rdd(s2).id()}
+    assert gained_rdds(spark, before, at_most=2) == returned
 
 
 @pytest.mark.slow

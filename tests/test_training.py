@@ -709,7 +709,11 @@ def test_passage_dedup_cuts_repeats_keeps_first(spark):
 
 def test_passage_incremental_batches_dedup_against_each_other(spark, tmp_path):
     """Batch N+1 must dedup against both the corpus AND batch N's
-    appended survivors, and a parameter-mismatched probe fails loud."""
+    survivors, which the passage step adds to the index, and a
+    parameter-mismatched probe fails loud."""
+    from faexport_db_spark.streaming.dedup_stream import (
+        passage_dedup_batch_against_store,
+    )
     from faexport_db_spark.training.indexmeta import check_index_meta
     from faexport_db_spark.training.text import (
         build_passage_index,
@@ -726,15 +730,19 @@ def test_passage_incremental_batches_dedup_against_each_other(spark, tmp_path):
         [(10, "c1 c2 c3 c4 c5 n1 n2 n3 n4 n5")], "doc_id bigint, text string"
     )
     out1 = {r["doc_id"]: r for r in
-            passage_dedup_against_index(b1, path, tile_tokens=5).collect()}
+            passage_dedup_against_index(b1, path, tile_tokens=5)[0].collect()}
     assert out1[10]["clean_text"] == "n1 n2 n3 n4 n5"
     assert out1[10]["n_tiles_removed"] == 1
-    # batch 2 repeats batch 1's novel tile → cut via the appended index
+    stored = passage_dedup_batch_against_store(
+        b1, str(tmp_path / "store"), path, tile_tokens=5
+    )
+    assert [r["text"] for r in stored.collect()] == ["n1 n2 n3 n4 n5"]
+    # batch 2 repeats batch 1's novel tile → cut via the grown index
     b2 = spark.createDataFrame(
         [(20, "n1 n2 n3 n4 n5 x1 x2 x3 x4 x5")], "doc_id bigint, text string"
     )
     out2 = {r["doc_id"]: r for r in
-            passage_dedup_against_index(b2, path, tile_tokens=5).collect()}
+            passage_dedup_against_index(b2, path, tile_tokens=5)[0].collect()}
     assert out2[20]["clean_text"] == "x1 x2 x3 x4 x5"
     assert out2[20]["n_tiles_removed"] == 1
     # sidecar guards the tiling width
@@ -1408,43 +1416,6 @@ def test_compression_ratio_plan_is_map_only(spark, sf_small):
     assert shuffle_count(df) == 0
 
 
-def test_line_incremental_batches_accumulate_counts(spark, tmp_path):
-    """Batch N+1's lines dedup against corpus counts AND batch N's
-    appended counts; a parameter-mismatched probe fails loud."""
-    import pytest
-
-    from faexport_db_spark.training.text import (
-        build_line_index,
-        line_dedup_against_index,
-    )
-
-    path = str(tmp_path / "lcounts")
-    corpus = spark.createDataFrame(
-        [(1, "corp one two three four")], "doc_id bigint, text string"
-    )
-    build_line_index(corpus, path, line_tokens=5)
-    # batch 1: one corpus-dup line + one novel line
-    b1 = spark.createDataFrame(
-        [(10, "corp one two three four novel alpha beta gamma delta")],
-        "doc_id bigint, text string",
-    )
-    out1 = b1.sparkSession.createDataFrame(
-        line_dedup_against_index(b1, path, line_tokens=5).collect()
-    ).first()
-    assert out1["clean_text"] == "novel alpha beta gamma delta"
-    assert out1["n_lines_removed"] == 1
-    # batch 2 repeats batch 1's surviving line -> count now 2 -> cut
-    b2 = spark.createDataFrame(
-        [(20, "novel alpha beta gamma delta fresh words here again now")],
-        "doc_id bigint, text string",
-    )
-    out2 = line_dedup_against_index(b2, path, line_tokens=5).first()
-    assert out2["clean_text"] == "fresh words here again now"
-    assert out2["n_lines_removed"] == 1
-    with pytest.raises(ValueError):
-        line_dedup_against_index(b2, path, line_tokens=7)
-
-
 # ---- round 6 session ops: chunking / PMI / entropy / buckets / split ----
 
 
@@ -1972,12 +1943,15 @@ def test_media_exact_dup_groups(spark):
 def test_substring_index_incremental_probe_and_append(spark, tmp_path):
     """Incremental third-granularity: a batch doc copying 8+ corpus
     tokens is flagged at its own offset; novel docs pass clean;
-    within-batch repeats are caught without the index; appended
-    batches extend detection; a gram-width mismatch fails loud."""
+    within-batch repeats are caught without the index; batches the
+    substring step adds extend detection; a gram-width mismatch fails
+    loud."""
     import pytest
 
+    from faexport_db_spark.streaming.dedup_stream import (
+        substring_dedup_batch_against_store,
+    )
     from faexport_db_spark.training.text import (
-        append_substring_index,
         build_substring_index,
         duplicate_substring_spans_against_index,
     )
@@ -2010,8 +1984,11 @@ def test_substring_index_incremental_probe_and_append(spark, tmp_path):
     assert (12, 0, 9) in spans and (13, 1, 9) in spans
     assert not any(d == 11 for d, _s, _n in spans)
 
-    # append batch's grams: a LATER batch repeating doc 11's text now hits
-    append_substring_index(batch, idx, min_tokens=8)
+    # the step indexes the batch's stored grams: a LATER batch
+    # repeating doc 11's text now hits
+    substring_dedup_batch_against_store(
+        batch, str(tmp_path / "store"), idx, min_tokens=8
+    )
     later = spark.createDataFrame(
         [(20, "y0 v1 v2 v3 v4 v5 v6 v7 v8 v9")], "doc_id bigint, text string"
     )
@@ -2030,8 +2007,12 @@ def test_substring_index_incremental_probe_and_append(spark, tmp_path):
 def test_substring_removal_against_index(spark, tmp_path):
     """Incremental removal: batch tokens covered by corpus-indexed
     grams are cut (the corpus is the keeper), within-batch repeats
-    keep their batch-first occurrence, novel text passes; with
-    append=True a later batch deduped against the grown index."""
+    keep their batch-first occurrence, novel text passes; once the
+    substring step has added the batch, a later batch dedups against
+    the grown index."""
+    from faexport_db_spark.streaming.dedup_stream import (
+        substring_dedup_batch_against_store,
+    )
     from faexport_db_spark.training.text import (
         build_substring_index,
         substring_dedup_against_index,
@@ -2056,21 +2037,99 @@ def test_substring_removal_against_index(spark, tmp_path):
     )
     out = {
         r["doc_id"]: r
-        for r in substring_dedup_against_index(
-            batch, idx, min_tokens=8, append=True
-        ).collect()
+        for r in substring_dedup_against_index(batch, idx, min_tokens=8).collect()
     }
     assert out[10]["clean_text"] == "u1 u2" and out[10]["n_tokens_removed"] == 8
     assert out[11]["clean_text"] == "fresh text only here"
     assert out[12]["n_tokens_removed"] == 0
     assert out[13]["clean_text"] == "x1" and out[13]["n_tokens_removed"] == 9
 
-    # appended: doc 12's nine is now indexed -> a later repeat is cut
+    # added: doc 12's nine is now indexed -> a later repeat is cut
+    substring_dedup_batch_against_store(
+        batch, str(tmp_path / "store"), idx, min_tokens=8
+    )
     later = spark.createDataFrame(
         [(20, f"z9 {nine}")], "doc_id bigint, text string"
     )
     out2 = substring_dedup_against_index(later, idx, min_tokens=8).collect()[0]
     assert out2["clean_text"] == "z9" and out2["n_tokens_removed"] == 9
+
+
+def _listing(path) -> list[tuple[str, int]]:
+    """(relative name, size) of every file under ``path``, hidden ones
+    included."""
+    import os
+
+    return sorted(
+        (os.path.relpath(os.path.join(root, n), path),
+         os.path.getsize(os.path.join(root, n)))
+        for root, _dirs, names in os.walk(path)
+        for n in names
+    )
+
+
+def test_incremental_dedup_probes_never_write_the_index(spark, tmp_path):
+    """The passage, line, substring and substring-span probes are
+    read-only: a probe (results collected) leaves its index directory's
+    listing, names and sizes, as it found it."""
+    from faexport_db_spark.training import text
+
+    corpus = spark.createDataFrame(
+        [(1, "c1 c2 c3 c4 c5 d1 d2 d3 d4 d5")], "doc_id bigint, text string"
+    )
+    batch = spark.createDataFrame(
+        [(10, "c1 c2 c3 c4 c5 n1 n2 n3 n4 n5"), (11, "z1 z2 z3 z4 z5 z6 z7 z8")],
+        "doc_id bigint, text string",
+    )
+    cases = {
+        "passage": (text.build_passage_index, text.passage_dedup_against_index,
+                    {"tile_tokens": 5}),
+        "line": (text.build_line_index, text.line_dedup_against_index,
+                 {"line_tokens": 5}),
+        "substring": (text.build_substring_index, text.substring_dedup_against_index,
+                      {"min_tokens": 8}),
+        "spans": (text.build_substring_index,
+                  text.duplicate_substring_spans_against_index, {"min_tokens": 8}),
+    }
+    for name, (build, probe, kw) in cases.items():
+        idx = str(tmp_path / name)
+        build(corpus, idx, **kw)
+        before = _listing(idx)
+        out = probe(batch, idx, **kw)
+        for df in out if isinstance(out, tuple) else (out,):
+            df.collect()
+        assert _listing(idx) == before, name
+
+
+def test_substring_step_indexes_only_stored_grams(spark, tmp_path):
+    """The substring step indexes the grams of the text it stores, not
+    of the raw batch: ``u1 a b c d e f g h u2`` stores ``u1 u2``, so its
+    raw gram ``u1 a b c d e f g`` never reaches the index and a later
+    batch holding it comes back uncut."""
+    from faexport_db_spark.streaming.dedup_stream import (
+        substring_dedup_batch_against_store,
+    )
+    from faexport_db_spark.training.text import (
+        build_substring_index,
+        substring_dedup_against_index,
+    )
+
+    idx = str(tmp_path / "gidx")
+    build_substring_index(
+        spark.createDataFrame([(1, "a b c d e f g h c1 c2")], "doc_id bigint, text string"),
+        idx, min_tokens=8,
+    )
+    stored = substring_dedup_batch_against_store(
+        spark.createDataFrame([(10, "u1 a b c d e f g h u2")], "doc_id bigint, text string"),
+        str(tmp_path / "store"), idx, min_tokens=8,
+    )
+    assert [r["text"] for r in stored.collect()] == ["u1 u2"]
+    later = spark.createDataFrame(
+        [(20, "u1 a b c d e f g zz")], "doc_id bigint, text string"
+    )
+    out = substring_dedup_against_index(later, idx, min_tokens=8).collect()[0]
+    assert out["clean_text"] == "u1 a b c d e f g zz"
+    assert out["n_tokens_removed"] == 0
 
 
 def test_bpe_apply_encodes_with_trained_merges(spark):
